@@ -156,36 +156,22 @@ object Bench {
       val e = Tables.embeddings(spark, sfDir)
       val q = e.filter(col("vec_id") < 10)
       val c = e.filter(col("vec_id") >= 10)
-      // one temp dir per build rep (each rep rewrites the cell layout),
-      // all removed in the finally below — bench runs used to litter
-      // target/ with index artifacts (r8 ADVICE)
-      val dirs = scala.collection.mutable.Buffer[java.nio.file.Path]()
-      def dir(): String = {
-        val p = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("target"), "ivfpq_bench_")
-        dirs += p
-        p.toString
+      // one index dir per build rep (each rep rewrites the cell layout),
+      // deleted at shutdown
+      var idx: graft.similarity.IvfPq.IvfPqIndex = null
+      val bts = (1 to 3).map { _ =>
+        val t0 = System.nanoTime()
+        idx = graft.similarity.IvfPq.buildIndex(c, "vec_id", "embedding", nClusters = 8,
+          m = 8, ksub = 16, path = graft.similarity.IndexDirs.create("ivfpq_bench_"))
+        (System.nanoTime() - t0) / 1e9
       }
-      try {
-        var idx: graft.similarity.IvfPq.IvfPqIndex = null
-        val bts = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          idx = graft.similarity.IvfPq.buildIndex(
-            c, "vec_id", "embedding", nClusters = 8, m = 8, ksub = 16, path = dir())
-          (System.nanoTime() - t0) / 1e9
-        }
-        val pts = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          graft.similarity.IvfPq.probeIndex(idx, q, "vec_id", "embedding", k = 5, nProbe = 4)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        (bts.min, pts.min)
-      } finally dirs.foreach { p =>
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
+      val pts = (1 to 3).map { _ =>
+        val t0 = System.nanoTime()
+        graft.similarity.IvfPq.probeIndex(idx, q, "vec_id", "embedding", k = 5, nProbe = 4)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
       }
+      (bts.min, pts.min)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] ivfpq build/probe split failed: ${e.getMessage}")
       (-1.0, -1.0)

@@ -22,10 +22,12 @@ object PlanDump {
     val names = args.drop(3).toSeq
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // this machine's cores unless SPARK_GRAFT_CPUS names a positive count
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
+      .filter(_ > 0).getOrElse(Runtime.getRuntime.availableProcessors())
     val spark = SparkSession.builder()
       .appName("graft-plandump").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -580,7 +580,10 @@ object GraftFunctions {
     * blocks until all functions exist rather than returning early on a
     * session another thread is still mid-way through populating
     * (putIfAbsent-then-register was a TOCTOU window that could surface
-    * as 'undefined function graft_*' analysis failures).
+    * as 'undefined function graft_*' analysis failures). The grouped-
+    * top-k planner strategy is installed under the same lock, so
+    * `experimental.extraStrategies` is never read-then-appended by two
+    * threads at once.
     */
   private val registered =
     java.util.Collections.synchronizedMap(
@@ -591,6 +594,9 @@ object GraftFunctions {
       entries.foreach { case (id, info, builder) =>
         spark.sessionState.functionRegistry.registerFunction(id, info, builder)
       }
+      val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+      if (!exp.extraStrategies.contains(graft.plans.GroupedTopKStrategy))
+        exp.extraStrategies = exp.extraStrategies :+ graft.plans.GroupedTopKStrategy
       java.lang.Boolean.TRUE
     })
     ()

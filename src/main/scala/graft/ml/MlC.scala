@@ -1624,9 +1624,9 @@ object MlC extends Module {
     // Z-mod-p PROTOTYPE subsample (≤ 2000 rows — the standard kNN scale
     // move, bounding the pair join at |test|·2000; at full scale the
     // neighbor stage swaps to the IVF index behind the same contract),
-    // 10-NN with (distance, key) tiebreak, majority vote (tie → label
-    // 0, the emb_knn_classify rule); the positive-vote fraction is the
-    // ranking score AUC uses.
+    // 10-NN by the grouped top-k operator with (distance, key) tiebreak,
+    // majority vote (tie → label 0, the emb_knn_classify rule); the
+    // positive-vote fraction is the ranking score AUC uses.
     val knn = {
       val nf = featCols.length
       val bkt = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) %
@@ -1651,11 +1651,9 @@ object MlC extends Module {
           col("label").as("label"))
         val dist = aggregate(zip_with(col("qv"), col("rv"),
           (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x)
-        val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("rid"))
-        val preds = q.join(broadcast(ref), lit(true))
-          .withColumn("dist", dist)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 10)
+        val preds = graft.plans.GraftOps.groupedTopK(
+            q.join(broadcast(ref), lit(true)).withColumn("dist", dist),
+            Seq("qid"), "dist", "rid", k = 10, ascending = true)
           .groupBy(col("qid"), col("label"))
           .agg((sum(col("rlabel")) / count(lit(1))).as("score"))
           .withColumn("prediction", when(col("score") > 0.5, 1.0).otherwise(0.0))

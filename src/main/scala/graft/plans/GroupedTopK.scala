@@ -1,14 +1,15 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, BindReferences, Cast, Descending, EqualTo, Expression, IntegerLiteral, LessThan, LessThanOrEqual, Literal, RowNumber, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, Descending, EqualTo, Expression, IntegerLiteral, LessThan, LessThanOrEqual, RowNumber, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, UnaryNode, Window}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.expressions.{Window => WindowSpec}
+import org.apache.spark.sql.functions.{col, row_number}
 
 /** Grouped top-k as a first-class operator: custom logical node +
   * optimizer rule + planner strategy + two physical operators — the
@@ -31,7 +32,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * `row_number() over (partition by group order by order) <= k` keeps.
   * Schema unchanged; no rank column (the surviving groups are ≤ k rows,
   * so re-deriving it is cheap — which is exactly what [[TopKPushdown]]
-  * exploits).
+  * and [[GraftOps.rankedTopK]] exploit).
   *
   * Memory contract (stated, not hidden): the map-side pass holds
   * k·(distinct groups in the partition) rows — the same asymptotics as
@@ -176,31 +177,41 @@ case class FinalTopKExec(group: Seq[Expression], order: Seq[SortOrder],
     copy(child = newChild)
 }
 
-/** Public API + strategy registration (also injected by GraftExtensions). */
+/** Public API. The planner strategy is installed by
+  * `GraftFunctions.register` (or injected by GraftExtensions).
+  */
 object GraftOps {
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(GroupedTopKStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ GroupedTopKStrategy
-  }
 
-  /** Each group's top-k rows by `scoreCol` desc, `tieCol` asc — the
-    * grouped-top-k operator above; original schema preserved.
+  /** Each group's first k rows under `scoreCol` desc (asc when
+    * `ascending`), then `tieCol` asc — the rows
+    * `row_number() over (partition by groupCols order by …) <= k` keeps,
+    * NULLs and NaNs placed as that window places them. Both columns are
+    * compared in their own types (a cast would tie BIGINTs above 2^53,
+    * round DECIMALs and null out STRING keys); original schema preserved.
     */
   def groupedTopK(df: DataFrame, groupCols: Seq[String], scoreCol: String,
-      tieCol: String, k: Int): DataFrame = {
+      tieCol: String, k: Int, ascending: Boolean = false): DataFrame = {
     require(k > 0, "k must be positive")
     val spark = df.sparkSession
-    ensureStrategy(spark)
+    graft.functions.GraftFunctions.register(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute = analyzed.output
       .find(_.name == n)
       .getOrElse(throw new IllegalArgumentException(s"no column $n"))
-    val node = GroupedTopK(
-      groupCols.map(attr),
-      Seq(SortOrder(Cast(attr(scoreCol), DoubleType), Descending),
-        SortOrder(Cast(attr(tieCol), LongType), Ascending)),
-      k, analyzed)
-    org.apache.spark.sql.GraftBridge.ofRows(spark, node)
+    val order = Seq(SortOrder(attr(scoreCol), if (ascending) Ascending else Descending),
+      SortOrder(attr(tieCol), Ascending))
+    org.apache.spark.sql.GraftBridge.ofRows(spark,
+      GroupedTopK(groupCols.map(attr), order, k, analyzed))
   }
+
+  /** [[groupedTopK]] plus a BIGINT `rank` column (1 = first in order): a
+    * row_number over the ≤ k survivors. [[FinalTopKExec]] already
+    * clusters on the group, so the rank costs a local sort of those rows
+    * and no second exchange.
+    */
+  def rankedTopK(df: DataFrame, groupCols: Seq[String], scoreCol: String,
+      tieCol: String, k: Int): DataFrame =
+    groupedTopK(df, groupCols, scoreCol, tieCol, k)
+      .withColumn("rank", row_number().over(WindowSpec.partitionBy(groupCols.map(col): _*)
+        .orderBy(col(scoreCol).desc, col(tieCol))).cast("long"))
 }

@@ -1,8 +1,8 @@
 package graft.similarity
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** IVF (inverted-file) ANN, the 100 TB shape:
   *
@@ -18,16 +18,18 @@ import org.apache.spark.sql.functions._
   *   probe  — each query ranks the broadcast centroid table (tiny), the
   *            nProbe chosen cell ids are collected as bounded metadata and
   *            applied as a LITERAL partition filter, and the exact
-  *            integer-grid cosine + top-k window runs over only
+  *            integer-grid cosine + grouped top-k runs over only
   *            ~nProbe/nClusters of the data. PartitionFilters pruning is
   *            asserted in SimilaritySpec.
   */
 object Ivf {
 
-  /** Handle to a built index: the partitioned layout + the (tiny)
-    * centroid table kept as driver metadata.
+  /** Handle to a built index: the partitioned layout, the schema it was
+    * written with (a probe reads it back without a schema-inference
+    * job), and the (tiny) centroid table kept as driver metadata.
     */
-  case class IvfIndex(path: String, centroids: Seq[(Int, Seq[Double])], nClusters: Int)
+  case class IvfIndex(path: String, centroids: Seq[(Int, Seq[Double])], nClusters: Int,
+      schema: StructType)
 
   /** Fit the quantizer on ≤ maxTrainRows sampled rows (seeded driver
     * Lloyd's — the sample is bounded by contract, and the distributed
@@ -46,7 +48,7 @@ object Ivf {
     graft.sources.Sources.writePartitioned(assigned, path, Seq("cluster_id"))
     IvfIndex(path,
       centers.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq,
-      nClusters)
+      nClusters, assigned.schema)
   }
 
   /** (query_id, cluster_id, q_qvec, q_qnorm) for each query's nProbe
@@ -57,7 +59,7 @@ object Ivf {
     val spark = queries.sparkSession
     import spark.implicits._
     val centroids = index.centroids.toDF("cluster_id", "centroid")
-    Similarity.withQuantized(queries, embCol)
+    val near = Similarity.withQuantized(queries, embCol)
       .select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
         col("qvec").as("q_qvec"), col("qnorm").as("q_qnorm"))
       .crossJoin(broadcast(centroids))
@@ -67,9 +69,9 @@ object Ivf {
           dxy * dxy
         }),
         lit(0.0), (acc, v) => acc + v))
-      .withColumn("probe_rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("dist2"), col("cluster_id"))))
-      .filter(col("probe_rank") <= nProbe)
+      .select("query_id", "q_qvec", "q_qnorm", "cluster_id", "dist2")
+    graft.plans.GraftOps.groupedTopK(near, Seq("query_id"), "dist2", "cluster_id",
+        nProbe, ascending = true)
       .select("query_id", "q_qvec", "q_qnorm", "cluster_id")
   }
 
@@ -83,27 +85,23 @@ object Ivf {
     // bounded metadata: |queries| · nProbe cell ids become the literal
     // pruning predicate (a join key would defeat partition pruning)
     val cells = probed.select("cluster_id").distinct().collect().map(_.get(0))
-    val inv = spark.read.parquet(index.path)
+    val inv = spark.read.schema(index.schema).parquet(index.path)
       .filter(col("cluster_id").isin(cells: _*))
     val scored = inv.join(broadcast(probed), "cluster_id")
       .select(col("query_id"), col("corpus_id"),
         Similarity.cosineQ(col("q_qvec"), col("c_qvec"),
           col("q_qnorm"), col("c_qnorm")).as("cosine"))
-    // two-phase rank: probed-cell volume per query never funnels one task
+    // grouped top-k: probed-cell volume per query never funnels one task
     Similarity.topKPerQuery(scored, "cosine", k)
       .select("query_id", "corpus_id", "cosine", "rank")
   }
 
-  /** One-shot build + probe (sim_ivf_topk); the index lands in a temp dir
-    * under target/.
+  /** One-shot build + probe (sim_ivf_topk); the index lands in an
+    * [[IndexDirs]] directory, deleted at shutdown.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       embCol: String, k: Int, nClusters: Int, nProbe: Int): DataFrame = {
-    val base = java.nio.file.Paths.get("target")
-    val dir = (if (java.nio.file.Files.isDirectory(base))
-        java.nio.file.Files.createTempDirectory(base, "ivf_index_")
-      else java.nio.file.Files.createTempDirectory("ivf_index_")).toString
-    val index = buildIndex(corpus, idCol, embCol, nClusters, dir)
+    val index = buildIndex(corpus, idCol, embCol, nClusters, IndexDirs.create("ivf_index_"))
     probeIndex(index, queries, idCol, embCol, k, nProbe)
   }
 }

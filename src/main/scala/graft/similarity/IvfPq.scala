@@ -1,8 +1,8 @@
 package graft.similarity
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** IVF-PQ — the production billion-scale ANN layout, composing the two
   * scale mechanisms this package already verifies separately:
@@ -25,15 +25,13 @@ import org.apache.spark.sql.functions._
   */
 object IvfPq {
 
+  /** A built index: its layout, the schema it was written with (a probe
+    * reads it back without a schema-inference job), and the bounded
+    * driver metadata (centroids, codebooks).
+    */
   case class IvfPqIndex(path: String, centroids: Array[Array[Double]],
-      books: Array[Array[Array[Double]]], m: Int, ksub: Int, dsub: Int)
-
-  private def normalize(v: Array[Double]): Array[Double] = {
-    var n2 = 0.0
-    v.foreach(x => n2 += x * x)
-    val n = math.sqrt(n2)
-    if (n == 0.0) v else v.map(_ / n)
-  }
+      books: Array[Array[Array[Double]]], m: Int, ksub: Int, dsub: Int,
+      schema: StructType)
 
   private def sqDist(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0
@@ -59,27 +57,18 @@ object IvfPq {
     graft.functions.GraftFunctions.register(spark)
     val trainRaw = Similarity.boundedTrainSample(corpus, embCol, maxTrainRows, seed)
     val centroids = Pq.kmeansSub(trainRaw, nClusters, seed)
-    val train = trainRaw.map(normalize)
-    val dim = train(0).length
-    val dsub = dim / m
-    val books = Array.tabulate(m) { j =>
-      Pq.kmeansSub(train.map(_.slice(j * dsub, (j + 1) * dsub)), ksub, seed + j)
-    }
-    val flatBooks: Seq[Double] = books.flatMap(_.flatMap(_.toSeq)).toSeq
+    val books = Pq.trainBooks(trainRaw.map(Pq.normalize), m, ksub, seed)
     val assigned = Similarity.withQuantized(corpus, embCol)
       .withColumn("cluster_id", Similarity.nearestCell(col(embCol), centroids))
-      .withColumn("nvec", transform(col("qvec"),
-        x => x.cast("double") / sqrt(col("qnorm").cast("double"))))
       .select(col(idCol).as("corpus_id"), col("qvec").as("c_qvec"),
-        col("qnorm").as("c_qnorm"),
-        call_function("graft_pq_encode", col("nvec"), typedLit(flatBooks), lit(m)).as("codes"),
-        col("cluster_id"))
+        col("qnorm").as("c_qnorm"), Pq.codes(books).as("codes"), col("cluster_id"))
     graft.sources.Sources.writePartitioned(assigned, path, Seq("cluster_id"))
-    IvfPqIndex(path, centroids, books, m, ksub, dsub)
+    IvfPqIndex(path, centroids, books, m, ksub, trainRaw(0).length / m, assigned.schema)
   }
 
   /** Prune → ADC → exact re-rank. The query set is bounded by contract:
-    * cell choice and ADC tables are driver arithmetic.
+    * it is collected once, and cell choice, ADC tables and the re-rank's
+    * quantized query vectors are all driver arithmetic over those rows.
     */
   def probeIndex(index: IvfPqIndex, queries: DataFrame, idCol: String,
       embCol: String, k: Int, nProbe: Int, candMult: Int = 4): DataFrame = {
@@ -87,96 +76,49 @@ object IvfPq {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
     val qRows = queries.select(col(idCol), col(embCol)).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray.map(_.toDouble)))
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
     // per query: nProbe nearest cells + the ADC table over the codebooks
-    val probes: Seq[(Long, Seq[Int], Seq[Double])] = qRows.toSeq.map { case (qid, emb) =>
+    val probes: Seq[(Long, Seq[Int], Seq[Double])] = qRows.map { case (qid, emb) =>
+      val v = emb.toArray.map(_.toDouble)
       val cells = index.centroids.zipWithIndex
-        .map { case (c, i) => (sqDist(emb, c), i) }.sorted.take(nProbe).map(_._2).toSeq
-      val qn = normalize(emb)
-      val tbl = new Array[Double](index.m * index.ksub)
-      for (j <- 0 until index.m; cc <- 0 until index.ksub) {
-        var s = 0.0
-        var i = 0
-        while (i < index.dsub) { s += qn(j * index.dsub + i) * index.books(j)(cc)(i); i += 1 }
-        tbl(j * index.ksub + cc) = s
-      }
-      (qid, cells, tbl.toSeq)
+        .map { case (c, i) => (sqDist(v, c), i) }.sorted.take(nProbe).map(_._2).toSeq
+      (qid, cells, Pq.adcTable(emb, index.books))
     }
     val allCells = probes.flatMap(_._2).distinct
-    // literal IN-list → directory pruning (a join key would defeat it)
-    val inv = spark.read.parquet(index.path)
+    // literal IN-list → directory pruning (a join key would defeat it);
+    // the index's own schema → no schema-inference job
+    val inv = spark.read.schema(index.schema).parquet(index.path)
       .filter(col("cluster_id").isin(allCells: _*))
     val qProbe = probes
       .flatMap { case (qid, cells, tbl) => cells.map(c => (qid, c, tbl)) }
       .toDF("query_id", "cluster_id", "tbl")
-    // ADC over the pruned cells ranks only narrow (query, id, adc) rows,
-    // two-phase (local per-partition prune → global rank), so per-query
-    // probed-cell volume never funnels one task; the O(queries·k·candMult)
-    // surviving ids are broadcast back onto the pruned index scan for the
-    // exact re-rank (stored qvecs — no re-encode, no corpus shuffle).
+    // ADC over the pruned cells ranks only narrow (query, id, adc) rows
+    // through the grouped top-k (map-side heaps, one exchange), so
+    // per-query probed-cell volume never funnels one task; the
+    // O(queries·k·candMult) surviving ids are broadcast back onto the
+    // pruned index scan for the exact re-rank (stored qvecs — no
+    // re-encode, no corpus shuffle).
     val scored = inv.select("corpus_id", "codes", "cluster_id")
       .join(broadcast(qProbe), "cluster_id")
       .withColumn("adc", call_function("graft_pq_adc", col("codes"), col("tbl")))
       .select(col("query_id"), col("corpus_id"), col("adc"))
-    val candIds = Similarity.topKPerQuery(scored, "adc", k * candMult)
+    val candIds = graft.plans.GraftOps.groupedTopK(scored, Seq("query_id"), "adc",
+        "corpus_id", k * candMult)
       .select("query_id", "corpus_id")
-    val qExact = Similarity.withQuantized(queries, embCol)
-      .select(col(idCol).as("query_id"), col("qvec").as("q_qvec"), col("qnorm").as("q_qnorm"))
-    // bounded input: ≤ k·candMult rows per query reach this rank
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id"))
-    inv.select(col("corpus_id"), col("c_qvec"), col("c_qnorm"))
-      .join(broadcast(candIds), "corpus_id")
-      .join(broadcast(qExact), "query_id")
-      .select(col("query_id"), col("corpus_id"),
-        Similarity.cosineQ(col("q_qvec"), col("c_qvec"),
-          col("q_qnorm"), col("c_qnorm")).as("cosine"))
-      .withColumn("rank", row_number().over(wExact).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "corpus_id", "cosine", "rank")
+    Similarity.exactRerank(
+      inv.select(col("corpus_id"), col("c_qvec"), col("c_qnorm"))
+        .join(broadcast(candIds), "corpus_id"),
+      qRows, k)
   }
 
-  /** One-shot index dirs created by THIS JVM, all deleted by a single
-    * shutdown hook: repeated bench reps/verify runs used to leave one
-    * ivfpq_index_* dir per invocation under target/ forever (r8 ADVICE
-    * class). An earlier fix deleted the PREVIOUS dir at the start of the
-    * NEXT ivfPqTopK call, which (a) charged a file-tree walk + deletes to
-    * the timed query path (part of sim_ivfpq_topk's r14 −10%), and
-    * (b) raced Verify's concurrent query pool — probeIndex returns a
-    * LAZY DataFrame over spark.read.parquet(dir), and two registered
-    * queries (sim_ivfpq_topk, sim_recall_eval) call ivfPqTopK in the
-    * same JVM, so the delete could remove a directory another thread's
-    * pending scan still needed. At shutdown every returned frame has
-    * been consumed or abandoned, so deletion is race-free and costs the
-    * benchmark nothing.
+  /** One-shot build + probe (sim_ivfpq_topk); the index lands in an
+    * [[IndexDirs]] directory, deleted at shutdown.
     */
-  private val oneShotDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val cleanupHooked = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private def trackForShutdownCleanup(dir: String): Unit = {
-    oneShotDirs.add(dir)
-    if (cleanupHooked.compareAndSet(false, true)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        oneShotDirs.forEach(d => rm(new java.io.File(d)))
-      }, "graft-ivfpq-index-cleanup"))
-    }
-  }
-
-  /** One-shot build + probe (sim_ivfpq_topk); index lands under target/. */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       embCol: String, k: Int, nClusters: Int, nProbe: Int,
       m: Int = 8, ksub: Int = 16): DataFrame = {
-    val base = java.nio.file.Paths.get("target")
-    val dir = (if (java.nio.file.Files.isDirectory(base))
-        java.nio.file.Files.createTempDirectory(base, "ivfpq_index_")
-      else java.nio.file.Files.createTempDirectory("ivfpq_index_")).toString
-    trackForShutdownCleanup(dir)
-    val index = buildIndex(corpus, idCol, embCol, nClusters, m, ksub, dir)
+    val index = buildIndex(corpus, idCol, embCol, nClusters, m, ksub,
+      IndexDirs.create("ivfpq_index_"))
     probeIndex(index, queries, idCol, embCol, k, nProbe)
   }
 }

@@ -1,7 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Product quantization (PQ) ANN — the memory-bound 100 TB shape:
@@ -19,17 +18,17 @@ import org.apache.spark.sql.functions._
   *            bounded query set), broadcast; `graft_pq_adc` scores every
   *            corpus row with m table lookups — no float vector is read
   *            at scan time. The ADC top candMult·k candidates per query
-  *            are selected by a lossless two-phase rank (local per-input-
-  *            partition prune, then global — no per-query funnel task)
-  *            over narrow (query, id, adc) rows, then RE-RANKED with the
-  *            exact integer-grid cosine, so the emitted scores are exact
-  *            and deterministic (ADC decides only which candidates are
+  *            are selected by the grouped top-k operator (map-side heaps,
+  *            one exchange — no per-query funnel task) over narrow
+  *            (query, id, adc) rows, then RE-RANKED with the exact
+  *            integer-grid cosine, so the emitted scores are exact and
+  *            deterministic (ADC decides only which candidates are
   *            considered).
   *
   * Everything collected is bounded: the training sample, the codebook,
   * the per-query tables, and the candidate id set. The corpus is scanned
   * (code pass + candidate-fetch pass), never shuffled — only the narrow
-  * ADC score rows move through the candidate-selection exchanges.
+  * ADC score rows move through the candidate-selection exchange.
   */
 object Pq {
 
@@ -75,16 +74,54 @@ object Pq {
     centers
   }
 
-  private def normalize(v: Array[Double]): Array[Double] = {
+  private[similarity] def normalize(v: Array[Double]): Array[Double] = {
     var n2 = 0.0
     v.foreach(x => n2 += x * x)
     val n = math.sqrt(n2)
     if (n == 0.0) v else v.map(_ / n)
   }
 
+  /** m per-subspace codebooks of ksub centroids each, fit on normalized
+    * training rows ([subspace][centroid][dsub]).
+    */
+  private[similarity] def trainBooks(train: Array[Array[Double]], m: Int, ksub: Int,
+      seed: Long): Array[Array[Array[Double]]] = {
+    val dsub = train(0).length / m
+    Array.tabulate(m)(j => kmeansSub(train.map(_.slice(j * dsub, (j + 1) * dsub)), ksub, seed + j))
+  }
+
+  /** The m codes of a [[Similarity.withQuantized]] row: its normalized
+    * qvec encoded against `books` by the codegen `graft_pq_encode`.
+    */
+  private[similarity] def codes(books: Array[Array[Array[Double]]]): Column = {
+    val flat: Seq[Double] = books.flatMap(_.flatMap(_.toSeq)).toSeq
+    call_function("graft_pq_encode",
+      transform(col("qvec"), x => x.cast("double") / sqrt(col("qnorm").cast("double"))),
+      typedLit(flat), lit(books.length))
+  }
+
+  /** A query's ADC table, laid out [subspace][centroid] as `graft_pq_adc`
+    * reads it: each normalized query subvector dotted with every
+    * centroid of its subspace's codebook.
+    */
+  private[similarity] def adcTable(emb: Seq[Float],
+      books: Array[Array[Array[Double]]]): Seq[Double] = {
+    val qn = normalize(emb.toArray.map(_.toDouble))
+    val dsub = books(0)(0).length
+    books.indices.flatMap { j =>
+      books(j).toSeq.map { ctr =>
+        var s = 0.0
+        var i = 0
+        while (i < dsub) { s += qn(j * dsub + i) * ctr(i); i += 1 }
+        s
+      }
+    }
+  }
+
   /** PQ top-k with exact re-rank. The query set is small by contract
-    * (same broadcast assumption as brute/LSH/IVF) — its embeddings and
-    * ADC tables are driver-built bounded metadata.
+    * (same broadcast assumption as brute/LSH/IVF): it is collected once,
+    * and its ADC tables and the re-rank's quantized query vectors are
+    * driver-built bounded metadata.
     */
   def pqTopK(queries: DataFrame, corpus: DataFrame, idCol: String, embCol: String,
       k: Int, m: Int = 8, ksub: Int = 16, candMult: Int = 4, seed: Long = 42L,
@@ -94,67 +131,38 @@ object Pq {
     graft.functions.GraftFunctions.register(spark)
 
     // build: bounded seeded sample → per-subspace codebooks (driver)
-    val train = Similarity.boundedTrainSample(corpus, embCol, maxTrainRows, seed)
-      .map(normalize)
-    val dim = train(0).length
-    val dsub = dim / m
-    val books: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-      kmeansSub(train.map(_.slice(j * dsub, (j + 1) * dsub)), ksub, seed + j)
-    }
-    val flatBooks: Seq[Double] =
-      books.flatMap(_.flatMap(_.toSeq)).toSeq // [subspace][centroid][dim]
+    val books = trainBooks(
+      Similarity.boundedTrainSample(corpus, embCol, maxTrainRows, seed).map(normalize),
+      m, ksub, seed)
 
     // encode: normalized corpus vectors → m codes each (codegen). Only
     // (id, codes) leaves this stage — no float/quantized payload rides
     // the candidate-selection shuffle
     val c = Similarity.withQuantized(corpus, embCol)
-      .withColumn("nvec", transform(col("qvec"),
-        x => x.cast("double") / sqrt(col("qnorm").cast("double"))))
-      .select(col(idCol).as("corpus_id"),
-        call_function("graft_pq_encode", col("nvec"), typedLit(flatBooks), lit(m)).as("codes"))
+      .select(col(idCol).as("corpus_id"), codes(books).as("codes"))
 
-    // probe: per-query ADC tables (driver arithmetic over the bounded set)
+    // probe: per-query ADC tables over the collected query rows
     val qRows = queries.select(col(idCol), col(embCol)).collect()
-      .map(r => (r.getLong(0), normalize(r.getSeq[Float](1).toArray.map(_.toDouble))))
-    val qTables = qRows.toSeq.map { case (qid, qn) =>
-      val tbl = new Array[Double](m * ksub)
-      for (j <- 0 until m; cc <- 0 until ksub) {
-        var s = 0.0
-        var i = 0
-        while (i < dsub) { s += qn(j * dsub + i) * books(j)(cc)(i); i += 1 }
-        tbl(j * ksub + cc) = s
-      }
-      (qid, tbl.toSeq)
-    }.toDF("query_id", "tbl")
-    val qExact = Similarity.withQuantized(queries, embCol)
-      .select(col(idCol).as("query_id"), col("qvec").as("q_qvec"), col("qnorm").as("q_qnorm"))
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+    val qTables = qRows.map { case (qid, emb) => (qid, adcTable(emb, books)) }
+      .toDF("query_id", "tbl")
 
-    // ADC scan → two-phase candidate prune → exact re-rank. Candidate
-    // selection ranks only the narrow (query_id, corpus_id, adc) rows and
-    // prunes locally per (query, partition) before the per-query rank, so
-    // no task sorts a full per-query candidate set (the st_topk trick;
-    // [[Similarity.topKPerQuery]]). The surviving O(queries·k·candMult)
-    // ids are broadcast back onto a candidate-fetch scan for the exact
-    // integer-grid re-rank — the corpus is scanned (codes pass + fetch
-    // pass), never shuffled.
+    // ADC scan → grouped top-k candidate selection → exact re-rank.
+    // Candidate selection moves only the narrow (query_id, corpus_id,
+    // adc) rows, pruned by map-side heaps before the one exchange, so no
+    // task sorts a full per-query candidate set. The surviving
+    // O(queries·k·candMult) ids are broadcast back onto a candidate-fetch
+    // scan for the exact integer-grid re-rank — the corpus is scanned
+    // (codes pass + fetch pass), never shuffled.
     val scored = c.crossJoin(broadcast(qTables))
       .withColumn("adc", call_function("graft_pq_adc", col("codes"), col("tbl")))
       .select(col("query_id"), col("corpus_id"), col("adc"))
-    val candIds = Similarity.topKPerQuery(scored, "adc", k * candMult)
+    val candIds = graft.plans.GraftOps.groupedTopK(scored, Seq("query_id"), "adc",
+        "corpus_id", k * candMult)
       .select("query_id", "corpus_id")
     val cRerank = Similarity.withQuantized(corpus, embCol)
       .select(col(idCol).as("corpus_id"), col("qvec").as("c_qvec"),
         col("qnorm").as("c_qnorm"))
-    // bounded input: ≤ k·candMult rows per query reach this rank
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id"))
-    cRerank.join(broadcast(candIds), "corpus_id")
-      .join(broadcast(qExact), "query_id")
-      .select(col("query_id"), col("corpus_id"),
-        Similarity.cosineQ(col("q_qvec"), col("c_qvec"),
-          col("q_qnorm"), col("c_qnorm")).as("cosine"))
-      .withColumn("rank", row_number().over(wExact).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "corpus_id", "cosine", "rank")
+    Similarity.exactRerank(cRerank.join(broadcast(candIds), "corpus_id"), qRows, k)
   }
 }

@@ -20,7 +20,6 @@ object SimE extends Module {
     (s, d) => {
       val (q, c) = split(s, d)
       Similarity.bruteTopK(q, c, "vec_id", "embedding", k = 5)
-        .orderBy("query_id", "rank")
     },
     Some("""WITH q AS (
       |  SELECT vec_id,
@@ -41,7 +40,7 @@ object SimE extends Module {
       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, corpus_id) AS rank
       |  FROM scored)
       |SELECT query_id, corpus_id, cosine, rank FROM ranked
-      |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)
+      |WHERE rank <= 5""".stripMargin)
   )
 
   // sim_lsh_topk — sign-LSH bucketed ANN with hamming≤1 multiprobe.
@@ -59,7 +58,6 @@ object SimE extends Module {
     (s, d) => {
       val (q, c) = split(s, d)
       Similarity.lshTopK(q, c, "vec_id", "embedding", k = 5)
-        .orderBy("query_id", "rank")
     },
     Some {
       val nBits = 6
@@ -102,7 +100,7 @@ object SimE extends Module {
          |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, corpus_id) AS rank
          |  FROM scored)
          |SELECT query_id, corpus_id, cosine, rank FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+         |WHERE rank <= 5""".stripMargin
     }
   )
 
@@ -114,7 +112,6 @@ object SimE extends Module {
     (s, d) => {
       val (q, c) = split(s, d)
       Ivf.ivfTopK(q, c, "vec_id", "embedding", k = 5, nClusters = 16, nProbe = 3)
-        .orderBy("query_id", "rank")
     },
     None
   )
@@ -128,7 +125,6 @@ object SimE extends Module {
     (s, d) => {
       val (q, c) = split(s, d)
       Pq.pqTopK(q, c, "vec_id", "embedding", k = 5)
-        .orderBy("query_id", "rank")
     },
     None
   )
@@ -141,7 +137,6 @@ object SimE extends Module {
     (s, d) => {
       val (q, c) = split(s, d)
       IvfPq.ivfPqTopK(q, c, "vec_id", "embedding", k = 5, nClusters = 8, nProbe = 4)
-        .orderBy("query_id", "rank")
     },
     None
   )
@@ -515,11 +510,8 @@ object SimE extends Module {
         .select(col("query_id"), col("corpus_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
         .map { case (k2, v) => k2 -> v.map(_._2).toSet }
-      val base = java.nio.file.Paths.get("target")
-      val dir = (if (java.nio.file.Files.isDirectory(base))
-          java.nio.file.Files.createTempDirectory(base, "ivf_sweep_")
-        else java.nio.file.Files.createTempDirectory("ivf_sweep_")).toString
-      val index = Ivf.buildIndex(c, "vec_id", "embedding", nClusters = 16, dir)
+      val index = Ivf.buildIndex(c, "vec_id", "embedding", nClusters = 16,
+        IndexDirs.create("ivf_sweep_"))
       val rows = Seq(1, 2, 4, 8, 16).map { np =>
         val got = Ivf.probeIndex(index, q, "vec_id", "embedding", k = 5, nProbe = np)
           .select(col("query_id"), col("corpus_id")).collect()

@@ -1,7 +1,6 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Approximate / exact nearest-neighbor search over embedding columns
@@ -91,30 +90,41 @@ object Similarity {
     assign(emb)
   }
 
-  /** Lossless two-phase per-query top-k over a (query_id, corpus_id,
-    * `orderCol`) surface: a LOCAL top-k per (query, input partition)
-    * prunes candidates to ≤ k·partitions rows per query BEFORE the
-    * global per-query rank — so per-query candidate volume (up to the
-    * whole corpus for brute force) never sorts through one task (the
-    * st_topk/q32 two-phase trick). Pruning is lossless because a row in
-    * a query's global top k has rank ≤ k inside whichever partition
-    * holds it. Both rank shuffles move only the narrow key+score rows;
-    * callers must not attach vector payloads to `scored`.
+  /** Per-query top-k over a (query_id, corpus_id, `orderCol`) surface,
+    * `orderCol` desc then corpus_id, with a BIGINT `rank`: the grouped
+    * top-k operator ([[graft.plans.GraftOps.rankedTopK]]). Map-side heaps
+    * keep ≤ k rows per (query, input partition), one exchange on
+    * query_id moves only those, and the final heaps plus the rank run in
+    * that exchange's partitions — so per-query candidate volume (up to
+    * the whole corpus for brute force) never sorts through one task.
+    * The exchange moves the narrow key+score rows; callers must not
+    * attach vector payloads to `scored`.
     */
-  def topKPerQuery(scored: DataFrame, orderCol: String, k: Int): DataFrame = {
-    val localW = Window.partitionBy(col("query_id"), spark_partition_id())
-      .orderBy(col(orderCol).desc, col("corpus_id"))
-    val globalW = Window.partitionBy(col("query_id"))
-      .orderBy(col(orderCol).desc, col("corpus_id"))
-    scored
-      .withColumn("_lr", row_number().over(localW))
-      .filter(col("_lr") <= k).drop("_lr")
-      .withColumn("rank", row_number().over(globalW).cast("long"))
-      .filter(col("rank") <= k)
+  def topKPerQuery(scored: DataFrame, orderCol: String, k: Int): DataFrame =
+    graft.plans.GraftOps.rankedTopK(scored, Seq("query_id"), orderCol, "corpus_id", k)
+
+  /** Exact integer-grid re-rank of candidate (query_id, corpus_id,
+    * c_qvec, c_qnorm) rows against the bounded query rows a probe has
+    * already collected: the top k per query by exact cosine, with rank.
+    * The query side is literal maps query_id → quantized vector and
+    * → |qvec|², built with the IEEE steps of [[quantized]] (`Exact.qzl`:
+    * x·1e6 + 0.5, floored) so the cosines are bit-identical to the
+    * column-side ones — no second scan and no broadcast job for queries.
+    */
+  def exactRerank(cands: DataFrame, queries: Seq[(Long, Seq[Float])], k: Int): DataFrame = {
+    val qv = queries.map { case (id, emb) =>
+      id -> emb.map(x => math.floor(x.toDouble * 1000000.0 + 0.5).toLong)
+    }
+    val qn = qv.map { case (id, v) => id -> v.foldLeft(0L)((s, x) => s + x * x) }
+    val scored = cands.select(col("query_id"), col("corpus_id"),
+      cosineQ(element_at(typedLit(qv.toMap), col("query_id")), col("c_qvec"),
+        element_at(typedLit(qn.toMap), col("query_id")), col("c_qnorm")).as("cosine"))
+    topKPerQuery(scored, "cosine", k)
+      .select("query_id", "corpus_id", "cosine", "rank")
   }
 
   /** Brute-force cosine top-k: broadcast the (small) query set across one
-    * corpus scan; the per-query rank is the two-phase prune above, so no
+    * corpus scan; the per-query rank is the grouped top-k above, so no
     * task ever sorts a full per-query candidate set.
     */
   def bruteTopK(queries: DataFrame, corpus: DataFrame, idCol: String,

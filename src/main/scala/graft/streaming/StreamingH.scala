@@ -162,31 +162,21 @@ object StreamingH extends Module {
 
   // st_topk — per-window heavy hitters (top-3 users by event count per 1h
   // window): the windowed frequency leaderboard every ingest pipeline
-  // tracks. Scale shape: one (window, user) count aggregate, then a LOCAL
-  // top-k per (window, shuffle partition) prunes candidates to ≤
-  // k·partitions rows per window BEFORE the global per-window rank — the
-  // final rank never sorts more than that, so per-window user cardinality
-  // can't funnel one task (the q32/ap_topk two-phase trick; pruning is
-  // lossless because a global top-k row is ≤ rank k inside whatever
-  // partition holds it). Streaming twin: the same watermarked
-  // (window, user) count aggregate runs incrementally with bounded state;
-  // rank is a per-closed-window post-pass (StreamingSpec asserts equality
-  // with this batch twin).
+  // tracks. Scale shape: one (window, user) count aggregate, then the
+  // grouped top-k operator (graft.plans.GraftOps.rankedTopK): map-side
+  // heaps keep ≤ k users per (window, partition), one exchange on
+  // window_start moves only those, and the final heaps plus the rank run
+  // in its partitions — so per-window user cardinality can't funnel one
+  // task. Streaming twin: the same watermarked (window, user) count
+  // aggregate runs incrementally with bounded state; rank is a
+  // per-closed-window post-pass (StreamingSpec asserts equality with
+  // this batch twin).
   private val stTopk = Q(
     "st_topk",
-    (s, d) => {
-      val counts = Streaming.userWindowCounts(Tables.events(s, d))
-      val localW = Window.partitionBy(col("window_start"), spark_partition_id())
-        .orderBy(col("n_events").desc, col("user_id"))
-      val globalW = Window.partitionBy(col("window_start"))
-        .orderBy(col("n_events").desc, col("user_id"))
-      counts
-        .withColumn("lr", row_number().over(localW))
-        .filter(col("lr") <= 3)
-        .withColumn("rank", row_number().over(globalW).cast("long"))
-        .filter(col("rank") <= 3)
-        .select(col("window_start"), col("rank"), col("user_id"), col("n_events"))
-    },
+    (s, d) =>
+      graft.plans.GraftOps.rankedTopK(Streaming.userWindowCounts(Tables.events(s, d)),
+          Seq("window_start"), "n_events", "user_id", k = 3)
+        .select(col("window_start"), col("rank"), col("user_id"), col("n_events")),
     Some("""WITH c AS (
       |  SELECT date_trunc('hour', ts) AS window_start, user_id, COUNT(*) AS n_events
       |  FROM events GROUP BY 1, 2),

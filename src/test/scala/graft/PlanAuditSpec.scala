@@ -133,21 +133,39 @@ class PlanAuditSpec extends SparkSpec {
     assert(cube.contains("Expand"), cube)
   }
 
-  test("st_topk prunes candidates before the per-window rank") {
-    val p = plan("st_topk")
+  /** The grouped top-k shape: a PartialTopK sits below the only
+    * exchange hash-partitioned on exactly `key` (map-side heaps prune
+    * before it), exactly one Window remains (the rank over the ≤ k
+    * survivors, in that exchange's partitions), and nothing funnels
+    * through a single partition.
+    */
+  private def assertGroupedTopK(p: String, key: String): Unit = {
+    val lines = p.linesIterator.toVector
+    def depth(l: String): Int = l.indexWhere(ch => ch.isLetter)
+    val keyed = lines.indices.filter(i =>
+      s"Exchange hashpartitioning\\($key#\\d+L?, \\d+\\)".r.findFirstIn(lines(i)).isDefined)
+    assert(keyed.size === 1, s"expected one exchange on $key alone:\n$p")
+    val ex = keyed.head
+    val subtreeEnd = lines.indexWhere(l => depth(l) <= depth(lines(ex)), ex + 1) match {
+      case -1 => lines.size
+      case i => i
+    }
+    assert((ex + 1 until subtreeEnd).exists(i => lines(i).contains("PartialTopK")),
+      s"no PartialTopK below the $key exchange:\n$p")
+    assert(lines.count(l => "(^|- )Window \\[".r.findFirstIn(l).isDefined) === 1, p)
     assert(!p.contains("Exchange SinglePartition"), p)
-    // two rank windows: the local (window, partition-id) prune, then the
-    // global per-window rank over <= k*partitions survivors
-    assert("Window".r.findAllIn(p).length >= 2, p)
+  }
+
+  test("st_topk prunes candidates before the per-window rank") {
+    assertGroupedTopK(plan("st_topk"), "window_start")
   }
 
   test("sim top-k ranks are two-phase: local prune before the per-query rank") {
-    // brute force: the per-query rank must be preceded by a local
-    // (query, partition-id) prune — corpus volume per query never sorts
-    // through one task
-    val p = plan("sim_brute_topk")
-    assert(!p.contains("Exchange SinglePartition"), p)
-    assert("Window".r.findAllIn(p).length >= 2, p)
+    // brute force and LSH: map-side heaps prune each query's candidates
+    // before the one query_id exchange — corpus volume per query never
+    // sorts through one task
+    assertGroupedTopK(plan("sim_brute_topk"), "query_id")
+    assertGroupedTopK(plan("sim_lsh_topk"), "query_id")
     // pq: candidate selection shuffles only narrow (query, id, adc) rows —
     // no vector payload (qvec/codes/tbl) rides a rank exchange
     val pq = plan("sim_pq_topk")

@@ -41,6 +41,63 @@ class PlansSpec extends SparkSpec {
     assert(kept === Set(13L, 10L), s"expected {13 (7.0), 10 (first tie at 5.0)}, got $kept")
   }
 
+  /** The reference: `row_number() over (partition by g order by score
+    * [desc|asc], tie) <= k`, rank column dropped.
+    */
+  private def windowRef(df: org.apache.spark.sql.DataFrame, score: String, tie: String,
+      k: Int, ascending: Boolean = false) = {
+    val o = if (ascending) col(score).asc else col(score).desc
+    df.withColumn("rn", row_number().over(Window.partitionBy(col("g")).orderBy(o, col(tie))))
+      .filter(col("rn") <= k).drop("rn")
+  }
+
+  private def assertMatchesWindow(df: org.apache.spark.sql.DataFrame, score: String,
+      tie: String, k: Int, ascending: Boolean = false): Unit = {
+    val fast = GraftOps.groupedTopK(df, Seq("g"), score, tie, k, ascending)
+      .collect().map(_.toSeq).toSet
+    val slow = windowRef(df, score, tie, k, ascending).collect().map(_.toSeq).toSet
+    assert(fast === slow, s"k=$k ascending=$ascending")
+  }
+
+  test("groupedTopK orders BIGINT scores above 2^53 exactly") {
+    import spark.implicits._
+    // 2^53 and 2^53 + 1 are one double apart only in exact integers: a
+    // DOUBLE cast ties them and would keep the smaller tie key (id 1)
+    val big = 1L << 53
+    val df = Seq((1L, 1L, big), (1L, 2L, big + 1), (2L, 3L, Long.MaxValue - 1),
+      (2L, 4L, Long.MaxValue)).toDF("g", "id", "v").repartition(2)
+    assertMatchesWindow(df, "v", "id", 1)
+    assert(GraftOps.groupedTopK(df, Seq("g"), "v", "id", 1)
+      .collect().map(_.getLong(1)).toSet === Set(2L, 4L))
+  }
+
+  test("groupedTopK orders DECIMAL scores on their own digits") {
+    import spark.implicits._
+    // the two scores differ past a double's 17 significant digits
+    val df = Seq((1L, 1L, "1.000000000000000000"), (1L, 2L, "1.000000000000000001"),
+      (1L, 3L, "0.999999999999999999"))
+      .toDF("g", "id", "s").select(col("g"), col("id"), col("s").cast("decimal(38,18)").as("v"))
+    for (k <- Seq(1, 2)) assertMatchesWindow(df, "v", "id", k)
+    assert(GraftOps.groupedTopK(df, Seq("g"), "v", "id", 1)
+      .collect().map(_.getLong(1)).toSeq === Seq(2L))
+  }
+
+  test("groupedTopK breaks ties on a STRING key in string order") {
+    import spark.implicits._
+    val df = Seq((1L, "pear", 5.0), (1L, "apple", 5.0), (1L, "fig", 5.0), (2L, "b", 1.0),
+      (2L, "a", 1.0)).toDF("g", "name", "v").repartition(3)
+    for (k <- Seq(1, 2)) assertMatchesWindow(df, "v", "name", k)
+    assert(GraftOps.groupedTopK(df, Seq("g"), "v", "name", 1)
+      .collect().map(_.getString(1)).toSet === Set("apple", "a"))
+  }
+
+  test("groupedTopK keeps the smallest scores when ascending") {
+    import spark.implicits._
+    val df = (0L until 200L).map(i => (i % 3, i, ((i * 37) % 11).toDouble))
+      .toDF("g", "id", "v").repartition(4)
+    for (k <- Seq(1, 3, 500)) assertMatchesWindow(df, "v", "id", k, ascending = true)
+  }
+
   test("the plan is the partial/final pair with the exchange between them") {
     val df = GraftOps.groupedTopK(
       Tables.orders(spark, sf).select("o_custkey", "o_orderkey", "o_totalprice"),

@@ -1,6 +1,8 @@
 package graft
 
-import graft.similarity.{Ivf, IvfPq, Pq, Similarity}
+import graft.similarity.{IndexDirs, Ivf, IvfPq, Pq, Similarity}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -244,5 +246,64 @@ class SimilaritySpec extends SparkSpec {
     assert(recalls.sameElements(recalls.sorted), s"non-monotone: ${recalls.toSeq}")
     // nprobe = nClusters probes every cell: exhaustive = brute = 1.0
     assert(recalls.last === 1.0)
+  }
+
+  /** The per-query top-k as it was before the grouped top-k operator:
+    * a local row_number per (query, input partition) prunes to k rows,
+    * then a global per-query row_number ranks the survivors.
+    */
+  private def twoWindowTopK(scored: DataFrame, orderCol: String, k: Int): DataFrame = {
+    val localW = Window.partitionBy(col("query_id"), spark_partition_id())
+      .orderBy(col(orderCol).desc, col("corpus_id"))
+    val globalW = Window.partitionBy(col("query_id"))
+      .orderBy(col(orderCol).desc, col("corpus_id"))
+    scored
+      .withColumn("_lr", row_number().over(localW))
+      .filter(col("_lr") <= k).drop("_lr")
+      .withColumn("rank", row_number().over(globalW).cast("long"))
+      .filter(col("rank") <= k)
+  }
+
+  test("topKPerQuery equals the two-window form across k, partitions and AQE") {
+    // 7 queries of ~86 candidates over 6 input partitions; scores have
+    // heavy ties (10 distinct values) plus NaN and NULL rows
+    val scored = spark.range(0L, 600L, 1L, 6).select(
+      (col("id") % 7).as("query_id"), col("id").as("corpus_id"),
+      when(col("id") % 13 === 0, lit(Double.NaN))
+        .when(col("id") % 17 === 0, lit(null).cast("double"))
+        .otherwise(((col("id") * 31) % 10).cast("double")).as("score"))
+    def rows(df: DataFrame): Set[(Long, Long, String, Long)] =
+      df.select("query_id", "corpus_id", "score", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), String.valueOf(r.get(2)), r.getLong(3))).toSet
+    val conf = spark.conf
+    val saved = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+      .map(key => key -> conf.getOption(key))
+    try {
+      for (aqe <- Seq("true", "false"); parts <- Seq(1, 3, 8)) {
+        conf.set("spark.sql.adaptive.enabled", aqe)
+        conf.set("spark.sql.shuffle.partitions", parts.toString)
+        for (k <- Seq(1, 5, 1000)) {
+          val got = rows(Similarity.topKPerQuery(scored, "score", k))
+          assert(got === rows(twoWindowTopK(scored, "score", k)),
+            s"k=$k partitions=$parts aqe=$aqe")
+          assert(got.size === (if (k == 1000) 600 else 7 * k))
+        }
+      }
+    } finally saved.foreach {
+      case (key, Some(v)) => conf.set(key, v)
+      case (key, None) => conf.unset(key)
+    }
+  }
+
+  test("one-shot index dirs from every site are tracked for shutdown deletion") {
+    val before = IndexDirs.tracked
+    Ivf.ivfTopK(queries, corpus, "vec_id", "embedding", k = 5, nClusters = 4, nProbe = 2)
+    IvfPq.ivfPqTopK(queries, corpus, "vec_id", "embedding", k = 5, nClusters = 4, nProbe = 2)
+    SparkEntry.queries("sim_ivf_sweep")(spark, sf)
+    val added = IndexDirs.tracked -- before
+    for (prefix <- Seq("ivf_index_", "ivfpq_index_", "ivf_sweep_"))
+      assert(added.exists(d => new java.io.File(d).getName.startsWith(prefix)),
+        s"no tracked $prefix dir among $added")
+    assert(added.forall(d => new java.io.File(d).isDirectory), added)
   }
 }
