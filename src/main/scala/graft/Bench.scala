@@ -40,10 +40,10 @@ object Bench {
         Bench.headline.filter(want)
       case None    => Bench.headline
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = cores(sys.env.get("SPARK_GRAFT_CPUS"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "24g"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -177,9 +177,13 @@ object Bench {
       (-1.0, -1.0)
     }
     println(render(results, counts, sfDir, done, math.min(reps, done), worstRatio(),
-      calibrate(), total001, buildSec, probeSec, DataFp.of(sfDir), cpus.toInt))
+      calibrate(), total001, buildSec, probeSec, DataFp.of(sfDir), cpus))
     spark.stop()
   }
+
+  /** Cores for `local[n]`: `raw` (SPARK_GRAFT_CPUS) if a positive integer, else the machine's. */
+  def cores(raw: Option[String]): Int =
+    raw.flatMap(_.trim.toIntOption).filter(_ > 0).getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** Fixed single-thread CPU marker (~0.07 s on this box when quiet):
     * certification (windowed median ≈ min) catches INTRA-run spikes but

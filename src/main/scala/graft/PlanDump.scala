@@ -22,9 +22,7 @@ object PlanDump {
     val names = args.drop(3).toSeq
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    // this machine's cores unless SPARK_GRAFT_CPUS names a positive count
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
-      .filter(_ > 0).getOrElse(Runtime.getRuntime.availableProcessors())
+    val cpus = Bench.cores(sys.env.get("SPARK_GRAFT_CPUS"))
     val spark = SparkSession.builder()
       .appName("graft-plandump").master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toLong)

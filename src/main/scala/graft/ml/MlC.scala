@@ -6,7 +6,6 @@ import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.{GBTClassifier, LogisticRegression}
 
 import org.apache.spark.ml.feature.{IndexToString, StandardScaler, StringIndexer, VectorAssembler}
-import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -48,7 +47,29 @@ object MlC extends Module {
   private def assembler = new VectorAssembler()
     .setInputCols(featCols).setOutputCol("features")
 
-  /** Map `xs` through `f` on a bounded driver thread pool (the
+  /** `features` as an array of the exact doubles the assembler packed. */
+  private val featArr = org.apache.spark.ml.functions.vector_to_array(col("features"))
+
+  /** `df` plus every [[featCols]] column unpacked from `features`. */
+  private def unpacked(df: DataFrame): DataFrame =
+    df.select(col("*") +: featCols.indices.map(i => featArr.getItem(i).as(featCols(i))): _*)
+
+  /** The frame every MLlib fit and scoring path reads: the assembled
+    * [[customerFeatures]] narrowed to (c_custkey, label, features) and
+    * materialized once. MLlib reads its input through `Dataset.rdd`, and
+    * under AQE each `.rdd` of a lazy plan runs the plan's shuffle stages
+    * on the spot: a LogisticRegression fit calls it for the training
+    * instances and for the summary's multiclass and binary metrics, so
+    * fit plus scoring ran the join + aggregate four times. Filters over
+    * the checkpoint see the partitions and row order the lazy plan
+    * produced, so every fit is bit-identical to the lazy-plan fit.
+    */
+  private[graft] def fitFrame(s: SparkSession, d: String): DataFrame =
+    assembler.transform(customerFeatures(s, d))
+      .select(col("c_custkey"), col("label"), col("features"))
+      .graftCheckpoint()
+
+  /** Map `xs` through `f` on a one-thread-per-core driver pool (the
     * CrossValidator `parallelism` discipline): the ML operators'
     * wall time is dominated by driver-synchronized MLlib job
     * round-trips, and independent seeded fits/scoring passes can
@@ -57,10 +78,10 @@ object MlC extends Module {
     * form on any cluster shape. Only use for element computations
     * that are independent (no cross-element mutable state).
     */
-  private def inPool[A, B](xs: Seq[A], threads: Int = 6)(f: A => B): Seq[B] = {
+  private def inPool[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors())
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       val fs = xs.map(x => Future(f(x)))
@@ -153,10 +174,12 @@ object MlC extends Module {
   /** Held-out predictions of the flagship logistic model — shared by
     * ml_logreg (the dump) and ml_report (the metric surface).
     */
-  def logregPredictions(s: SparkSession, d: String): DataFrame = {
-    val (train, test) = split(customerFeatures(s, d))
-    val lr = new LogisticRegression().setMaxIter(20).setRegParam(0.01)
-    val model = new Pipeline().setStages(Array(assembler, lr)).fit(train)
+  def logregPredictions(s: SparkSession, d: String): DataFrame =
+    logregOn(fitFrame(s, d))
+
+  private def logregOn(frame: DataFrame): DataFrame = {
+    val (train, test) = split(frame)
+    val model = new LogisticRegression().setMaxIter(20).setRegParam(0.01).fit(train)
     model.transform(test)
       .select(col("c_custkey"), col("label"), col("prediction"),
         org.apache.spark.ml.functions.vector_to_array(col("probability"))
@@ -166,7 +189,7 @@ object MlC extends Module {
   // ml_logreg — LogisticRegression train + test predictions + prob.
   private val mlLogreg = Q(
     "ml_logreg",
-    (s, d) => logregPredictions(s, d).orderBy("c_custkey"),
+    (s, d) => logregPredictions(s, d),
     None
   )
 
@@ -174,12 +197,10 @@ object MlC extends Module {
   private val mlGbt = Q(
     "ml_gbt",
     (s, d) => {
-      val (train, test) = split(customerFeatures(s, d))
-      val gbt = new GBTClassifier().setMaxIter(5).setMaxDepth(3).setSeed(42L)
-      val model = new Pipeline().setStages(Array(assembler, gbt)).fit(train)
+      val (train, test) = split(fitFrame(s, d))
+      val model = new GBTClassifier().setMaxIter(5).setMaxDepth(3).setSeed(42L).fit(train)
       model.transform(test)
         .select(col("c_custkey"), col("label"), col("prediction"))
-        .orderBy("c_custkey")
     },
     None
   )
@@ -189,7 +210,7 @@ object MlC extends Module {
   private val mlCv = Q(
     "ml_cv",
     (s, d) => {
-      val df = assembler.transform(customerFeatures(s, d))
+      val df = fitFrame(s, d)
       val lr = new LogisticRegression().setMaxIter(20)
       val grid = new ParamGridBuilder()
         .addGrid(lr.regParam, Array(0.0, 0.1)).build()
@@ -264,11 +285,9 @@ object MlC extends Module {
   private val mlAdaboost = Q(
     "ml_adaboost",
     (s, d) => {
-      val (train, test) = split(customerFeatures(s, d))
-      val (preds, _) = adaboostFit(assembler.transform(train),
-        assembler.transform(test), rounds = 8, seed = 42L)
+      val (train, test) = split(fitFrame(s, d))
+      val (preds, _) = adaboostFit(train, test, rounds = 8, seed = 42L)
       preds.select(col("c_custkey"), col("label"), col("margin"), col("prediction"))
-        .orderBy("c_custkey")
     },
     None
   )
@@ -315,9 +334,8 @@ object MlC extends Module {
     */
   private[graft] def searchTrials(s: SparkSession, d: String, prune: Boolean)
       : (Seq[(Long, String, Option[Double], Option[Double], Option[Long], Double, Boolean)], Int) = {
-    val df = assembler.transform(customerFeatures(s, d))
+    val df = fitFrame(s, d)
       .withColumn("fold", pmod(xxhash64(col("c_custkey"), lit(42L)), lit(3L)))
-      .cache()
     val fits = new java.util.concurrent.atomic.AtomicInteger(0)
     def foldScore(est: org.apache.spark.ml.Estimator[_], f: Int): Double = {
       fits.incrementAndGet()
@@ -355,7 +373,6 @@ object MlC extends Module {
         (t.id, t.model, t.reg, t.en, t.depth, mean, false)
       }
     }
-    df.unpersist()
     (rows, fits.get())
   }
 
@@ -398,12 +415,11 @@ object MlC extends Module {
   private[graft] def adaptiveSearchRows(s: SparkSession, d: String)
       : Seq[(Long, String, Option[Double], Option[Double], Option[Long],
           Long, Double, Double, Boolean)] = {
-    val df = assembler.transform(customerFeatures(s, d))
+    val df = fitFrame(s, d)
       .withColumn("fold", pmod(xxhash64(col("c_custkey"), lit(42L)), lit(3L)))
       // nested budget prefixes: the q18 overflow-free Z-mod-p gate
       .withColumn("bkt", (col("c_custkey") % lit(1000000007L)) * lit(654435747L)
         % lit(1000000007L) % lit(1000L))
-      .cache()
     def rungTrain(frac: Double) =
       df.filter(col("fold") =!= 0 && col("bkt") < lit((frac * 1000).toLong))
     def rungScore(t: Trial, frac: Double): Double = {
@@ -445,7 +461,6 @@ object MlC extends Module {
     inPool(alive)(t => t -> fullCv(t)).foreach { case (t, sc) =>
       out += ((t.id, t.model, t.reg, t.en, t.depth, 2L, 1.0, sc, true))
     }
-    df.unpersist()
     out.toSeq
   }
 
@@ -553,6 +568,7 @@ object MlC extends Module {
       .join(Tables.customer(s, d).select(col("c_custkey").as("ck"), col("c_mktsegment")),
         col("c_custkey") === col("ck"))
       .drop("ck")
+      .graftCheckpoint()
     val known = base.filter(trainCond)
     val missing = base.filter(predCond)
     val idx = new StringIndexer().setInputCol("c_mktsegment")
@@ -575,8 +591,7 @@ object MlC extends Module {
   private val mlImputeModel = Q(
     "ml_impute_model",
     (s, d) => imputePredictions(s, d,
-        col("c_custkey") % 10 =!= 0, col("c_custkey") % 10 === 0)
-      .orderBy("c_custkey"),
+      col("c_custkey") % 10 =!= 0, col("c_custkey") % 10 === 0),
     None
   )
 
@@ -605,14 +620,13 @@ object MlC extends Module {
   private val mlFinalPipeline = Q(
     "ml_final_pipeline",
     (s, d) => {
-      val (train, test) = split(customerFeatures(s, d))
+      val (train, test) = split(unpacked(fitFrame(s, d)).drop("features"))
       val scaler = new StandardScaler().setInputCol("features")
         .setOutputCol("scaled").setWithMean(true).setWithStd(true)
       val lr = new LogisticRegression().setMaxIter(20).setFeaturesCol("scaled")
       val model = new Pipeline().setStages(Array(assembler, scaler, lr)).fit(train)
       model.transform(test)
         .select(col("c_custkey"), col("label"), col("prediction"))
-        .orderBy("c_custkey")
     },
     None
   )
@@ -641,12 +655,11 @@ object MlC extends Module {
   private[graft] def mlpEarlyStopCurve(s: SparkSession, d: String)
       : (Seq[(Long, Double, Boolean)], DataFrame) = {
     import org.apache.spark.ml.classification.MultilayerPerceptronClassifier
-    val (train, test) = split(customerFeatures(s, d))
-    val assembled = assembler.transform(train)
+    val (train, test) = split(fitFrame(s, d))
     val bkt = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) %
       lit(1000000007L) % lit(1000L)
-    val fitDf = assembled.filter(bkt >= 250).cache()
-    val valDf = assembled.filter(bkt < 250).cache()
+    val fitDf = train.filter(bkt >= 250)
+    val valDf = train.filter(bkt < 250)
     val starved = fitDf.select(col("label")).distinct().count() < 2 ||
       valDf.select(col("label")).distinct().count() < 2
     val step = 5
@@ -672,10 +685,8 @@ object MlC extends Module {
       } else sinceBest += 1
       r += 1
     }
-    fitDf.unpersist(); valDf.unpersist()
-    val preds = bestModel.transform(assembler.transform(test))
+    val preds = bestModel.transform(test)
       .select(col("c_custkey"), col("label"), col("prediction"))
-      .orderBy("c_custkey")
     (curve.toSeq.map { case (it, auc) => (it, auc, it == bestRound) }, preds)
   }
 
@@ -691,15 +702,15 @@ object MlC extends Module {
   private val mlAttrib = Q(
     "ml_attrib",
     (s, d) => {
-      val (train, test) = split(customerFeatures(s, d))
+      val (train, test) = split(fitFrame(s, d))
       val lr = new LogisticRegression().setMaxIter(20).setRegParam(0.01)
-      val model = lr.fit(assembler.transform(train))
+      val model = lr.fit(train)
       val coefs = model.coefficients.toArray
       val intercept = model.intercept
       val contribs = featCols.zip(coefs).map { case (f, w) =>
         struct(lit(f).as("feature"), (col(f) * lit(w)).as("contribution"))
       }
-      test.select(col("c_custkey"), lit(intercept).as("intercept"),
+      unpacked(test).select(col("c_custkey"), lit(intercept).as("intercept"),
           explode(array(contribs: _*)).as("c"))
         .select(col("c_custkey"), col("c.feature"), col("c.contribution"), col("intercept"))
         .orderBy("c_custkey", "feature")
@@ -717,11 +728,8 @@ object MlC extends Module {
     "ml_feature_importance",
     (s, d) => {
       import s.implicits._
-      val (train, _) = split(customerFeatures(s, d))
-      val gbt = new GBTClassifier().setMaxIter(5).setMaxDepth(3).setSeed(42L)
-      val model = new Pipeline().setStages(Array(assembler, gbt)).fit(train)
-      val imp = model.stages(1)
-        .asInstanceOf[org.apache.spark.ml.classification.GBTClassificationModel]
+      val (train, _) = split(fitFrame(s, d))
+      val imp = new GBTClassifier().setMaxIter(5).setMaxDepth(3).setSeed(42L).fit(train)
         .featureImportances.toArray
       featCols.zip(imp).toSeq.toDF("feature", "importance")
         .orderBy("feature")
@@ -742,7 +750,7 @@ object MlC extends Module {
     "ml_kmeans",
     (s, d) => {
       import s.implicits._
-      val feats = assembler.transform(customerFeatures(s, d))
+      val feats = fitFrame(s, d)
       val km = new org.apache.spark.ml.clustering.KMeans()
         .setK(4).setSeed(42L)
         .setFeaturesCol("features").setPredictionCol("cluster")
@@ -800,7 +808,7 @@ object MlC extends Module {
     "ml_pca",
     (s, d) => {
       import s.implicits._
-      val feats = assembler.transform(customerFeatures(s, d))
+      val feats = fitFrame(s, d)
       val pca = new org.apache.spark.ml.feature.PCA()
         .setK(3).setInputCol("features").setOutputCol("pc")
         .fit(feats)
@@ -929,7 +937,7 @@ object MlC extends Module {
     "ml_psi",
     (s, d) => {
       import s.implicits._
-      val (train, test) = split(customerFeatures(s, d))
+      val (train, test) = split(unpacked(fitFrame(s, d)))
       val feats = Seq("n_orders", "total_spend", "avg_spend")
       val eps = 1e-6
       val rows = feats.map { f =>
@@ -1036,10 +1044,11 @@ object MlC extends Module {
     "ml_permutation_importance",
     (s, d) => {
       import s.implicits._
-      val (train, test) = split(customerFeatures(s, d))
-      val lr = new LogisticRegression().setMaxIter(20).setRegParam(0.01)
-      val model = new Pipeline().setStages(Array(assembler, lr)).fit(train)
+      val (train, test) = split(fitFrame(s, d))
+      val model = new LogisticRegression().setMaxIter(20).setRegParam(0.01).fit(train)
       def auc(df: DataFrame): Double = exactAucRaw(model.transform(df))
+      // a permuted feature is re-assembled, as the fitted pipeline did
+      val raw = unpacked(test).drop("features")
       val bucket = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) %
         lit(1000000007L) % 64
       val hashOrd = (col("c_custkey") % lit(998244353L)) * lit(3L) % lit(998244353L)
@@ -1052,7 +1061,7 @@ object MlC extends Module {
         val shifted = coalesce(lag(col(f), 1).over(w),
           max(struct(hashOrd.as("o"), col("c_custkey").as("k"), col(f).as("v")))
             .over(wAll).getField("v"))
-        (f, auc(test.withColumn(f, shifted)))
+        (f, auc(assembler.transform(raw.withColumn(f, shifted))))
       }
       rows.map { case (f, a) => (f, base, a, base - a) }.toSeq
         .toDF("feature", "auc_base", "auc_permuted", "auc_drop")
@@ -1141,10 +1150,9 @@ object MlC extends Module {
   private val mlNaiveBayes = Q(
     "ml_naive_bayes",
     (s, d) => {
-      val (train, test) = split(customerFeatures(s, d))
-      val nb = new org.apache.spark.ml.classification.NaiveBayes()
-        .setModelType("gaussian").setLabelCol("label").setFeaturesCol("features")
-      val model = new Pipeline().setStages(Array(assembler, nb)).fit(train)
+      val (train, test) = split(fitFrame(s, d))
+      val model = new org.apache.spark.ml.classification.NaiveBayes()
+        .setModelType("gaussian").setLabelCol("label").setFeaturesCol("features").fit(train)
       val preds = model.transform(test)
       preds.groupBy(col("label"), col("prediction"))
         .agg(count(lit(1)).as("n"))
@@ -1189,11 +1197,11 @@ object MlC extends Module {
   private val mlEnsemble = Q(
     "ml_ensemble_vote",
     (s, d) => {
-      val lrP = logregPredictions(s, d)
+      val frame = fitFrame(s, d)
+      val lrP = logregOn(frame)
         .select(col("c_custkey"), col("label"), col("prob_1").as("p_lr"))
-      val (train, test) = split(customerFeatures(s, d))
-      val gbt = new GBTClassifier().setMaxIter(5).setMaxDepth(3).setSeed(42L)
-      val gm = new Pipeline().setStages(Array(assembler, gbt)).fit(train)
+      val (train, test) = split(frame)
+      val gm = new GBTClassifier().setMaxIter(5).setMaxDepth(3).setSeed(42L).fit(train)
       val gbtP = gm.transform(test)
         .select(col("c_custkey").as("gk"),
           org.apache.spark.ml.functions.vector_to_array(col("probability"))
@@ -1203,7 +1211,6 @@ object MlC extends Module {
           ((col("p_lr") + col("p_gbt")) / lit(2.0)).as("p_vote"),
           (((col("p_lr") + col("p_gbt")) / lit(2.0)) >= lit(0.5)).cast("double")
             .as("prediction"))
-        .orderBy("c_custkey")
     },
     None
   )
@@ -1221,7 +1228,7 @@ object MlC extends Module {
     "ml_learning_curve",
     (s, d) => {
       import s.implicits._
-      val df = customerFeatures(s, d)
+      val df = fitFrame(s, d)
       val bucket = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) %
         lit(1000000007L) % 1000
       val test = df.filter(bucket >= 800)
@@ -1236,8 +1243,7 @@ object MlC extends Module {
         val auc =
           if (nClasses < 2) Double.NaN
           else {
-            val lr = new LogisticRegression().setMaxIter(20).setRegParam(0.01)
-            val model = new Pipeline().setStages(Array(assembler, lr)).fit(train)
+            val model = new LogisticRegression().setMaxIter(20).setRegParam(0.01).fit(train)
             exactAucRaw(model.transform(test))
           }
         (cut.toDouble / 800.0, n, auc)
@@ -1572,12 +1578,9 @@ object MlC extends Module {
       profile.add((family, fold, (System.nanoTime() - t0) / 1e9))
       r
     }
-    val df = assembler.transform(customerFeatures(s, d))
+    val df = fitFrame(s, d)
       .withColumn("fold", pmod(xxhash64(col("c_custkey"), lit(42L)), lit(3L)))
-      .select("c_custkey", "features", "label", "fold")
-      .cache()
-    df.count() // materialize once, before concurrent first access
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors())
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
     val families: Seq[(String, org.apache.spark.ml.Estimator[_])] = Seq(
@@ -1631,18 +1634,17 @@ object MlC extends Module {
       val nf = featCols.length
       val bkt = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) %
         lit(1000000007L) % lit(1000L)
-      val xs = org.apache.spark.ml.functions.vector_to_array(col("features"))
       val folds = (0 until 3).map { f => Future { timed("knn", f) {
         val tr = df.filter(col("fold") =!= f)
         val te = df.filter(col("fold") === f)
-        val stats = tr.select(posexplode(xs).as(Seq("pos", "v")))
+        val stats = tr.select(posexplode(featArr).as(Seq("pos", "v")))
           .groupBy("pos").agg(avg("v").as("mu"), stddev_samp("v").as("sd"))
           .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
           .sortBy(_._1)
         val mus = stats.map(_._2)
         val sds = stats.map(t => if (!t._3.isNaN && t._3 > 0.0) t._3 else 1.0)
         def scaled = array((0 until nf).map(i =>
-          (xs.getItem(i) - lit(mus(i))) / lit(sds(i))): _*)
+          (featArr.getItem(i) - lit(mus(i))) / lit(sds(i))): _*)
         val nTr = tr.count()
         val cut = math.min(1000L, 2000L * 1000L / math.max(nTr, 1L) + 1L)
         val ref = tr.filter(bkt < lit(cut))
@@ -1682,17 +1684,16 @@ object MlC extends Module {
       val gamma = 1.0 / nf
       val wMat = Array.fill(dRff, nf)(rng.nextGaussian() * math.sqrt(2.0 * gamma))
       val bVec = Array.fill(dRff)(rng.nextDouble() * 2.0 * math.Pi)
-      val xs = org.apache.spark.ml.functions.vector_to_array(col("features"))
       val folds = (0 until 3).map { f => Future { timed("svc_rff", f) {
         val tr = df.filter(col("fold") =!= f)
         val te = df.filter(col("fold") === f)
-        val stats = tr.select(posexplode(xs).as(Seq("pos", "v")))
+        val stats = tr.select(posexplode(featArr).as(Seq("pos", "v")))
           .groupBy("pos").agg(avg("v").as("mu"), stddev_samp("v").as("sd"))
           .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
           .sortBy(_._1)
         val mus = stats.map(_._2)
         val sds = stats.map(t => if (!t._3.isNaN && t._3 > 0.0) t._3 else 1.0)
-        def scaled(i: Int) = (xs.getItem(i) - lit(mus(i))) / lit(sds(i))
+        def scaled(i: Int) = (featArr.getItem(i) - lit(mus(i))) / lit(sds(i))
         def phi = array((0 until dRff).map { j =>
           cos((0 until nf).map(i => scaled(i) * lit(wMat(j)(i))).reduce(_ + _)
             + lit(bVec(j))) * lit(math.sqrt(2.0 / dRff))
@@ -1768,7 +1769,6 @@ object MlC extends Module {
         (name, folds.map(_._1).sum / 3.0, folds.map(_._2).sum / 3.0,
           folds.map(_._3).sum / 3.0)
     }
-    df.unpersist()
     if (sys.env.contains("GRAFT_ML_PROFILE")) {
       import scala.jdk.CollectionConverters._
       val byFamily = profile.asScala.toSeq.groupBy(_._1).toSeq
@@ -1838,10 +1838,8 @@ object MlC extends Module {
 
   /** (c_custkey, feature, contribution, bias, margin) on the hold-out. */
   private[graft] def gbtAttribution(s: SparkSession, d: String): DataFrame = {
-    val (train, test) = split(customerFeatures(s, d))
-    val gbt = new GBTClassifier().setMaxIter(5).setMaxDepth(3).setSeed(42L)
-    val model = new Pipeline().setStages(Array(assembler, gbt)).fit(train)
-      .stages(1).asInstanceOf[org.apache.spark.ml.classification.GBTClassificationModel]
+    val (train, test) = split(fitFrame(s, d))
+    val model = new GBTClassifier().setMaxIter(5).setMaxDepth(3).setSeed(42L).fit(train)
     val trees = model.trees.map(t => flattenTree(t.rootNode))
     val weights = model.treeWeights
     val nf = featCols.length
@@ -1866,8 +1864,7 @@ object MlC extends Module {
       }
       (contrib.toSeq, bias, margin)
     }
-    test.select(col("c_custkey"),
-        walk(array(featCols.map(c => col(c).cast("double")).toIndexedSeq: _*)).as("a"))
+    test.select(col("c_custkey"), walk(featArr).as("a"))
       .select(col("c_custkey"), col("a._2").as("bias"), col("a._3").as("margin"),
         posexplode(col("a._1")).as(Seq("pos", "contribution")))
       .select(col("c_custkey"),

@@ -90,8 +90,8 @@ object Kmv {
       val estU = estimate(union, k)
       (ga, gb, estimate(a, k), estimate(b, k), jac, estU, jac * estU)
     }
+    // `sk` is sorted by group, so the pairs already come in (g_a, g_b) order
     rows.toDF("g_a", "g_b", "est_distinct_a", "est_distinct_b",
       "est_jaccard", "est_union", "est_intersection")
-      .orderBy("g_a", "g_b")
   }
 }

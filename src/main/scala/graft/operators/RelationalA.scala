@@ -241,11 +241,12 @@ object RelationalA extends Module {
     * [[Quantiles]]' distributed bucket-histogram selection: no stage ranks
     * more than ~n/65536 rows, vs the naive unpartitioned row_number window
     * that funnels the whole column through one task. Same interpolation
-    * expression as the oracle, so the hash-match is preserved.
+    * expression as the oracle, so the hash-match is preserved. Rows are
+    * sorted on the driver by (col_name, q).
     */
   private def quantileDf(df: DataFrame, cols: Seq[String], qs: Seq[Double])(implicit s: SparkSession): DataFrame = {
     import s.implicits._
-    Quantiles.exactQuantiles(df, cols, qs).toDF("col_name", "q", "value")
+    Quantiles.exactQuantiles(df, cols, qs).sortBy(r => (r._1, r._2)).toDF("col_name", "q", "value")
   }
 
   private def quantileSql(table: String, c: String, qs: Seq[Double]): String = {
@@ -267,7 +268,6 @@ object RelationalA extends Module {
       val l = Tables.lineitem(s, d)
       val qs = Seq(0.25, 0.5, 0.75)
       quantileDf(l, Seq("l_quantity", "l_extendedprice"), qs)
-        .orderBy("col_name", "q")
     },
     Some(
       quantileSql("lineitem", "l_quantity", Seq(0.25, 0.5, 0.75)) +
@@ -645,8 +645,8 @@ object RelationalA extends Module {
       import s.implicits._
       Quantiles.groupedExactQuantiles(
           Tables.lineitem(s, d), "l_returnflag", "l_quantity", Seq(0.25, 0.5, 0.75))
+        .sortBy(r => (r._1, r._2))
         .toDF("l_returnflag", "q", "value")
-        .orderBy("l_returnflag", "q")
     },
     Some("""WITH r AS (
       |  SELECT l_returnflag AS g, l_quantity AS x,

@@ -180,9 +180,8 @@ object RelationalC extends Module {
           abs(col("l_extendedprice") - col("med")).as("dev"))
       val mads = Quantiles.groupedExactQuantiles(devs, "l_returnflag", "dev", Seq(0.5))
         .map { case (g, _, v) => (g, v) }.toMap
-      meds.map { case (g, m) => (g, m, mads(g)) }
+      meds.map { case (g, m) => (g, m, mads(g)) }.sortBy(_._1)
         .toDF("l_returnflag", "median", "mad")
-        .orderBy("l_returnflag")
     },
     Some {
       // interpolated grouped median over an arbitrary source relation
@@ -984,8 +983,8 @@ object RelationalC extends Module {
             .cast("double").as("dur_us"))
       val durs = toClick.unionByName(toPurchase)
       Quantiles.groupedExactQuantiles(durs, "stage", "dur_us", Seq(0.25, 0.5, 0.75))
+        .sortBy(r => (r._1, r._2))
         .toDF("stage", "q", "dur_us")
-        .orderBy("stage", "q")
     },
     Some("""WITH v AS (
       |  SELECT *, MIN(CASE WHEN event_type = 'view' THEN ts END)

@@ -1369,8 +1369,8 @@ object RelationalD extends Module {
         atRisk -= allT
         out
       }
+      // `surface` was collected in t order, so the rows already are
       rows.toSeq.toDF("t_days", "n_risk", "n_events", "n_censored", "survival")
-        .orderBy("t_days")
     },
     Some("""WITH spans AS (
       |  SELECT o_custkey, MIN(o_orderdate) AS f, MAX(o_orderdate) AS l

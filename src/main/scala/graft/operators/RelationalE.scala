@@ -44,9 +44,8 @@ object RelationalE extends Module {
           val m = rows.map(r => r._1 -> r._3).toMap
           (p, m(segs.head), m(segs.last))
         }
-      qv.toDF("p", "q_building", "q_machinery")
+      qv.sortBy(_._1).toDF("p", "q_building", "q_machinery")
         .withColumn("qq_diff", col("q_machinery") - col("q_building"))
-        .orderBy("p")
     },
     Some("""WITH src AS (
       |  SELECT c_mktsegment AS g, CAST(o_totalprice AS DOUBLE) AS x
@@ -178,8 +177,8 @@ object RelationalE extends Module {
         col("l_extendedprice").cast("double").as("x"),
         Exact.qzl(col("l_quantity"), 1.0).as("w"))
       weightedQuantiles(facts, Seq((1L, 4L, 0.25), (1L, 2L, 0.5), (3L, 4L, 0.75)))
+        .sortBy(r => (r._1, r._2))
         .toDF("l_returnflag", "p", "value")
-        .orderBy("l_returnflag", "p")
     },
     Some("""WITH f AS (
       |  SELECT l_returnflag AS g, CAST(l_extendedprice AS DOUBLE) AS x,
@@ -864,8 +863,8 @@ object RelationalE extends Module {
             (q1 + q3 - 2.0 * q2) / (q3 - q1),
             (q3 - q1) / (q3 + q1))
         }
-      qv.toDF("o_orderpriority", "q1", "median", "q3", "bowley_skew", "quartile_disp")
-        .orderBy("o_orderpriority")
+      qv.sortBy(_._1)
+        .toDF("o_orderpriority", "q1", "median", "q3", "bowley_skew", "quartile_disp")
     },
     Some("""WITH src AS (
       |  SELECT o_orderpriority AS g, CAST(o_totalprice AS DOUBLE) AS x FROM orders),

@@ -66,6 +66,16 @@ class BenchContractSpec extends AnyFunSuite {
     assert(DataFp.of(dir.toString) === before, "non-parquet files must not count")
   }
 
+  test("cores: a positive SPARK_GRAFT_CPUS wins, anything else means this machine's") {
+    val machine = Runtime.getRuntime.availableProcessors()
+    assert(Bench.cores(Some("8")) === 8)
+    assert(Bench.cores(Some(" 3 ")) === 3)
+    Seq(None, Some("*"), Some(""), Some("0"), Some("-4"), Some("4.5"), Some("abc"),
+        Some("99999999999")).foreach { raw =>
+      assert(Bench.cores(raw) === machine, s"SPARK_GRAFT_CPUS=$raw")
+    }
+  }
+
   test("zero-sample queries fail certification") {
     val l = line(1.05, Map("q01_agg" -> 5, "st_window_agg" -> 0))
     assert(l.contains("\"certified\":false"), l)

@@ -27,6 +27,93 @@ class MlSpec extends SparkSpec {
       (rep.getAs[Double]("recall_1") + rep.getAs[Double]("recall_0")) / 2.0)
   }
 
+  /** ml_logreg as it was built before the fit frame: a Pipeline of the
+    * assembler and the model, fit on the lazy feature plan. Kept here as
+    * the reference the materialized fit frame must reproduce bit for bit.
+    */
+  private def pipelineLogreg(): org.apache.spark.sql.DataFrame = {
+    val f = MlC.customerFeatures(spark, sf)
+    val bucket = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) %
+      lit(1000000007L) % 1000
+    val asm = new org.apache.spark.ml.feature.VectorAssembler()
+      .setInputCols(Array("nation", "n_orders", "total_spend", "avg_spend",
+        "seg_AUTOMOBILE", "seg_BUILDING", "seg_FURNITURE", "seg_HOUSEHOLD",
+        "seg_MACHINERY")).setOutputCol("features")
+    val lr = new org.apache.spark.ml.classification.LogisticRegression()
+      .setMaxIter(20).setRegParam(0.01)
+    new org.apache.spark.ml.Pipeline().setStages(Array(asm, lr))
+      .fit(f.filter(bucket < 800)).transform(f.filter(bucket >= 800))
+      .select(col("c_custkey"), col("label"), col("prediction"),
+        org.apache.spark.ml.functions.vector_to_array(col("probability"))
+          .getItem(1).as("prob_1"))
+  }
+
+  /** Rows keyed and sorted by c_custkey, every double as its raw bits. */
+  private def bits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Long)] =
+    df.collect().toSeq.map(r => (r.getLong(0),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).sortBy(_._1)
+
+  test("fit frame: logreg predictions bit-identical to the lazy Pipeline fit on any shape") {
+    val conf = spark.conf
+    val saved = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+      .map(key => key -> conf.getOption(key))
+    try {
+      for (parts <- Seq(1, 4, 8); aqe <- Seq("true", "false")) {
+        conf.set("spark.sql.shuffle.partitions", parts.toString)
+        conf.set("spark.sql.adaptive.enabled", aqe)
+        val got = bits(MlC.logregPredictions(spark, sf))
+        assert(got.nonEmpty)
+        assert(got === bits(pipelineLogreg()), s"shuffle partitions $parts, AQE $aqe")
+      }
+    } finally saved.foreach {
+      case (key, Some(v)) => conf.set(key, v)
+      case (key, None) => conf.unset(key)
+    }
+  }
+
+  test("fit frame: one logreg build and its action run the feature plan's shuffles once") {
+    import org.apache.spark.scheduler._
+    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerEnded = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val markerJobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        // a shuffle map stage: its tasks wrote shuffle output
+        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffleStages.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("fit-frame-marker")).foreach(markerJobs.put(e.jobId, _))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(markerJobs.get(e.jobId)).foreach(markerEnded.put)
+    }
+    // listeners see events in order: once a marker job's end arrives,
+    // every stage of the body before it has been counted
+    def shufflesOf(tag: String)(body: => Unit): Int = {
+      shuffleStages.set(0)
+      body
+      val sc = spark.sparkContext
+      sc.setJobGroup(s"fit-frame-marker-$tag", "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerEnded.poll(60, java.util.concurrent.TimeUnit.SECONDS) ===
+        s"fit-frame-marker-$tag")
+      shuffleStages.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val once = shufflesOf("features") {
+        MlC.customerFeatures(spark, sf).write.format("noop").mode("overwrite").save()
+      }
+      assert(once > 0, "the feature plan should shuffle")
+      val logreg = shufflesOf("logreg") {
+        MlC.logregPredictions(spark, sf).write.format("noop").mode("overwrite").save()
+      }
+      assert(logreg === once, s"logreg ran $logreg shuffle stages, the feature plan $once")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("PCA components are orthonormal, variance-ordered, deterministic") {
     def run() = SparkEntry.queries("ml_pca")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getDouble(3))).toSeq
