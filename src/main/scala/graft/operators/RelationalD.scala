@@ -1369,7 +1369,7 @@ object RelationalD extends Module {
         atRisk -= allT
         out
       }
-      // `surface` was collected in t order, so the rows already are
+      // `surface` is collected in t order, so the rows are already sorted
       rows.toSeq.toDF("t_days", "n_risk", "n_events", "n_censored", "survival")
     },
     Some("""WITH spans AS (
