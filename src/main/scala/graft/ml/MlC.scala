@@ -50,26 +50,24 @@ object MlC extends Module {
   /** `features` as an array of the exact doubles the assembler packed. */
   private val featArr = org.apache.spark.ml.functions.vector_to_array(col("features"))
 
-  /** `df` plus every [[featCols]] column unpacked from `features`. */
-  private def unpacked(df: DataFrame): DataFrame =
-    df.select(col("*") +: featCols.indices.map(i => featArr.getItem(i).as(featCols(i))): _*)
-
-  /** The frame every MLlib fit and scoring path reads: the assembled
-    * [[customerFeatures]] narrowed to (c_custkey, label, features) and
-    * materialized once. MLlib reads its input through `Dataset.rdd`, and
-    * under AQE each `.rdd` of a lazy plan runs the plan's shuffle stages
-    * on the spot: a LogisticRegression fit calls it for the training
-    * instances and for the summary's multiclass and binary metrics, so
-    * fit plus scoring ran the join + aggregate four times. Filters over
-    * the checkpoint see the partitions and row order the lazy plan
-    * produced, so every fit is bit-identical to the lazy-plan fit.
+  /** The frame every MLlib fit and scoring path reads: the
+    * [[customerFeatures]] columns (c_custkey, the raw [[featCols]],
+    * label) plus their assembled `features`, materialized once. MLlib
+    * reads its input through `Dataset.rdd`, and under AQE each `.rdd` of
+    * a lazy plan runs the plan's shuffle stages on the spot: a
+    * LogisticRegression fit calls it for the training instances and for
+    * the summary's multiclass and binary metrics, so fit plus scoring
+    * ran the join + aggregate four times. Filters over the checkpoint
+    * see the partitions and row order the lazy plan produced, so every
+    * fit is bit-identical to the lazy-plan fit. In reliable mode
+    * (`spark.graft.checkpoint.dir`) each call writes a fresh durable
+    * copy that nothing deletes; see [[graft.Exact.checkpoint]] for
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`.
     */
   private[graft] def fitFrame(s: SparkSession, d: String): DataFrame =
-    assembler.transform(customerFeatures(s, d))
-      .select(col("c_custkey"), col("label"), col("features"))
-      .graftCheckpoint()
+    assembler.transform(customerFeatures(s, d)).graftCheckpoint()
 
-  /** Map `xs` through `f` on a one-thread-per-core driver pool (the
+  /** Map `xs` through `f` on a bounded driver thread pool (the
     * CrossValidator `parallelism` discipline): the ML operators'
     * wall time is dominated by driver-synchronized MLlib job
     * round-trips, and independent seeded fits/scoring passes can
@@ -78,10 +76,10 @@ object MlC extends Module {
     * form on any cluster shape. Only use for element computations
     * that are independent (no cross-element mutable state).
     */
-  private def inPool[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+  private def inPool[A, B](xs: Seq[A], threads: Int = 6)(f: A => B): Seq[B] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors())
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       val fs = xs.map(x => Future(f(x)))
@@ -620,7 +618,7 @@ object MlC extends Module {
   private val mlFinalPipeline = Q(
     "ml_final_pipeline",
     (s, d) => {
-      val (train, test) = split(unpacked(fitFrame(s, d)).drop("features"))
+      val (train, test) = split(fitFrame(s, d).drop("features"))
       val scaler = new StandardScaler().setInputCol("features")
         .setOutputCol("scaled").setWithMean(true).setWithStd(true)
       val lr = new LogisticRegression().setMaxIter(20).setFeaturesCol("scaled")
@@ -710,7 +708,7 @@ object MlC extends Module {
       val contribs = featCols.zip(coefs).map { case (f, w) =>
         struct(lit(f).as("feature"), (col(f) * lit(w)).as("contribution"))
       }
-      unpacked(test).select(col("c_custkey"), lit(intercept).as("intercept"),
+      test.select(col("c_custkey"), lit(intercept).as("intercept"),
           explode(array(contribs: _*)).as("c"))
         .select(col("c_custkey"), col("c.feature"), col("c.contribution"), col("intercept"))
         .orderBy("c_custkey", "feature")
@@ -937,7 +935,7 @@ object MlC extends Module {
     "ml_psi",
     (s, d) => {
       import s.implicits._
-      val (train, test) = split(unpacked(fitFrame(s, d)))
+      val (train, test) = split(fitFrame(s, d))
       val feats = Seq("n_orders", "total_spend", "avg_spend")
       val eps = 1e-6
       val rows = feats.map { f =>
@@ -1047,8 +1045,6 @@ object MlC extends Module {
       val (train, test) = split(fitFrame(s, d))
       val model = new LogisticRegression().setMaxIter(20).setRegParam(0.01).fit(train)
       def auc(df: DataFrame): Double = exactAucRaw(model.transform(df))
-      // a permuted feature is re-assembled, as the fitted pipeline did
-      val raw = unpacked(test).drop("features")
       val bucket = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) %
         lit(1000000007L) % 64
       val hashOrd = (col("c_custkey") % lit(998244353L)) * lit(3L) % lit(998244353L)
@@ -1061,7 +1057,8 @@ object MlC extends Module {
         val shifted = coalesce(lag(col(f), 1).over(w),
           max(struct(hashOrd.as("o"), col("c_custkey").as("k"), col(f).as("v")))
             .over(wAll).getField("v"))
-        (f, auc(assembler.transform(raw.withColumn(f, shifted))))
+        // re-assembled from the permuted column, as the pipeline fit did
+        (f, auc(assembler.transform(test.drop("features").withColumn(f, shifted))))
       }
       rows.map { case (f, a) => (f, base, a, base - a) }.toSeq
         .toDF("feature", "auc_base", "auc_permuted", "auc_drop")
@@ -1580,7 +1577,7 @@ object MlC extends Module {
     }
     val df = fitFrame(s, d)
       .withColumn("fold", pmod(xxhash64(col("c_custkey"), lit(42L)), lit(3L)))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors())
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
     val families: Seq[(String, org.apache.spark.ml.Estimator[_])] = Seq(
