@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: headline queries (SURVEY §6) on
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -23,32 +21,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // opt-in subset (comma list) for decades where only some headline
-    // tables exist — e.g. the sf100 magnitude-probe set has the fact
-    // tables but no documents/embeddings. Unset = full headline list
-    // (the driver's per-round contract); certification semantics are
-    // unchanged within whatever set runs.
-    val headline: Seq[String] = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(s) =>
-        val want = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        val unknown = want -- Bench.headline.toSet
-        // a typo must not silently shrink the measured set — the bench
-        // would "pass" while measuring nothing
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_BENCH_ONLY names no headline query: ${unknown.mkString(", ")} " +
-          s"(valid: ${Bench.headline.mkString(", ")})")
-        Bench.headline.filter(want)
-      case None    => Bench.headline
-    }
-    val cpus = cores(sys.env.get("SPARK_GRAFT_CPUS"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "24g"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cores(sys.env.get("SPARK_GRAFT_CPUS"))
+    val spark = Session.local("graft-bench")
 
     def exec(name: String, dir: String): Unit =
       SparkEntry.queries(name)(spark, dir)
@@ -180,10 +154,6 @@ object Bench {
       calibrate(), total001, buildSec, probeSec, DataFp.of(sfDir), cpus))
     spark.stop()
   }
-
-  /** Cores for `local[n]`: `raw` (SPARK_GRAFT_CPUS) if a positive integer, else the machine's. */
-  def cores(raw: Option[String]): Int =
-    raw.flatMap(_.trim.toIntOption).filter(_ > 0).getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** Fixed single-thread CPU marker (~0.07 s on this box when quiet):
     * certification (windowed median ≈ min) catches INTRA-run spikes but

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Certification main for the COMPOSED LLM-data pipeline
   * (Curate.pipeline + pack): end-to-end wall time with a per-stage
   * split at a given SF dir — the BENCH sibling artifact for the
@@ -14,15 +12,7 @@ import org.apache.spark.sql.SparkSession
 object CurateBench {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-curate-bench").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "24g"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("graft-curate-bench")
     def f(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val stages = Seq.newBuilder[(String, Long, Double)]

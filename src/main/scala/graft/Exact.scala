@@ -175,16 +175,11 @@ object Exact {
     * level-1 overflow bounds are stated against SCAN splits (≤
     * maxPartitionBytes) — measured at sf0.1, de-fanning q01 cut 1.22 s
     * → 0.75 s while dd_minhash (60× explode + hashing) keeps its win.
-    * On a real cluster with splittable inputs set
-    * SPARK_GRAFT_FANOUT=off: the check itself costs a physical-planning
-    * pass per invocation (toRdd plans the subtree — cheaper than df.rdd's
-    * extra deserializer layer, but not free), and with splittable inputs
-    * the condition is never true anyway.
+    * The check costs a physical-planning pass per invocation (toRdd
+    * plans the subtree — cheaper than df.rdd's extra deserializer layer,
+    * but not free); with splittable inputs the condition is never true.
     */
-  private lazy val fanoutEnabled = sys.env.getOrElse("SPARK_GRAFT_FANOUT", "on") != "off"
-
   def fanout(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    if (!fanoutEnabled) return df
     val sc = df.sparkSession.sparkContext
     if (df.queryExecution.toRdd.getNumPartitions < sc.defaultParallelism)
       df.repartition(sc.defaultParallelism)
@@ -200,7 +195,6 @@ object Exact {
     */
   def fanoutBy(df: org.apache.spark.sql.DataFrame,
       keys: Column*): org.apache.spark.sql.DataFrame = {
-    if (!fanoutEnabled) return df
     val sc = df.sparkSession.sparkContext
     if (df.queryExecution.toRdd.getNumPartitions < sc.defaultParallelism)
       df.repartition(sc.defaultParallelism, keys: _*)

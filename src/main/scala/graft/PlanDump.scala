@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Per-query formatted-plan dump for optimization evidence — NOT part of
@@ -22,20 +21,15 @@ object PlanDump {
     val names = args.drop(3).toSeq
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = Bench.cores(sys.env.get("SPARK_GRAFT_CPUS"))
-    val spark = SparkSession.builder()
-      .appName("graft-plandump").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("graft-plandump")
+    val shape = s"local[${spark.sparkContext.defaultParallelism}], " +
+      s"shuffle=${spark.conf.get("spark.sql.shuffle.partitions")}"
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, d)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      val header = s"# $name @ $d (local[$cpus], shuffle=$cpus) — $suffix\n\n"
+      val header = s"# $name @ $d ($shape) — $suffix\n\n"
       Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), header + plan)
       val exchanges = plan.linesIterator.count(_.contains("Exchange"))
       println(s"[plandump] $name -> ${name}_$suffix.txt (Exchange lines: $exchanges)")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Solo-timing main — NOT part of the driver contract. Times named
   * SparkEntry queries ONE AT A TIME (no concurrency, unlike Verify's
   * 4-way pool, whose timings.json gauge conflates contention with
@@ -24,15 +22,7 @@ object Solo {
       else (2, args.drop(1).toSeq)
     require(names.nonEmpty,
       "usage: graft.Solo <sfDir> [reps] <query> [query ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-solo").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "24g"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("graft-solo")
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val times = names.map { name =>

@@ -25,9 +25,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q03_join_agg")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each registers
+    * graft's functions on its session before building the query: this is
+    * the one registration point for a session graft did not build (the
+    * driver passes in its own).
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.flatMap(_.qs).map(q => q.name -> q.fn).toMap
+    modules.flatMap(_.qs).map { q =>
+      q.name -> { (s: SparkSession, d: String) =>
+        graft.functions.GraftFunctions.register(s)
+        q.fn(s, d)
+      }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.

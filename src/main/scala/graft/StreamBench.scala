@@ -78,7 +78,7 @@ object StreamBench {
     val ranked = df.withColumn("__rn", row_number().over(w))
       .withColumn("__chunk", ((col("__rn") - 1L) / per).cast("int"))
       .drop("__rn")
-    val staging = java.nio.file.Files.createTempDirectory("graft_sb_stage").toString
+    val staging = s"${dir}_stage"
     new java.io.File(dir).mkdirs()
     val base = 1700000000000L
     (0 until chunks).foreach { i =>
@@ -108,11 +108,11 @@ object StreamBench {
     * readout: with a TTL the final batch's state reflects only keys
     * still active inside the TTL horizon.
     */
-  private def run(spark: SparkSession, collector: Collector,
+  private def run(root: String, collector: Collector,
       out: DataFrame, mode: String): Meas = {
     val q = out.writeStream.format("noop").outputMode(mode)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_sb_ckpt").toString)
+        java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(root), "ckpt").toString)
       .start()
     val id = q.id
     try {
@@ -136,19 +136,26 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val d = args(0)
     val chunks = if (args.length > 1) args(1).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-stream-bench").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
+    val spark = Session.local("graft-stream-bench")
     val collector = new Collector
     spark.streams.addListener(collector)
 
+    // the fabricated feeds, their staging and every checkpoint live under
+    // root, which is deleted however the run ends
     val root = java.nio.file.Files.createTempDirectory("graft_sb").toString
+    try bench(spark, collector, root, d, chunks)
+    finally {
+      import scala.jdk.CollectionConverters._
+      val paths = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try paths.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists)
+      finally paths.close()
+      spark.stop()
+    }
+  }
+
+  private def bench(spark: SparkSession, collector: Collector, root: String,
+      d: String, chunks: Int): Unit = {
+    import spark.implicits._
 
     // feed 1: events as CdcEvent (scd2/cdc/gap-fill/funnel/growth/
     // late/transitions/kmv all read this shape)
@@ -184,29 +191,29 @@ object StreamBench {
       .option("maxFilesPerTrigger", "1").parquet(ewmaDir)
 
     val results = scala.collection.mutable.LinkedHashMap[String, Meas]()
-    results("st_window_agg") = run(spark, collector,
+    results("st_window_agg") = run(root, collector,
       Streaming.windowAggStream(cdcStream()), "append")
-    results("st_sliding_distinct_kmv") = run(spark, collector,
+    results("st_sliding_distinct_kmv") = run(root, collector,
       Streaming.kmvStream(cdcStream().as[Streaming.KmvEvent], 64).toDF(), "update")
-    results("st_scd2") = run(spark, collector,
+    results("st_scd2") = run(root, collector,
       Streaming.scd2Stream(cdcStream().as[Streaming.CdcEvent]).toDF(), "update")
-    results("st_cdc") = run(spark, collector,
+    results("st_cdc") = run(root, collector,
       Streaming.cdcStream(cdcStream().as[Streaming.CdcEvent]).toDF(), "update")
-    results("st_gap_fill") = run(spark, collector,
+    results("st_gap_fill") = run(root, collector,
       Streaming.gapFillStream(cdcStream().as[Streaming.CdcEvent]).toDF(), "update")
-    results("q44_funnel_stream") = run(spark, collector,
+    results("q44_funnel_stream") = run(root, collector,
       Streaming.funnelStream(cdcStream().as[Streaming.CdcEvent]).toDF(), "update")
-    results("q129_growth_stream") = run(spark, collector,
+    results("q129_growth_stream") = run(root, collector,
       Streaming.growthStream(cdcStream().as[Streaming.CdcEvent]).toDF(), "append")
-    results("q62_late_stream") = run(spark, collector,
+    results("q62_late_stream") = run(root, collector,
       Streaming.lateStream(cdcStream()
         .select(col("event_id"), col("ts"), col("user_id"))
         .as[Streaming.LateEvent]).toDF(), "append")
-    results("q65_transitions_stream") = run(spark, collector,
+    results("q65_transitions_stream") = run(root, collector,
       Streaming.transitionsStream(cdcStream()
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
         .as[Streaming.TransEvent]).toDF(), "append")
-    results("q58_ewma_stream") = run(spark, collector,
+    results("q58_ewma_stream") = run(root, collector,
       Streaming.ewmaStream(ewmaStream().as[Streaming.EwmaEvent]).toDF(), "append")
     // eviction variants: same twins, idle keys (no activity for 180
     // event-time days) evicted — the dormant-key ceiling vs the
@@ -215,11 +222,11 @@ object StreamBench {
     // demonstrates the ACTIVE-set bound (returning dormant keys
     // restart — documented semantics, spec-pinned on the planted case).
     val ttlMs = 180L * 86400000L
-    results("q58_ewma_stream_ttl") = run(spark, collector,
+    results("q58_ewma_stream_ttl") = run(root, collector,
       Streaming.ewmaStream(
         ewmaStream().withWatermark("ts", "1 minute").as[Streaming.EwmaEvent],
         Some(ttlMs)).toDF(), "append")
-    results("q65_transitions_stream_ttl") = run(spark, collector,
+    results("q65_transitions_stream_ttl") = run(root, collector,
       Streaming.transitionsStream(cdcStream()
         .withWatermark("ts", "1 minute")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
@@ -228,10 +235,5 @@ object StreamBench {
     val body = results.map { case (k, m) => s""""$k":${m.json}""" }
       .mkString("{", ",", "}")
     println(s"""{"mode":"stream_bench","sf":"$d","chunks":$chunks,"data_fp":"${DataFp.of(d)}","twins":$body}""")
-    // cleanup the fabricated feed
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
-      .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    spark.stop()
   }
 }

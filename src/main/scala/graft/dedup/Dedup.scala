@@ -69,7 +69,6 @@ object Dedup {
   def minhashSig(docs: DataFrame, textCol: String, idCol: String,
       k: Int = 5, numHashes: Int = 64): DataFrame = {
     require(numHashes == 64, "graft_minhash_agg is registered with 64 permutations")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     graft.Exact.fanout(docs)
       .select(col(idCol),
         explode(call_function("graft_shingle_hashes", col(textCol), lit(k))).as("x"))
@@ -156,7 +155,6 @@ object Dedup {
     * re-evaluation).
     */
   def simhash(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val exploded = graft.Exact.fanout(df)
       .select(col(idCol), explode(split(col(textCol), " ")).as("t"))
       .filter(length(col("t")) > 0) // empty tokens (trailing spaces) vote nothing

@@ -487,7 +487,6 @@ object DedupD extends Module {
   private val ddWinnowPairs = Q(
     "dd_winnow_pairs",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // materialize the fingerprint table once (localCheckpoint): the
       // df-filter and both self-join sides reuse it instead of
       // re-winnowing the corpus three more times — at scale this is the

@@ -567,12 +567,12 @@ object GraftFunctions {
       new ExpressionInfo(classOf[StopCounts].getName, "graft_stop_counts"),
       (args: Seq[Expression]) => StopCounts(args.head)))
 
-  /** Sessions already registered — builders call register() on every
-    * query invocation (hundreds of times per bench/verify session), and
-    * each call re-registered all ~15 functions, logging a WARN per
-    * function per call and doing redundant registry writes. Registration
-    * is idempotent, so remember it per session (weak keys: a closed
-    * session must not be pinned).
+  /** Sessions already registered — the `SparkEntry.queries` boundary
+    * calls register() on every query invocation (hundreds of times per
+    * bench/verify session), and each call re-registered all ~15
+    * functions, logging a WARN per function per call and doing redundant
+    * registry writes. Registration is idempotent, so remember it per
+    * session (weak keys: a closed session must not be pinned).
     *
     * The registration itself runs INSIDE computeIfAbsent — a
     * synchronizedMap executes the mapping function while holding the

@@ -17,7 +17,6 @@ object Kmv {
     * One partial-aggregable shuffle; O(k) state per group.
     */
   def sketches(df: DataFrame, g: String, v: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // 63-bit positive hash; xxhash64 is Spark-native and stable
     val h = expr(s"xxhash64($v) & 9223372036854775807")
     df.select(col(g), h.as("h"))
@@ -60,7 +59,6 @@ object Kmv {
     * from sketches forever after.
     */
   def rollup(fine: DataFrame, coarse: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(fine.sparkSession)
     fine.select(col(coarse), explode(col("mins")).as("h"))
       .groupBy(col(coarse))
       .agg(call_function("graft_kmv_agg", col("h"), lit(k)).as("mins"))

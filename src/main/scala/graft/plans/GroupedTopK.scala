@@ -178,7 +178,8 @@ case class FinalTopKExec(group: Seq[Expression], order: Seq[SortOrder],
 }
 
 /** Public API. The planner strategy is installed by
-  * `GraftFunctions.register` (or injected by GraftExtensions).
+  * `GraftFunctions.register` (which `Session.local` and the
+  * `SparkEntry.queries` boundary call) or injected by GraftExtensions.
   */
 object GraftOps {
 
@@ -193,7 +194,6 @@ object GraftOps {
       tieCol: String, k: Int, ascending: Boolean = false): DataFrame = {
     require(k > 0, "k must be positive")
     val spark = df.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute = analyzed.output
       .find(_.name == n)

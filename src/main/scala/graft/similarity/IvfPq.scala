@@ -53,8 +53,6 @@ object IvfPq {
   def buildIndex(corpus: DataFrame, idCol: String, embCol: String,
       nClusters: Int, m: Int, ksub: Int, path: String, seed: Long = 42L,
       maxTrainRows: Long = 10000L): IvfPqIndex = {
-    val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val trainRaw = Similarity.boundedTrainSample(corpus, embCol, maxTrainRows, seed)
     val centroids = Pq.kmeansSub(trainRaw, nClusters, seed)
     val books = Pq.trainBooks(trainRaw.map(Pq.normalize), m, ksub, seed)
@@ -74,7 +72,6 @@ object IvfPq {
       embCol: String, k: Int, nProbe: Int, candMult: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val qRows = queries.select(col(idCol), col(embCol)).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
     // per query: nProbe nearest cells + the ADC table over the codebooks

@@ -128,7 +128,6 @@ object Pq {
       maxTrainRows: Long = 10000L): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
 
     // build: bounded seeded sample → per-subspace codebooks (driver)
     val books = trainBooks(

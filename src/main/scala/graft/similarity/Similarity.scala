@@ -21,8 +21,8 @@ object Similarity {
 
   /** Exact long dot product via the custom codegen expression
     * [[graft.functions.DotLong]] (tight primitive loop, no intermediate
-    * zip array per row). Callers must have registered GraftFunctions —
-    * [[withQuantized]] does.
+    * zip array per row). Needs graft's functions on the session, which
+    * `Session.local` and the `SparkEntry.queries` boundary register.
     */
   private def dotL(a: Column, b: Column): Column =
     call_function("graft_dot_long", a, b)
@@ -56,7 +56,6 @@ object Similarity {
 
   /** Adds `qvec` (quantized) and `qnorm` (exact |qvec|²) columns. */
   def withQuantized(df: DataFrame, embCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("qvec", quantized(col(embCol)))
       .withColumn("qnorm", dotL(col("qvec"), col("qvec")))
   }
@@ -148,8 +147,8 @@ object Similarity {
 
   /** Sign-LSH bucket id from nBits hyperplane sign bits, computed by the
     * single-pass codegen expression [[graft.functions.DotPlanes]] (planes
-    * flattened row-major into one literal). Callers must have registered
-    * GraftFunctions — [[withQuantized]] does.
+    * flattened row-major into one literal). Needs graft's functions on
+    * the session, as [[dotL]] does.
     */
   def lshBucket(embCol: Column, planes: Seq[Seq[Double]]): Column =
     call_function("graft_dot_planes", embCol, typedLit(planes.flatten))

@@ -56,7 +56,6 @@ object TextF extends Module {
     * prediction — shared by tx_lang_id and tx_lang_confusion.
     */
   private def langScored(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     var df = Tables.documents(s, d).withColumn("__sc", stopCounts)
     for ((lang, _) <- stopwords)
       df = df.withColumn(s"s_$lang", col("__sc").getItem(langSlot(lang)))
@@ -136,7 +135,6 @@ object TextF extends Module {
   private val txQuality = Q(
     "tx_quality",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .withColumn("__sc", stopCounts)
         .withColumn("n_c", length(col("text")).cast("long"))
@@ -211,7 +209,6 @@ object TextF extends Module {
   private val txFingerprint = Q(
     "tx_fingerprint",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"),
           md5(col("text")).as("md5_hex"),
@@ -318,7 +315,6 @@ object TextF extends Module {
       // fanout: the per-row bigram array + distinct is the same heavy
       // per-row class as tx_repetition — don't let the testdata
       // parquet's row-group count cap the scan's parallelism
-      graft.functions.GraftFunctions.register(s)
       graft.Exact.fanout(Tables.documents(s, d))
         .withColumn("n_w", size(words).cast("long"))
         .withColumn("n_punct",
@@ -377,7 +373,6 @@ object TextF extends Module {
   private val txBudgetSample = Q(
     "tx_budget_sample",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val scored = Tables.documents(s, d)
         .withColumn("__sc", stopCounts)
         .withColumn("n_c", length(col("text")).cast("long"))
@@ -645,7 +640,6 @@ object TextF extends Module {
   private val txNormalize = Q(
     "tx_normalize",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"),
           trim(regexp_replace(
@@ -670,7 +664,6 @@ object TextF extends Module {
   private val txWinnow = Q(
     "tx_winnow",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"),
           explode(call_function("graft_winnow", col("text"), lit(5), lit(8))).as("fp"))
@@ -811,7 +804,6 @@ object TextF extends Module {
   private val txHashFeatures = Q(
     "tx_hash_features",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"), explode(tokens).as("t"))
         .filter(length(col("t")) > 0)

@@ -66,13 +66,23 @@ class BenchContractSpec extends AnyFunSuite {
     assert(DataFp.of(dir.toString) === before, "non-parquet files must not count")
   }
 
+  private val malformed = Seq(None, Some("*"), Some(""), Some("0"), Some("-4"),
+    Some("4.5"), Some("abc"), Some("99999999999"))
+
   test("cores: a positive SPARK_GRAFT_CPUS wins, anything else means this machine's") {
     val machine = Runtime.getRuntime.availableProcessors()
-    assert(Bench.cores(Some("8")) === 8)
-    assert(Bench.cores(Some(" 3 ")) === 3)
-    Seq(None, Some("*"), Some(""), Some("0"), Some("-4"), Some("4.5"), Some("abc"),
-        Some("99999999999")).foreach { raw =>
-      assert(Bench.cores(raw) === machine, s"SPARK_GRAFT_CPUS=$raw")
+    assert(Session.cores(Some("8")) === 8)
+    assert(Session.cores(Some(" 3 ")) === 3)
+    malformed.foreach { raw =>
+      assert(Session.cores(raw) === machine, s"SPARK_GRAFT_CPUS=$raw")
+    }
+  }
+
+  test("shuffle: a positive SPARK_GRAFT_SHUFFLE wins, anything else means the core count") {
+    assert(Session.shuffle(Some("257"), 4) === 257)
+    assert(Session.shuffle(Some(" 7 "), 4) === 7)
+    malformed.foreach { raw =>
+      assert(Session.shuffle(raw, 4) === 4, s"SPARK_GRAFT_SHUFFLE=$raw")
     }
   }
 

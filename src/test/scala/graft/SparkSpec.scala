@@ -20,6 +20,9 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // once, as Session.local does: library helpers called directly by
+    // the specs no longer register graft's functions themselves
+    graft.functions.GraftFunctions.register(s)
     s
   }
 }

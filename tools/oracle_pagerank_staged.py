@@ -5,9 +5,7 @@ The single-statement oracle SQL (SparkEntry.oracleSql["q98_pagerank"])
 is what the driver runs at sf0.01. At sf10+ two things break the
 one-statement form on this box: DuckDB retains each MATERIALIZED
 iteration's spilled temp until the whole statement finishes, and the
-items-self-join edge build alone needs a ~550M-row hash join at sf100
-(the same blowup that moved q94/q113/graph_kcore to
-tools/oracle_basketpairs_staged.py).
+items-self-join edge build alone needs a ~550M-row hash join at sf100.
 
 This script replays the IDENTICAL computation resource-bounded:
 
