@@ -59,8 +59,8 @@ object Bench {
     // ratio + per-query valid sample counts, so a still-dirty run (or a
     // plan with genuinely bimodal latency, which no amount of retrying
     // certifies) is visible as such rather than as a regression.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
-    val maxReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_REPS", "25").toInt
+    val reps = Session.positive(sys.env.get("SPARK_GRAFT_BENCH_REPS"), 5)
+    val maxReps = Session.positive(sys.env.get("SPARK_GRAFT_BENCH_MAX_REPS"), 25)
     val samples = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     def oneRound(): Unit = headline.foreach { name =>

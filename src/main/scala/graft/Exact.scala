@@ -156,6 +156,28 @@ object Exact {
       s" + CAST((($e) // 4294967296) % 4294967296 AS DOUBLE) * CAST(4294967296 AS DOUBLE)" +
       s" + CAST(($e) % 4294967296 AS DOUBLE))"
 
+  /** The Z-mod-p prime (1e9+7) of the split and sampling hash [[zmod]]. */
+  val ZmodP: Long = 1000000007L
+
+  /** Deterministic hash bucket of an integer key: (k mod p)·654435747 mod
+    * p mod n, with p = 1e9+7 (654435747 is 2654435761 mod p). (k mod p) ·
+    * 654435747 stays < 7e17, so it is overflow-free int64 in both
+    * engines at any key magnitude — a raw k·2654435761 wraps Long in
+    * Spark at k ≈ 3.5e9 while DuckDB promotes toward HUGEINT, so a split
+    * would diverge exactly at scale. Injective for keys < p (coprime
+    * multiplier), and `zmod(k, ZmodP)` is the full hash. Every hash
+    * split, sample gate, fold and shard goes through this, its SQL twin
+    * [[sqlZmod]] or its typed twin below.
+    */
+  def zmod(key: Column, n: Long): Column =
+    key % lit(ZmodP) * lit(654435747L) % lit(ZmodP) % lit(n)
+
+  def sqlZmod(expr: String, n: Long): String =
+    s"(($expr) % $ZmodP * 654435747 % $ZmodP % $n)"
+
+  /** [[zmod]] on a JVM `Long`, for typed Dataset code. */
+  def zmod(key: Long, n: Long): Long = key % ZmodP * 654435747L % ZmodP % n
+
   /** Ditto for product-magnitude inputs. */
   def sumdw(c: Column): Column = sum(d6w(c)).cast("double")
 
@@ -246,8 +268,7 @@ object Exact {
     * all C(b,2) in-basket pairs come from a codegen transform/slice
     * expression (baskets are order-line bounded — ~4-7 items — so pair
     * fanout is linear in orders, never |items|²), then ONE shuffle on
-    * (pk_a, pk_b) at a widened partition count (conf
-    * `spark.graft.pair.partitions`, default 8 × shuffle.partitions):
+    * (pk_a, pk_b) at a widened partition count (8 × shuffle.partitions):
     * the pair keyspace is near-unique, so map-side combine buys
     * nothing and the fix for the r12 OOM is smaller final hash tables,
     * not partial aggregation. sort_array upstream guarantees
@@ -259,10 +280,8 @@ object Exact {
     val pairs = flatten(transform(bk, (x, i) =>
       transform(slice(bk, i + lit(2), size(bk) - i - lit(1)),
         y => struct(x.as("pk_a"), y.as("pk_b")))))
-    val pairParts = baskets.sparkSession.conf
-      .getOption("spark.graft.pair.partitions").map(_.toInt)
-      .getOrElse(8 * baskets.sparkSession.conf
-        .get("spark.sql.shuffle.partitions", "200").toInt)
+    val pairParts = 8 * baskets.sparkSession.conf
+      .get("spark.sql.shuffle.partitions", "200").toInt
     baskets.select(explode(pairs).as("p"))
       .select(col("p.pk_a").as("pk_a"), col("p.pk_b").as("pk_b"))
       .repartition(pairParts, col("pk_a"), col("pk_b"))
@@ -281,6 +300,9 @@ object Exact {
     * reliable `checkpoint()` instead — recomputable from durable storage
     * after executor loss. Both modes produce identical results
     * (CheckpointModeSpec pins connectedComponents + pagerank).
+    * `eager = false` makes a LAZY checkpoint (same lineage truncation
+    * and one-shot reuse, computed under the first action instead of at
+    * build time — AQE still runs the plan's shuffle stages).
     *
     * Retention: reliable checkpoints persist for the SparkContext
     * lifetime by default, and the iterative operators (pagerank ×15,
@@ -303,12 +325,6 @@ object Exact {
     // driver actions in a builder.
     if (spark.conf.getOption("spark.graft.checkpoint.disable")
         .exists(_.toBoolean)) return df
-    // `spark.graft.checkpoint.eager=false` demotes every materialization
-    // point to a LAZY checkpoint (same lineage truncation + one-shot
-    // reuse, but computed under the first action instead of at build
-    // time — caveat: AQE still runs the plan's shuffle stages).
-    val eagerMode = eager &&
-      spark.conf.getOption("spark.graft.checkpoint.eager").forall(_.toBoolean)
     val dir = spark.conf.getOption("spark.graft.checkpoint.dir")
       .orElse(sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")).filter(_.nonEmpty)
     dir match {
@@ -332,8 +348,8 @@ object Exact {
           else parent.getFileSystem(hconf).makeQualified(parent).toString
         }
         if (!cur.contains(want)) sc.setCheckpointDir(d)
-        df.checkpoint(eagerMode)
-      case None => df.localCheckpoint(eagerMode)
+        df.checkpoint(eager)
+      case None => df.localCheckpoint(eager)
     }
   }
 

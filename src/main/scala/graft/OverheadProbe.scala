@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 object OverheadProbe {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val reps = if (args.length > 1) args(1).toInt else 5
+    val reps = Session.positive(args.lift(1), 5)
     val spark = Session.local("graft-overhead-probe")
 
     def time(body: => Unit): Double = {

@@ -11,16 +11,26 @@ object Session {
 
   /** Cores for `local[n]`: `raw` (SPARK_GRAFT_CPUS) if a positive integer, else the machine's. */
   def cores(raw: Option[String]): Int =
-    positive(raw).getOrElse(Runtime.getRuntime.availableProcessors())
+    positive(raw, Runtime.getRuntime.availableProcessors())
 
   /** Shuffle partitions: `raw` (SPARK_GRAFT_SHUFFLE) if a positive integer,
     * else `cores`. Decoupling the two lets `tools/shape_sweep.py` prove
     * results identical on any cluster shape.
     */
-  def shuffle(raw: Option[String], cores: Int): Int = positive(raw).getOrElse(cores)
+  def shuffle(raw: Option[String], cores: Int): Int = positive(raw, cores)
 
-  private def positive(raw: Option[String]): Option[Int] =
-    raw.flatMap(_.trim.toIntOption).filter(_ > 0)
+  /** `raw` if it is a positive integer, else `default`: the one rule for
+    * every count a main reads from env or argv (cores, partitions, reps,
+    * chunks). Zero, negatives, fractions, overflow and junk all mean
+    * the default.
+    */
+  def positive(raw: Option[String], default: Int): Int =
+    raw.flatMap(_.trim.toIntOption).filter(_ > 0).getOrElse(default)
+
+  /** `raw` if it is a finite non-negative number, else `default`. */
+  def nonNegative(raw: Option[String], default: Double): Double =
+    raw.flatMap(_.trim.toDoubleOption).filter(x => x >= 0.0 && !x.isInfinite)
+      .getOrElse(default)
 
   def local(app: String): SparkSession = {
     val n = cores(sys.env.get("SPARK_GRAFT_CPUS"))

@@ -14,11 +14,10 @@ object Solo {
     require(args.length >= 2,
       "usage: graft.Solo <sfDir> [reps] <query> [query ...]")
     val d = args(0)
-    // reps is a NON-EMPTY all-digits token (query names are never
-    // all-digits); "".forall(_.isDigit) is vacuously true, so the
-    // nonEmpty check keeps an empty arg from parsing as reps
+    // an all-digits second arg is the rep count (query names never are);
+    // zero or an overflowing count means the default, as for every count
     val (reps, names) =
-      if (args(1).matches("\\d+")) (args(1).toInt, args.drop(2).toSeq)
+      if (args(1).matches("\\d+")) (Session.positive(Some(args(1)), 2), args.drop(2).toSeq)
       else (2, args.drop(1).toSeq)
     require(names.nonEmpty,
       "usage: graft.Solo <sfDir> [reps] <query> [query ...]")

@@ -135,7 +135,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val chunks = if (args.length > 1) args(1).toInt else 16
+    val chunks = Session.positive(args.lift(1), 16)
     val spark = Session.local("graft-stream-bench")
     val collector = new Collector
     spark.streams.addListener(collector)

@@ -109,7 +109,7 @@ object Verify {
     val spark = Session.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     val headroomBytes =
-      (sys.env.getOrElse("SPARK_GRAFT_VERIFY_HEADROOM_GB", "10").toDouble * 1e9).toLong
+      (Session.nonNegative(sys.env.get("SPARK_GRAFT_VERIFY_HEADROOM_GB"), 10.0) * 1e9).toLong
     val force = sys.env.get("SPARK_GRAFT_VERIFY_FORCE").contains("1")
     // run queries on a small thread pool: Spark's scheduler interleaves
     // the jobs and the long ML fits overlap the cheap relational dumps

@@ -7,7 +7,7 @@ import org.apache.spark.ml.classification.{GBTClassifier, LogisticRegression}
 
 import org.apache.spark.ml.feature.{IndexToString, StandardScaler, StringIndexer, VectorAssembler}
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,6 +21,9 @@ import org.apache.spark.sql.functions._
   */
 object MlC extends Module {
 
+  /** The market segments [[customerFeatures]] one-hot encodes. */
+  private val segments = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
+
   /** Feature frame: per-customer behavior + one-hot segment; binary label
     * `DEFAULT_FLAG` analog = negative account balance.
     */
@@ -30,8 +33,7 @@ object MlC extends Module {
     val byCust = o.groupBy(col("o_custkey"))
       .agg(count(lit(1)).cast("double").as("n_orders"),
         sumd(col("o_totalprice")).as("total_spend"))
-    val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-    val oneHots = segs.map(v =>
+    val oneHots = segments.map(v =>
       when(col("c_mktsegment") === v, 1.0).otherwise(0.0).as(s"seg_$v"))
     c.join(byCust, col("c_custkey") === col("o_custkey"), "left")
       .na.fill(0.0, Seq("n_orders", "total_spend"))
@@ -41,8 +43,37 @@ object MlC extends Module {
         when(col("c_acctbal") < 0, 1.0).otherwise(0.0).as("label")) ++ oneHots: _*)
   }
 
-  private val featCols = Array("nation", "n_orders", "total_spend", "avg_spend",
-    "seg_AUTOMOBILE", "seg_BUILDING", "seg_FURNITURE", "seg_HOUSEHOLD", "seg_MACHINERY")
+  /** DuckDB twin of [[customerFeatures]]: the `bc` (per-customer orders)
+    * and `cf` (feature frame) CTEs every oracle over the features starts
+    * from. Every CTE in these oracles carries DuckDB's MATERIALIZED
+    * hint: without it the oracle engine inlined ml_mutual_info's chain
+    * into a plan that spilled >100 GB at sf10 on 159 groups — a pure
+    * planner pathology; semantics are identical either way.
+    */
+  private val customerFeaturesSql: String = {
+    val oneHots = segments.map(v =>
+      s"CASE WHEN c_mktsegment = '$v' THEN 1.0 ELSE 0.0 END AS seg_$v")
+    s"""bc AS MATERIALIZED (
+       |  SELECT o_custkey, CAST(COUNT(*) AS DOUBLE) AS n_orders,
+       |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_spend
+       |  FROM orders GROUP BY 1),
+       |cf AS MATERIALIZED (
+       |  SELECT c_custkey,
+       |    CAST(c_nationkey AS DOUBLE) AS nation,
+       |    COALESCE(n_orders, 0.0) AS n_orders,
+       |    COALESCE(total_spend, 0.0) AS total_spend,
+       |    COALESCE(total_spend, 0.0) / GREATEST(COALESCE(n_orders, 0.0), 1.0) AS avg_spend,
+       |    CASE WHEN c_acctbal < 0 THEN 1 ELSE 0 END AS label,
+       |    ${oneHots.mkString(",\n    ")}
+       |  FROM customer LEFT JOIN bc ON c_custkey = o_custkey)""".stripMargin
+  }
+
+  private val featCols = Array("nation", "n_orders", "total_spend", "avg_spend") ++
+    segments.map(v => s"seg_$v")
+
+  /** The continuous [[featCols]], and the discrete rest. */
+  private val continuous = Seq("n_orders", "total_spend", "avg_spend")
+  private val discrete = featCols.toSeq.filterNot(continuous.contains)
 
   private def assembler = new VectorAssembler()
     .setInputCols(featCols).setOutputCol("features")
@@ -67,7 +98,7 @@ object MlC extends Module {
   private[graft] def fitFrame(s: SparkSession, d: String): DataFrame =
     assembler.transform(customerFeatures(s, d)).graftCheckpoint()
 
-  /** Map `xs` through `f` on a bounded driver thread pool (the
+  /** Map `xs` through `f` on a bounded 6-thread driver pool (the
     * CrossValidator `parallelism` discipline): the ML operators'
     * wall time is dominated by driver-synchronized MLlib job
     * round-trips, and independent seeded fits/scoring passes can
@@ -76,10 +107,10 @@ object MlC extends Module {
     * form on any cluster shape. Only use for element computations
     * that are independent (no cross-element mutable state).
     */
-  private def inPool[A, B](xs: Seq[A], threads: Int = 6)(f: A => B): Seq[B] = {
+  private def inPool[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       val fs = xs.map(x => Future(f(x)))
@@ -161,13 +192,64 @@ object MlC extends Module {
       new ExactAucEvaluator(uid)
   }
 
-  /** Deterministic 80/20 hash split (same overflow-free Z-mod-p recipe
-    * as q18 — a raw key*2654435761 would wrap Long at key ≈ 3.5e9).
+  /** Deterministic 80/20 hash split on the overflow-free Z-mod-p
+    * bucket [[graft.Exact.zmod]].
     */
   private def split(df: DataFrame): (DataFrame, DataFrame) = {
-    val bucket = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) % lit(1000000007L) % 1000
+    val bucket = zmod(col("c_custkey"), 1000L)
     (df.filter(bucket < 800), df.filter(bucket >= 800))
   }
+
+  /** `df` with the seeded hash 3-fold column `fold` of ml_search,
+    * ml_search_adaptive and ml_model_panel: fold membership is identical
+    * on any cluster shape.
+    */
+  private def withFolds(df: DataFrame): DataFrame =
+    df.withColumn("fold", pmod(xxhash64(col("c_custkey"), lit(42L)), lit(3L)))
+
+  /** Fold `f` of a [[withFolds]] frame scored by a copy of `est` fit on
+    * the other folds. The copy lets folds fit concurrently: Estimator.fit
+    * is not documented thread-safe on a shared instance (CrossValidator
+    * also fits per-copy).
+    */
+  private def foldPredictions(est: org.apache.spark.ml.Estimator[_], df: DataFrame,
+      f: Int): DataFrame =
+    est.copy(org.apache.spark.ml.param.ParamMap.empty)
+      .fit(df.filter(col("fold") =!= f))
+      .asInstanceOf[org.apache.spark.ml.Transformer]
+      .transform(df.filter(col("fold") === f))
+
+  /** Confusion counts (n, tp, fp, fn, tn) of the 0/1 `label` against the
+    * predicted-positive condition `pos`, per group of `g`. n counts
+    * every row; a row whose `pos` is NULL falls on neither side, so n
+    * may exceed tp + fp + fn + tn.
+    */
+  private def confusion(g: RelationalGroupedDataset, pos: Column): DataFrame = {
+    def cell(label: Double, p: Column) =
+      sum(when(col("label") === label && p, 1L).otherwise(0L))
+    g.agg(count(lit(1)).as("n"), cell(1.0, pos).as("tp"), cell(0.0, pos).as("fp"),
+      cell(1.0, !pos).as("fn"), cell(0.0, !pos).as("tn"))
+  }
+
+  /** [[confusion]] of the scored hold-out at the 21 thresholds
+    * thr = 0, 0.05, …, 1 (positive: prob_1 >= thr) in ONE pass: the
+    * thresholds are a broadcast literal spine and the counts
+    * partial-aggregate per threshold, so the scan doesn't repeat per
+    * point. ml_threshold_sweep, ml_cost_threshold and ml_ks_separation
+    * all read this surface.
+    */
+  private def thresholdSurface(preds: DataFrame): DataFrame = {
+    val thr = preds.sparkSession.range(0, 21)
+      .select((col("id").cast("double") / 20.0).as("thr"))
+    confusion(preds.crossJoin(broadcast(thr)).groupBy(col("thr")),
+      col("prob_1") >= col("thr"))
+  }
+
+  /** num / den, or 0 when the non-negative `den` is 0 (sklearn's
+    * zero_division=0).
+    */
+  private def safeDiv(num: Column, den: Column): Column =
+    when(den > 0.0, num / den).otherwise(lit(0.0))
 
   /** Held-out predictions of the flagship logistic model — shared by
     * ml_logreg (the dump) and ml_report (the metric surface).
@@ -332,18 +414,11 @@ object MlC extends Module {
     */
   private[graft] def searchTrials(s: SparkSession, d: String, prune: Boolean)
       : (Seq[(Long, String, Option[Double], Option[Double], Option[Long], Double, Boolean)], Int) = {
-    val df = fitFrame(s, d)
-      .withColumn("fold", pmod(xxhash64(col("c_custkey"), lit(42L)), lit(3L)))
+    val df = withFolds(fitFrame(s, d))
     val fits = new java.util.concurrent.atomic.AtomicInteger(0)
     def foldScore(est: org.apache.spark.ml.Estimator[_], f: Int): Double = {
       fits.incrementAndGet()
-      // fit a per-call copy: folds 1/2 of one trial overlap in the
-      // pool, and Estimator.fit is not documented thread-safe on a
-      // shared instance (CrossValidator also fits per-copy)
-      val m = est.copy(org.apache.spark.ml.param.ParamMap.empty)
-        .fit(df.filter(col("fold") =!= f))
-        .asInstanceOf[org.apache.spark.ml.Transformer]
-      exactAucRaw(m.transform(df.filter(col("fold") === f)))
+      exactAucRaw(foldPredictions(est, df, f))
     }
     val trials = searchTrialSet()
     def median(v: Seq[Double]): Double = {
@@ -413,11 +488,9 @@ object MlC extends Module {
   private[graft] def adaptiveSearchRows(s: SparkSession, d: String)
       : Seq[(Long, String, Option[Double], Option[Double], Option[Long],
           Long, Double, Double, Boolean)] = {
-    val df = fitFrame(s, d)
-      .withColumn("fold", pmod(xxhash64(col("c_custkey"), lit(42L)), lit(3L)))
+    val df = withFolds(fitFrame(s, d))
       // nested budget prefixes: the q18 overflow-free Z-mod-p gate
-      .withColumn("bkt", (col("c_custkey") % lit(1000000007L)) * lit(654435747L)
-        % lit(1000000007L) % lit(1000L))
+      .withColumn("bkt", zmod(col("c_custkey"), 1000L))
     def rungTrain(frac: Double) =
       df.filter(col("fold") =!= 0 && col("bkt") < lit((frac * 1000).toLong))
     def rungScore(t: Trial, frac: Double): Double = {
@@ -429,13 +502,8 @@ object MlC extends Module {
       // same starved-fold convention as the rungs (r8 ADVICE): a
       // single-class training fold at a tiny SF scores 0.5 flat instead
       // of throwing inside fit — degradation stays deterministic
-      val train = df.filter(col("fold") =!= f)
-      if (train.select(col("label")).distinct().count() < 2) 0.5
-      else {
-        val m = t.est.fit(train)
-          .asInstanceOf[org.apache.spark.ml.Transformer]
-        exactAucRaw(m.transform(df.filter(col("fold") === f)))
-      }
+      if (df.filter(col("fold") =!= f).select(col("label")).distinct().count() < 2) 0.5
+      else exactAucRaw(foldPredictions(t.est, df, f))
     }.sum / 3.0
     val out = scala.collection.mutable.ArrayBuffer[(Long, String, Option[Double],
       Option[Double], Option[Long], Long, Double, Double, Boolean)]()
@@ -484,16 +552,7 @@ object MlC extends Module {
   private val mlReport = Q(
     "ml_report",
     (s, d) => {
-      val zero = lit(0.0)
-      def safeDiv(num: Column, den: Column): Column =
-        when(den > 0.0, num / den).otherwise(zero)
-      logregPredictions(s, d)
-        .agg(
-          count(lit(1)).as("n"),
-          sum(when(col("label") === 1.0 && col("prediction") === 1.0, 1L).otherwise(0L)).as("tp"),
-          sum(when(col("label") === 0.0 && col("prediction") === 1.0, 1L).otherwise(0L)).as("fp"),
-          sum(when(col("label") === 1.0 && col("prediction") === 0.0, 1L).otherwise(0L)).as("fn"),
-          sum(when(col("label") === 0.0 && col("prediction") === 0.0, 1L).otherwise(0L)).as("tn"))
+      confusion(logregPredictions(s, d).groupBy(), col("prediction") === 1.0)
         .select(col("n"), col("tp"), col("fp"), col("fn"), col("tn"),
           ((col("tp") + col("tn")).cast("double") / col("n").cast("double")).as("accuracy"),
           safeDiv(col("tp").cast("double"), (col("tp") + col("fp")).cast("double")).as("precision_1"),
@@ -530,9 +589,8 @@ object MlC extends Module {
           when(col("majority") === 1, lit(1.0)).otherwise(lit(0.0)).as("recall_1"))
         .select(col("n"), col("pos"), col("majority"), col("accuracy"),
           col("precision_1"), col("recall_1"),
-          when(col("precision_1") + col("recall_1") > 0.0,
-            lit(2.0) * col("precision_1") * col("recall_1") / (col("precision_1") + col("recall_1")))
-            .otherwise(lit(0.0)).as("f1_1"))
+          safeDiv(lit(2.0) * col("precision_1") * col("recall_1"),
+            col("precision_1") + col("recall_1")).as("f1_1"))
     },
     Some("""WITH l AS (
       |  SELECT CASE WHEN o_totalprice > 150000.0 THEN 1 ELSE 0 END AS label FROM orders),
@@ -572,7 +630,7 @@ object MlC extends Module {
     val idx = new StringIndexer().setInputCol("c_mktsegment")
       .setOutputCol("seg_idx").setStringOrderType("alphabetAsc").fit(known)
     val asm = new VectorAssembler()
-      .setInputCols(Array("nation", "n_orders", "total_spend", "avg_spend"))
+      .setInputCols(featCols.filterNot(_.startsWith("seg_")))
       .setOutputCol("features")
     val lr = new LogisticRegression().setMaxIter(20)
       .setLabelCol("seg_idx").setFamily("multinomial")
@@ -654,8 +712,7 @@ object MlC extends Module {
       : (Seq[(Long, Double, Boolean)], DataFrame) = {
     import org.apache.spark.ml.classification.MultilayerPerceptronClassifier
     val (train, test) = split(fitFrame(s, d))
-    val bkt = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) %
-      lit(1000000007L) % lit(1000L)
+    val bkt = zmod(col("c_custkey"), 1000L)
     val fitDf = train.filter(bkt >= 250)
     val valDf = train.filter(bkt < 250)
     val starved = fitDf.select(col("label")).distinct().count() < 2 ||
@@ -766,26 +823,13 @@ object MlC extends Module {
 
   // ml_threshold_sweep — the ROC/PR curve as a table (the reference
   // notebooks' roc_curve plots): confusion counts + precision/recall/fpr
-  // at 21 thresholds, ONE pass over the scored hold-out — thresholds
-  // are a crossJoined literal spine, counts partial-aggregate per
-  // threshold, so the scan doesn't repeat per point. Rows-only (seeded
+  // on the one-pass 21-threshold surface. Rows-only (seeded
   // model); MlSpec asserts monotonicity and reconciliation with
   // ml_report's 0.5 operating point.
   private val mlSweep = Q(
     "ml_threshold_sweep",
     (s, d) => {
-      val preds = logregPredictions(s, d)
-      val thr = preds.sparkSession.range(0, 21)
-        .select((col("id").cast("double") / 20.0).as("thr"))
-      def safeDiv(num: Column, den: Column): Column =
-        when(den === 0.0, 0.0).otherwise(num / den)
-      preds.crossJoin(broadcast(thr))
-        .groupBy(col("thr"))
-        .agg(
-          sum(when(col("prob_1") >= col("thr") && col("label") === 1.0, 1L).otherwise(0L)).as("tp"),
-          sum(when(col("prob_1") >= col("thr") && col("label") === 0.0, 1L).otherwise(0L)).as("fp"),
-          sum(when(col("prob_1") < col("thr") && col("label") === 1.0, 1L).otherwise(0L)).as("fn"),
-          sum(when(col("prob_1") < col("thr") && col("label") === 0.0, 1L).otherwise(0L)).as("tn"))
+      thresholdSurface(logregPredictions(s, d))
         .select(col("thr"), col("tp"), col("fp"), col("fn"), col("tn"),
           safeDiv(col("tp").cast("double"), (col("tp") + col("fp")).cast("double")).as("precision"),
           safeDiv(col("tp").cast("double"), (col("tp") + col("fn")).cast("double")).as("recall"),
@@ -900,16 +944,11 @@ object MlC extends Module {
     (s, d) => {
       val preds = logregPredictions(s, d)
       val slices = customerFeatures(s, d).select(col("c_custkey"), col("nation"))
-      preds.join(slices, "c_custkey")
-        .groupBy(col("nation").cast("int").as("nation"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(when(col("label") === col("prediction"), 1L).otherwise(0L)).as("n_correct"),
-          sum(when(col("label") === 1.0, 1L).otherwise(0L)).as("n_pos"),
-          sum(when(col("label") === 1.0 && col("prediction") === 1.0, 1L).otherwise(0L)).as("tp"),
-          sum(when(col("label") === 0.0 && col("prediction") === 1.0, 1L).otherwise(0L)).as("fp"))
+      confusion(preds.join(slices, "c_custkey").groupBy(col("nation").cast("int").as("nation")),
+          col("prediction") === 1.0)
+        .withColumn("n_pos", col("tp") + col("fn"))
         .select(col("nation"), col("n"), col("n_pos"),
-          (col("n_correct").cast("double") / col("n").cast("double")).as("accuracy"),
+          ((col("tp") + col("tn")).cast("double") / col("n").cast("double")).as("accuracy"),
           when(col("n_pos") > 0L,
             col("tp").cast("double") / col("n_pos").cast("double")).as("tpr"),
           when(col("n") - col("n_pos") > 0L,
@@ -936,9 +975,8 @@ object MlC extends Module {
     (s, d) => {
       import s.implicits._
       val (train, test) = split(fitFrame(s, d))
-      val feats = Seq("n_orders", "total_spend", "avg_spend")
       val eps = 1e-6
-      val rows = feats.map { f =>
+      val rows = continuous.map { f =>
         val fences = graft.operators.Quantiles.exactQuantiles(
           train, Seq(f), (1 to 9).map(_ / 10.0)).map(_._3)
         def bin(df: DataFrame): Map[Long, Long] = {
@@ -960,10 +998,9 @@ object MlC extends Module {
       rows.toDF("feature", "psi").orderBy("feature")
     },
     Some {
-      val feats = Seq("n_orders", "total_spend", "avg_spend")
       // per-feature: train-decile fences via the q07 exact-quantile SQL
       // shape, strict > binning, then the smoothed 10-term PSI sum
-      val arms = feats.map { f =>
+      val arms = continuous.map { f =>
         s"""SELECT '$f' AS feature, ROUND(SUM((pt - pe) * ln(pt / pe)), 9) AS psi FROM (
            |  SELECT GREATEST(CAST(COALESCE(tn.c, 0) AS DOUBLE)
            |      / (SELECT CAST(COUNT(*) AS DOUBLE) FROM tr), 1e-6) AS pt,
@@ -977,7 +1014,7 @@ object MlC extends Module {
            |    SELECT 1 + (SELECT COUNT(*) FROM fences_$f fe WHERE ts.$f > fe.value) AS bin,
            |      COUNT(*) AS c FROM ts GROUP BY 1) te ON bins.bin = te.bin)""".stripMargin
       }
-      val fenceCtes = feats.map { f =>
+      val fenceCtes = continuous.map { f =>
         s"""fences_$f AS MATERIALIZED (
            |  SELECT x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS value
            |  FROM (
@@ -989,19 +1026,10 @@ object MlC extends Module {
            |  JOIN (SELECT $f AS x_lo, ROW_NUMBER() OVER (ORDER BY $f) AS rn_lo FROM tr) lo ON rlo = rn_lo
            |  JOIN (SELECT $f AS x_hi, ROW_NUMBER() OVER (ORDER BY $f) AS rn_hi FROM tr) hi ON rhi = rn_hi)""".stripMargin
       }
-      s"""WITH bc AS (
-         |  SELECT o_custkey, CAST(COUNT(*) AS DOUBLE) AS n_orders,
-         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_spend
-         |  FROM orders GROUP BY 1),
-         |cf AS MATERIALIZED (
-         |  SELECT c_custkey,
-         |    COALESCE(n_orders, 0.0) AS n_orders,
-         |    COALESCE(total_spend, 0.0) AS total_spend,
-         |    COALESCE(total_spend, 0.0) / GREATEST(COALESCE(n_orders, 0.0), 1.0) AS avg_spend,
-         |    (c_custkey % 1000000007) * 654435747 % 1000000007 % 1000 AS bucket
-         |  FROM customer LEFT JOIN bc ON c_custkey = o_custkey),
-         |tr AS MATERIALIZED (SELECT * FROM cf WHERE bucket < 800),
-         |ts AS MATERIALIZED (SELECT * FROM cf WHERE bucket >= 800),
+      val bucket = sqlZmod("c_custkey", 1000L)
+      s"""WITH $customerFeaturesSql,
+         |tr AS MATERIALIZED (SELECT * FROM cf WHERE $bucket < 800),
+         |ts AS MATERIALIZED (SELECT * FROM cf WHERE $bucket >= 800),
          |${fenceCtes.mkString(",\n")}
          |${arms.mkString("\nUNION ALL\n")}
          |ORDER BY feature""".stripMargin
@@ -1045,8 +1073,7 @@ object MlC extends Module {
       val (train, test) = split(fitFrame(s, d))
       val model = new LogisticRegression().setMaxIter(20).setRegParam(0.01).fit(train)
       def auc(df: DataFrame): Double = exactAucRaw(model.transform(df))
-      val bucket = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) %
-        lit(1000000007L) % 64
+      val bucket = zmod(col("c_custkey"), 64L)
       val hashOrd = (col("c_custkey") % lit(998244353L)) * lit(3L) % lit(998244353L)
       val base = auc(test)
       // one trained model, one independent scoring pass per feature —
@@ -1226,8 +1253,7 @@ object MlC extends Module {
     (s, d) => {
       import s.implicits._
       val df = fitFrame(s, d)
-      val bucket = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) %
-        lit(1000000007L) % 1000
+      val bucket = zmod(col("c_custkey"), 1000L)
       val test = df.filter(bucket >= 800)
       // the five nested-prefix fits score the same fixed hold-out and
       // share nothing — overlap them through the pool
@@ -1253,7 +1279,7 @@ object MlC extends Module {
   // ml_cost_threshold — cost-optimal operating point (the business end
   // of ml_threshold_sweep: with asymmetric error costs, WHERE do we cut
   // the score?): expected cost c_fp·FP + c_fn·FN per threshold over the
-  // SAME one-scan confusion surface the sweep builds (c_fp=1, c_fn=5 —
+  // SAME one-scan confusion surface the sweep reads (c_fp=1, c_fn=5 —
   // a missed defaulter costs five false alarms), the argmin flagged
   // with a smallest-threshold tiebreak. Costs are exact integers; only
   // the per-row normalization is IEEE. Rows-only (model-dependent);
@@ -1261,15 +1287,7 @@ object MlC extends Module {
   private val mlCostThreshold = Q(
     "ml_cost_threshold",
     (s, d) => {
-      val preds = logregPredictions(s, d)
-      val thr = preds.sparkSession.range(0, 21)
-        .select((col("id").cast("double") / 20.0).as("thr"))
-      val costs = preds.crossJoin(broadcast(thr))
-        .groupBy(col("thr"))
-        .agg(
-          sum(when(col("prob_1") >= col("thr") && col("label") === 0.0, 1L).otherwise(0L)).as("fp"),
-          sum(when(col("prob_1") < col("thr") && col("label") === 1.0, 1L).otherwise(0L)).as("fn"),
-          count(lit(1)).as("n"))
+      val costs = thresholdSurface(logregPredictions(s, d))
         .withColumn("cost", col("fp") * lit(1L) + col("fn") * lit(5L))
       val w = Window.orderBy(col("cost"), col("thr")) // 21-row surface
       costs
@@ -1324,22 +1342,15 @@ object MlC extends Module {
   // 21-threshold operating grid as ml_threshold_sweep — the banker's
   // one-number discrimination summary next to ml_auc's rank view):
   // KS = max(TPR − FPR) over the grid, with the achieving threshold;
-  // one conditional-aggregate scan of the scored hold-out, argmax on
+  // the sweep's one-scan surface, argmax on
   // the 21-row surface with a smallest-threshold tiebreak. Rows-only;
   // MlSpec reconciles against the sweep's TPR/FPR columns.
   private val mlKs = Q(
     "ml_ks_separation",
     (s, d) => {
-      val preds = logregPredictions(s, d)
-      val thr = preds.sparkSession.range(0, 21)
-        .select((col("id").cast("double") / 20.0).as("thr"))
-      val counts = preds.crossJoin(broadcast(thr))
-        .groupBy(col("thr"))
-        .agg(
-          sum(when(col("prob_1") >= col("thr") && col("label") === 1.0, 1L).otherwise(0L)).as("tp"),
-          sum(when(col("prob_1") >= col("thr") && col("label") === 0.0, 1L).otherwise(0L)).as("fp"),
-          sum(when(col("label") === 1.0, 1L).otherwise(0L)).as("pos"),
-          sum(when(col("label") === 0.0, 1L).otherwise(0L)).as("neg"))
+      val counts = thresholdSurface(logregPredictions(s, d))
+        .withColumn("pos", col("tp") + col("fn"))
+        .withColumn("neg", col("fp") + col("tn"))
         .withColumn("sep", col("tp").cast("double") / col("pos").cast("double") -
           col("fp").cast("double") / col("neg").cast("double"))
       val w = Window.orderBy(col("sep").desc, col("thr")) // 21-row surface
@@ -1405,27 +1416,54 @@ object MlC extends Module {
   // bias — and the rank column orders by the ROUNDED value on both
   // sides so a would-be ulp tie cannot flip it.
 
-  /** Exact (feature, bin, label, n) count surface for all features in
-    * one scan. Exposed for the spec's independent recompute.
+  /** The (feature, bin, label) cells of [[customerFeatures]], one per
+    * row and feature, exploded BEFORE any aggregate (the q134
+    * discipline) so the surface a caller aggregates is bounded at
+    * features·(nb+1)·2 groups: continuous features bin `nb`-wide
+    * equal-width over broadcast min/max fences, discrete ones use their
+    * value as the bin. ml_mutual_info (16 bins) and ml_woe_iv (8) count it.
     */
-  private[graft] val miContinuous = Seq("n_orders", "total_spend", "avg_spend")
-
-  private[graft] def miSurface(s: SparkSession, d: String): Seq[(String, Long, Double, Long)] = {
+  private def binnedCells(s: SparkSession, d: String, nb: Int): DataFrame = {
     val df = customerFeatures(s, d)
-    val discCols = featCols.toSeq.filterNot(miContinuous.contains)
-    val nb = 16
-    val fenceAggs = miContinuous.flatMap(c =>
+    val fenceAggs = continuous.flatMap(c =>
       Seq(min(col(c)).as(s"lo_$c"), max(col(c)).as(s"hi_$c")))
     val f = df.agg(fenceAggs.head, fenceAggs.tail: _*)
     def contBin(c: String): Column =
       least(floor((col(c) - col(s"lo_$c")) / (col(s"hi_$c") - col(s"lo_$c"))
         * lit(nb.toDouble)).cast("long"), lit(nb - 1L))
-    val cells = miContinuous.map(c =>
+    val cells = continuous.map(c =>
         struct(lit(c).as("feature"), contBin(c).as("bin"))) ++
-      discCols.map(c => struct(lit(c).as("feature"), col(c).cast("long").as("bin")))
+      discrete.map(c => struct(lit(c).as("feature"), col(c).cast("long").as("bin")))
     df.crossJoin(broadcast(f))
       .select(col("label"), explode(array(cells: _*)).as("c"))
-      .groupBy(col("c.feature").as("feature"), col("c.bin").as("bin"), col("label"))
+      .select(col("c.feature").as("feature"), col("c.bin").as("bin"), col("label"))
+  }
+
+  /** DuckDB twin of [[binnedCells]]: the `f` (fences) and `cells` CTEs,
+    * read after [[customerFeaturesSql]].
+    */
+  private def binnedCellsSql(nb: Int): String = {
+    val fences = continuous.flatMap(c =>
+      Seq(s"MIN($c) AS lo_$c", s"MAX($c) AS hi_$c")).mkString(", ")
+    val contArms = continuous.map(c =>
+      s"""SELECT '$c' AS feature,
+         |    LEAST(CAST(FLOOR(($c - lo_$c) / (hi_$c - lo_$c) * ${nb.toDouble}) AS BIGINT), ${nb - 1}) AS bin,
+         |    label FROM cf, f""".stripMargin)
+    val discArms = discrete.map(c =>
+      s"SELECT '$c' AS feature, CAST($c AS BIGINT) AS bin, label FROM cf")
+    s"""f AS MATERIALIZED (SELECT $fences FROM cf),
+       |cells AS MATERIALIZED (
+       |  ${(contArms ++ discArms).mkString("\n  UNION ALL\n  ")})""".stripMargin
+  }
+
+  private val miNb = 16
+
+  /** Exact (feature, bin, label, n) count surface for all features in
+    * one scan. Exposed for the spec's independent recompute.
+    */
+  private[graft] def miSurface(s: SparkSession, d: String): Seq[(String, Long, Double, Long)] = {
+    binnedCells(s, d, miNb)
+      .groupBy(col("feature"), col("bin"), col("label"))
       .agg(count(lit(1)).as("n"))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
@@ -1469,40 +1507,11 @@ object MlC extends Module {
         .toDF("feature", "mi_nats", "h_feature", "h_label", "rank")
         .orderBy("feature")
     },
-    Some {
-      val cont = miContinuous
-      val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-      val segCols = segs.map(v =>
-        s"CASE WHEN c_mktsegment = '$v' THEN 1.0 ELSE 0.0 END AS seg_$v").mkString(",\n  |    ")
-      val fences = cont.flatMap(c =>
-        Seq(s"MIN($c) AS lo_$c", s"MAX($c) AS hi_$c")).mkString(", ")
-      val contArms = cont.map(c =>
-        s"""SELECT '$c' AS feature,
-           |    LEAST(CAST(FLOOR(($c - lo_$c) / (hi_$c - lo_$c) * 16.0) AS BIGINT), 15) AS bin,
-           |    label FROM cf, f""".stripMargin)
-      val discArms = ("nation" +: segs.map(v => s"seg_$v")).map(c =>
-        s"SELECT '$c' AS feature, CAST($c AS BIGINT) AS bin, label FROM cf")
-      // Every CTE carries DuckDB's MATERIALIZED hint: without it the
-      // oracle engine inlines this chain (g referenced by t/pb/py/mi)
-      // into a plan that spilled >100 GB at sf10 on 159 groups — a
-      // pure planner pathology; semantics are identical either way
-      // and graft's side is unaffected (sf10 sweep, round 9).
-      s"""WITH bc AS MATERIALIZED (
-         |  SELECT o_custkey, CAST(COUNT(*) AS DOUBLE) AS n_orders,
-         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_spend
-         |  FROM orders GROUP BY 1),
-         |cf AS MATERIALIZED (
-         |  SELECT c_custkey,
-         |    CAST(c_nationkey AS DOUBLE) AS nation,
-         |    COALESCE(n_orders, 0.0) AS n_orders,
-         |    COALESCE(total_spend, 0.0) AS total_spend,
-         |    COALESCE(total_spend, 0.0) / GREATEST(COALESCE(n_orders, 0.0), 1.0) AS avg_spend,
-         |    CASE WHEN c_acctbal < 0 THEN 1 ELSE 0 END AS label,
-         |    $segCols
-         |  FROM customer LEFT JOIN bc ON c_custkey = o_custkey),
-         |f AS MATERIALIZED (SELECT $fences FROM cf),
-         |cells AS MATERIALIZED (
-         |  ${(contArms ++ discArms).mkString("\n  |  UNION ALL\n  |  ")}),
+    Some(
+      // g is referenced by t/pb/py/mi: the chain the MATERIALIZED hints
+      // keep DuckDB from inlining (see customerFeaturesSql)
+      s"""WITH $customerFeaturesSql,
+         |${binnedCellsSql(miNb)},
          |g AS MATERIALIZED (SELECT feature, bin, label, COUNT(*) AS n FROM cells GROUP BY 1, 2, 3),
          |t AS MATERIALIZED (SELECT feature, CAST(SUM(n) AS DOUBLE) AS ntot FROM g GROUP BY 1),
          |pb AS MATERIALIZED (SELECT feature, bin, CAST(SUM(n) AS DOUBLE) AS nb FROM g GROUP BY 1, 2),
@@ -1525,8 +1534,7 @@ object MlC extends Module {
          |SELECT m.feature, m.mi_nats, hx.h_feature, hy.h_label,
          |  CAST(ROW_NUMBER() OVER (ORDER BY m.mi_nats DESC, m.feature) AS BIGINT) AS rank
          |FROM mi m JOIN hx ON m.feature = hx.feature JOIN hy ON m.feature = hy.feature
-         |ORDER BY m.feature""".stripMargin
-    }
+         |ORDER BY m.feature""".stripMargin)
   )
 
   // ml_model_panel — the reference's my_cross_validate benchmark table
@@ -1547,25 +1555,38 @@ object MlC extends Module {
   // (seeded iterative fits); MlSpec pins determinism, the family
   // roster, and that the dummy sits at the bottom of the AUC column.
 
+  /** Train-fold z-scaling of the `features` array: per-position mean
+    * and sample stddev from ONE posexplode aggregate of `train` (a zero
+    * or NaN stddev scales by 1), as position => scaled-column. kNN and
+    * svc_rff share it per fold, so both see the same doubles.
+    */
+  private def zScale(train: DataFrame): Int => Column = {
+    val stats = train.select(posexplode(featArr).as(Seq("pos", "v")))
+      .groupBy("pos").agg(avg("v").as("mu"), stddev_samp("v").as("sd"))
+      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
+      .sortBy(_._1)
+    val mus = stats.map(_._2)
+    val sds = stats.map(t => if (!t._3.isNaN && t._3 > 0.0) t._3 else 1.0)
+    i => (featArr.getItem(i) - lit(mus(i))) / lit(sds(i))
+  }
+
   /** Per-family fold-mean metrics. Exposed for the determinism spec.
     *
     * Every (family, fold) fit is an independent seeded job, so they run
-    * through a bounded driver-side pool (the CrossValidator
+    * through the bounded driver-side pool [[inPool]] (the CrossValidator
     * `parallelism` discipline): the panel's wall time is dominated by
     * driver-synchronized MLlib iteration round-trips, not executor
     * compute, and 33 sequential fits left the 32-core scheduler idle
-    * most of the panel (~19 min at sf1). Results are assembled in
-    * (family, fold) order after all futures resolve, so the output is
-    * bit-identical to the sequential run on any cluster shape.
+    * most of the panel (~19 min at sf1). Results come back in
+    * (family, fold) order, so the output is bit-identical to the
+    * sequential run on any cluster shape.
     */
   private[graft] def modelPanelRows(s: SparkSession, d: String)
       : Seq[(String, Double, Double, Double)] = {
     import org.apache.spark.ml.classification._
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     // per-(family,fold) wall seconds, printed to stderr when
     // GRAFT_ML_PROFILE is set — the only way to see where the panel's
-    // 33 pooled fits actually spend their time (pooled wall time hides
+    // 36 pooled fits actually spend their time (pooled wall time hides
     // which family dominates). Collection cost is two nanoTime calls
     // per fit; reporting is off the timed path.
     val profile = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Double)]()
@@ -1575,12 +1596,10 @@ object MlC extends Module {
       profile.add((family, fold, (System.nanoTime() - t0) / 1e9))
       r
     }
-    val df = fitFrame(s, d)
-      .withColumn("fold", pmod(xxhash64(col("c_custkey"), lit(42L)), lit(3L)))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-    val families: Seq[(String, org.apache.spark.ml.Estimator[_])] = Seq(
+    val df = withFolds(fitFrame(s, d))
+    def train(f: Int) = df.filter(col("fold") =!= f)
+    def test(f: Int) = df.filter(col("fold") === f)
+    val estimators: Seq[(String, org.apache.spark.ml.Estimator[_])] = Seq(
       "gbt" -> new GBTClassifier().setMaxIter(5).setMaxDepth(3).setSeed(42L),
       "linear_svc" -> new LinearSVC().setMaxIter(20).setRegParam(0.01),
       "logreg" -> new LogisticRegression().setMaxIter(20).setRegParam(0.01),
@@ -1594,10 +1613,7 @@ object MlC extends Module {
     // exact-count accuracy / f1_1 (zero_division=0, the reference's
     // classification_report semantics) from one aggregate per fold
     def countMetrics(preds: DataFrame): (Double, Double) = {
-      val r = preds.agg(count(lit(1)),
-        sum(when(col("label") === 1.0 && col("prediction") === 1.0, 1L).otherwise(0L)),
-        sum(when(col("label") === 0.0 && col("prediction") === 1.0, 1L).otherwise(0L)),
-        sum(when(col("label") === 1.0 && col("prediction") === 0.0, 1L).otherwise(0L))).head()
+      val r = confusion(preds.groupBy(), col("prediction") === 1.0).head()
       val (n, tp, fp, fn) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
       val acc = (n - fp - fn).toDouble / n.toDouble
       val prec = if (tp + fp > 0) tp.toDouble / (tp + fp) else 0.0
@@ -1605,62 +1621,47 @@ object MlC extends Module {
       val f1 = if (prec + rec > 0) 2.0 * prec * rec / (prec + rec) else 0.0
       (acc, f1)
     }
-    val fitted = families.map { case (name, est) =>
-      name -> (0 until 3).map { f => Future { timed(name, f) {
-        // per-Future copy — the 3 folds of one family fit concurrently
-        // and must not share an Estimator instance (see foldScore)
-        val m = est.copy(org.apache.spark.ml.param.ParamMap.empty)
-          .fit(df.filter(col("fold") =!= f))
-          .asInstanceOf[org.apache.spark.ml.Transformer]
-        val preds = m.transform(df.filter(col("fold") === f))
+    type Fold = Int => (Double, Double, Double)
+    val mllib: Seq[(String, Fold)] = estimators.map { case (name, est) =>
+      name -> { (f: Int) =>
+        val preds = foldPredictions(est, df, f)
         val (acc, f1) = countMetrics(preds)
         (acc, f1, exactAucRaw(preds))
-      } } }
+      }
     }
+    // features z-scale by TRAIN-fold stats (two-phase broadcast fit — no
+    // leakage): one stats pass per fold, shared by kNN and svc_rff
+    val scale = inPool(0 until 3)(f => zScale(train(f)))
+    val nf = featCols.length
     // kNN family (the reference roster's KNeighborsClassifier; MLlib has
     // no kNN, so graft's own neighbor-join machinery backs the row):
-    // per fold, features z-scale by TRAIN-fold stats (two-phase
-    // broadcast fit — no leakage), the reference set is a deterministic
+    // per fold, the reference set is a deterministic
     // Z-mod-p PROTOTYPE subsample (≤ 2000 rows — the standard kNN scale
     // move, bounding the pair join at |test|·2000; at full scale the
     // neighbor stage swaps to the IVF index behind the same contract),
     // 10-NN by the grouped top-k operator with (distance, key) tiebreak,
     // majority vote (tie → label 0, the emb_knn_classify rule); the
     // positive-vote fraction is the ranking score AUC uses.
-    val knn = {
-      val nf = featCols.length
-      val bkt = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) %
-        lit(1000000007L) % lit(1000L)
-      val folds = (0 until 3).map { f => Future { timed("knn", f) {
-        val tr = df.filter(col("fold") =!= f)
-        val te = df.filter(col("fold") === f)
-        val stats = tr.select(posexplode(featArr).as(Seq("pos", "v")))
-          .groupBy("pos").agg(avg("v").as("mu"), stddev_samp("v").as("sd"))
-          .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-          .sortBy(_._1)
-        val mus = stats.map(_._2)
-        val sds = stats.map(t => if (!t._3.isNaN && t._3 > 0.0) t._3 else 1.0)
-        def scaled = array((0 until nf).map(i =>
-          (featArr.getItem(i) - lit(mus(i))) / lit(sds(i))): _*)
-        val nTr = tr.count()
-        val cut = math.min(1000L, 2000L * 1000L / math.max(nTr, 1L) + 1L)
-        val ref = tr.filter(bkt < lit(cut))
-          .select(col("c_custkey").as("rid"), scaled.as("rv"), col("label").as("rlabel"))
-        val q = te.select(col("c_custkey").as("qid"), scaled.as("qv"),
-          col("label").as("label"))
-        val dist = aggregate(zip_with(col("qv"), col("rv"),
-          (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x)
-        val preds = graft.plans.GraftOps.groupedTopK(
-            q.join(broadcast(ref), lit(true)).withColumn("dist", dist),
-            Seq("qid"), "dist", "rid", k = 10, ascending = true)
-          .groupBy(col("qid"), col("label"))
-          .agg((sum(col("rlabel")) / count(lit(1))).as("score"))
-          .withColumn("prediction", when(col("score") > 0.5, 1.0).otherwise(0.0))
-        val (acc, f1) = countMetrics(preds)
-        val auc = exactAucParts(preds, col("score"), col("label"))._3
-        (acc, f1, auc)
-      } } }
-      "knn" -> folds
+    val knn: Fold = { f =>
+      val scaled = array((0 until nf).map(scale(f)): _*)
+      val tr = train(f)
+      val nTr = tr.count()
+      val cut = math.min(1000L, 2000L * 1000L / math.max(nTr, 1L) + 1L)
+      val ref = tr.filter(zmod(col("c_custkey"), 1000L) < lit(cut))
+        .select(col("c_custkey").as("rid"), scaled.as("rv"), col("label").as("rlabel"))
+      val q = test(f).select(col("c_custkey").as("qid"), scaled.as("qv"),
+        col("label").as("label"))
+      val dist = aggregate(zip_with(col("qv"), col("rv"),
+        (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x)
+      val preds = graft.plans.GraftOps.groupedTopK(
+          q.join(broadcast(ref), lit(true)).withColumn("dist", dist),
+          Seq("qid"), "dist", "rid", k = 10, ascending = true)
+        .groupBy(col("qid"), col("label"))
+        .agg((sum(col("rlabel")) / count(lit(1))).as("score"))
+        .withColumn("prediction", when(col("score") > 0.5, 1.0).otherwise(0.0))
+      val (acc, f1) = countMetrics(preds)
+      val auc = exactAucParts(preds, col("score"), col("label"))._3
+      (acc, f1, auc)
     }
     // Kernel-SVC family (the roster's `from sklearn.svm import SVC`,
     // modeling_validation.ipynb — MLlib has no kernel SVM): seeded
@@ -1674,65 +1675,45 @@ object MlC extends Module {
     // TRAIN-fold stats (no leakage) and γ = 1/nf mirrors sklearn's
     // gamma='scale' on standardized features. Deterministic: seeded
     // draw + hash folds, zero RNG in the schedule.
-    val svcRff = {
-      val nf = featCols.length
-      val dRff = 32
-      val rng = new java.util.Random(42L)
-      val gamma = 1.0 / nf
-      val wMat = Array.fill(dRff, nf)(rng.nextGaussian() * math.sqrt(2.0 * gamma))
-      val bVec = Array.fill(dRff)(rng.nextDouble() * 2.0 * math.Pi)
-      val folds = (0 until 3).map { f => Future { timed("svc_rff", f) {
-        val tr = df.filter(col("fold") =!= f)
-        val te = df.filter(col("fold") === f)
-        val stats = tr.select(posexplode(featArr).as(Seq("pos", "v")))
-          .groupBy("pos").agg(avg("v").as("mu"), stddev_samp("v").as("sd"))
-          .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-          .sortBy(_._1)
-        val mus = stats.map(_._2)
-        val sds = stats.map(t => if (!t._3.isNaN && t._3 > 0.0) t._3 else 1.0)
-        def scaled(i: Int) = (featArr.getItem(i) - lit(mus(i))) / lit(sds(i))
-        def phi = array((0 until dRff).map { j =>
-          cos((0 until nf).map(i => scaled(i) * lit(wMat(j)(i))).reduce(_ + _)
-            + lit(bVec(j))) * lit(math.sqrt(2.0 / dRff))
-        }: _*)
-        def mapped(frame: DataFrame) = frame.withColumn("rff",
-          org.apache.spark.ml.functions.array_to_vector(phi))
-        val svc = new LinearSVC().setMaxIter(20).setRegParam(0.01)
-          .setFeaturesCol("rff")
-        val m = svc.fit(mapped(tr))
-        val preds = m.transform(mapped(te))
-        val (acc, f1) = countMetrics(preds)
-        (acc, f1, exactAucRaw(preds))
-      } } }
-      "svc_rff" -> folds
+    val dRff = 32
+    val rng = new java.util.Random(42L)
+    val gamma = 1.0 / nf
+    val wMat = Array.fill(dRff, nf)(rng.nextGaussian() * math.sqrt(2.0 * gamma))
+    val bVec = Array.fill(dRff)(rng.nextDouble() * 2.0 * math.Pi)
+    val svcRff: Fold = { f =>
+      def phi = array((0 until dRff).map { j =>
+        cos((0 until nf).map(i => scale(f)(i) * lit(wMat(j)(i))).reduce(_ + _)
+          + lit(bVec(j))) * lit(math.sqrt(2.0 / dRff))
+      }: _*)
+      def mapped(frame: DataFrame) = frame.withColumn("rff",
+        org.apache.spark.ml.functions.array_to_vector(phi))
+      val svc = new LinearSVC().setMaxIter(20).setRegParam(0.01)
+        .setFeaturesCol("rff")
+      val m = svc.fit(mapped(train(f)))
+      val preds = m.transform(mapped(test(f)))
+      val (acc, f1) = countMetrics(preds)
+      (acc, f1, exactAucRaw(preds))
     }
     // AdaBoost family (the roster's AdaBoostClassifier; MLlib lacks it
     // — graft's own weighted-stump boosting backs the row, margin as
     // the AUC ranking score)
-    val adaboost = {
-      val folds = (0 until 3).map { f => Future { timed("adaboost", f) {
-        val (preds, _) = adaboostFit(df.filter(col("fold") =!= f),
-          df.filter(col("fold") === f), rounds = 6, seed = 42L)
-        val pr = preds.select(col("label"), col("prediction"), col("margin").as("score"))
-        val (acc, f1) = countMetrics(pr)
-        val auc = exactAucParts(pr, col("score"), col("label"))._3
-        (acc, f1, auc)
-      } } }
-      "adaboost" -> folds
+    val adaboost: Fold = { f =>
+      val (preds, _) = adaboostFit(train(f), test(f), rounds = 6, seed = 42L)
+      val pr = preds.select(col("label"), col("prediction"), col("margin").as("score"))
+      val (acc, f1) = countMetrics(pr)
+      val auc = exactAucParts(pr, col("score"), col("label"))._3
+      (acc, f1, auc)
     }
     // DummyClassifier(most_frequent): constant majority-of-train-folds
     // prediction; binarized AUC degenerates to (recall1 + recall0)/2
-    val dummy = {
-      val folds = (0 until 3).map { f => Future { timed("dummy", f) {
-        val maj = df.filter(col("fold") =!= f)
-          .agg(sum(col("label")), count(lit(1))).head() match {
-          case r0 => if (r0.getDouble(0) * 2.0 > r0.getLong(1)) 1.0 else 0.0
-        }
-        val preds = df.filter(col("fold") === f).withColumn("prediction", lit(maj))
-        val (acc, f1) = countMetrics(preds)
-        (acc, f1, 0.5)
-      } } }
-      "dummy" -> folds
+    val dummy: Fold = { f =>
+      val maj = train(f)
+        .agg(sum(col("label")), count(lit(1))).head() match {
+        case r0 => if (r0.getDouble(0) * 2.0 > r0.getLong(1)) 1.0 else 0.0
+      }
+      val preds = test(f).withColumn("prediction", lit(maj))
+      val (acc, f1) = countMetrics(preds)
+      (acc, f1, 0.5)
     }
     // DummyClassifier(strategy="uniform") — the reference's ACTUAL
     // baseline (modeling.py:22). Its predictions are RNG coin flips, so
@@ -1749,22 +1730,20 @@ object MlC extends Module {
     // counts — so don't pin it against a small-n empirical re-seeded
     // mean; over re-seeds at fold sizes like these it converges to
     // this value only as the fold grows.
-    val dummyUniform = {
-      val folds = (0 until 3).map { f => Future { timed("dummy_uniform", f) {
-        val r0 = df.filter(col("fold") === f)
-          .agg(sum(col("label")), count(lit(1))).head()
-        val pi = r0.getDouble(0) / r0.getLong(1).toDouble
-        val prec = pi; val rec = 0.5
-        val f1 = if (prec + rec > 0.0) 2.0 * prec * rec / (prec + rec) else 0.0
-        (0.5, f1, 0.5)
-      } } }
-      "dummy_uniform" -> folds
+    val dummyUniform: Fold = { f =>
+      val r0 = test(f).agg(sum(col("label")), count(lit(1))).head()
+      val pi = r0.getDouble(0) / r0.getLong(1).toDouble
+      val prec = pi; val rec = 0.5
+      val f1 = if (prec + rec > 0.0) 2.0 * prec * rec / (prec + rec) else 0.0
+      (0.5, f1, 0.5)
     }
-    val rows = (fitted :+ knn :+ svcRff :+ adaboost :+ dummy :+ dummyUniform).map {
-      case (name, foldFs) =>
-        val folds = foldFs.map(Await.result(_, Duration.Inf))
-        (name, folds.map(_._1).sum / 3.0, folds.map(_._2).sum / 3.0,
-          folds.map(_._3).sum / 3.0)
+    val families = mllib ++ Seq("knn" -> knn, "svc_rff" -> svcRff,
+      "adaboost" -> adaboost, "dummy" -> dummy, "dummy_uniform" -> dummyUniform)
+    // one task per (family, fold), submitted family by family
+    val tasks = for ((name, run) <- families; f <- 0 until 3) yield (name, f, run)
+    val folds = inPool(tasks) { case (name, f, run) => timed(name, f)(run(f)) }
+    val rows = families.map(_._1).zip(folds.grouped(3).toSeq).map { case (name, fs) =>
+      (name, fs.map(_._1).sum / 3.0, fs.map(_._2).sum / 3.0, fs.map(_._3).sum / 3.0)
     }
     if (sys.env.contains("GRAFT_ML_PROFILE")) {
       import scala.jdk.CollectionConverters._
@@ -1778,7 +1757,6 @@ object MlC extends Module {
       }
     }
     rows.sortBy(_._1)
-    } finally pool.shutdown()
   }
 
   private val mlModelPanel = Q(
@@ -1893,20 +1871,8 @@ object MlC extends Module {
   private val mlWoeIv = Q(
     "ml_woe_iv",
     (s, d) => {
-      val df = customerFeatures(s, d)
-      val discCols = featCols.toSeq.filterNot(miContinuous.contains)
-      val fenceAggs = miContinuous.flatMap(c =>
-        Seq(min(col(c)).as(s"lo_$c"), max(col(c)).as(s"hi_$c")))
-      val f = df.agg(fenceAggs.head, fenceAggs.tail: _*)
-      def contBin(c: String): Column =
-        least(floor((col(c) - col(s"lo_$c")) / (col(s"hi_$c") - col(s"lo_$c"))
-          * lit(woeNb.toDouble)).cast("long"), lit(woeNb - 1L))
-      val cells = miContinuous.map(c =>
-          struct(lit(c).as("feature"), contBin(c).as("bin"))) ++
-        discCols.map(c => struct(lit(c).as("feature"), col(c).cast("long").as("bin")))
-      val surface = df.crossJoin(broadcast(f))
-        .select(col("label"), explode(array(cells: _*)).as("c"))
-        .groupBy(col("c.feature").as("feature"), col("c.bin").as("bin"))
+      val surface = binnedCells(s, d, woeNb)
+        .groupBy(col("feature"), col("bin"))
         .agg(count(lit(1)).as("n"), sum(col("label").cast("long")).as("n_bad"))
         .withColumn("n_good", col("n") - col("n_bad"))
       val w = Window.partitionBy(col("feature"))
@@ -1921,35 +1887,9 @@ object MlC extends Module {
             .as("odds_smoothed"))
         .orderBy("feature", "bin")
     },
-    Some {
-      val cont = Seq("n_orders", "total_spend", "avg_spend")
-      val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-      val segCols = segs.map(v =>
-        s"CASE WHEN c_mktsegment = '$v' THEN 1.0 ELSE 0.0 END AS seg_$v").mkString(",\n  |    ")
-      val fences = cont.flatMap(c =>
-        Seq(s"MIN($c) AS lo_$c", s"MAX($c) AS hi_$c")).mkString(", ")
-      val contArms = cont.map(c =>
-        s"""SELECT '$c' AS feature,
-           |    LEAST(CAST(FLOOR(($c - lo_$c) / (hi_$c - lo_$c) * 8.0) AS BIGINT), 7) AS bin,
-           |    label FROM cf, f""".stripMargin)
-      val discArms = ("nation" +: segs.map(v => s"seg_$v")).map(c =>
-        s"SELECT '$c' AS feature, CAST($c AS BIGINT) AS bin, label FROM cf")
-      s"""WITH bc AS (
-         |  SELECT o_custkey, CAST(COUNT(*) AS DOUBLE) AS n_orders,
-         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_spend
-         |  FROM orders GROUP BY 1),
-         |cf AS (
-         |  SELECT c_custkey,
-         |    CAST(c_nationkey AS DOUBLE) AS nation,
-         |    COALESCE(n_orders, 0.0) AS n_orders,
-         |    COALESCE(total_spend, 0.0) AS total_spend,
-         |    COALESCE(total_spend, 0.0) / GREATEST(COALESCE(n_orders, 0.0), 1.0) AS avg_spend,
-         |    CASE WHEN c_acctbal < 0 THEN 1 ELSE 0 END AS label,
-         |    $segCols
-         |  FROM customer LEFT JOIN bc ON c_custkey = o_custkey),
-         |f AS (SELECT $fences FROM cf),
-         |cells AS (
-         |  ${(contArms ++ discArms).mkString("\n  |  UNION ALL\n  |  ")}),
+    Some(
+      s"""WITH $customerFeaturesSql,
+         |${binnedCellsSql(woeNb)},
          |g AS (
          |  SELECT feature, bin, COUNT(*) AS n, CAST(SUM(label) AS BIGINT) AS n_bad
          |  FROM cells GROUP BY 1, 2),
@@ -1963,8 +1903,7 @@ object MlC extends Module {
          |  CAST(n_bad AS DOUBLE) / CAST(tot_bad AS DOUBLE) AS dist_bad,
          |  ((CAST(n_good AS DOUBLE) + 0.5) / CAST(tot_good AS DOUBLE))
          |    / ((CAST(n_bad AS DOUBLE) + 0.5) / CAST(tot_bad AS DOUBLE)) AS odds_smoothed
-         |FROM t ORDER BY feature, bin""".stripMargin
-    }
+         |FROM t ORDER BY feature, bin""".stripMargin)
   )
 
   // ml_vif — variance-inflation factors, the multicollinearity screen
@@ -1973,15 +1912,13 @@ object MlC extends Module {
   // predictors. One scan accumulates the exact decimal gram surface
   // (n, Σx_i, Σx_i·x_j — 45 bounded aggregates, partial-aggregable);
   // the correlation matrix and its Gauss–Jordan inverse are driver
-  // arithmetic over that fixed-size metadata. The MACHINERY one-hot is
-  // dropped as the reference category — keeping all five exhaustive
+  // arithmetic over that fixed-size metadata. The MACHINERY one-hot (the
+  // last feature) is dropped as the reference category — keeping all five exhaustive
   // segment dummies makes R exactly singular, which is the textbook
   // dummy-variable trap, not a numerical accident. Rows-only (matrix
   // inverse is not SQL); MlSpec plants an exact linear combination and
   // asserts its VIF explodes while independent columns stay near 1.
-  private[graft] val vifCols: Seq[String] = Seq("nation", "n_orders",
-    "total_spend", "avg_spend", "seg_AUTOMOBILE", "seg_BUILDING",
-    "seg_FURNITURE", "seg_HOUSEHOLD")
+  private[graft] val vifCols: Seq[String] = featCols.toSeq.init
 
   /** VIF per feature from the exact gram of `cols` in `df`. */
   private[graft] def vifRows(df: DataFrame, cols: Seq[String]): Seq[(String, Double)] = {

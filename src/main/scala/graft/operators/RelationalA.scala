@@ -547,24 +547,21 @@ object RelationalA extends Module {
   )
 
   // q18 — deterministic hash split (train_test_split with a fixed seed):
-  // multiplicative hash in Z mod 1e9+7 — (key % p) · (2654435761 % p)
-  // stays < 7e17, so the gate never overflows int64 in EITHER engine at
-  // any key magnitude (a raw key * 2654435761 wraps Long in Spark at
-  // key ≈ 3.5e9 while DuckDB promotes toward HUGEINT — the split would
-  // diverge exactly at scale); narrow map + one small aggregate to
+  // the overflow-free Z-mod-p bucket [[Exact.zmod]], identical in both
+  // engines at any key magnitude; narrow map + one small aggregate to
   // audit the split.
   private val q18 = Q(
     "q18_split",
     (s, d) => {
       val o = Tables.orders(s, d)
-      val bucket = (col("o_orderkey") % lit(1000000007L)) * lit(654435747L) % lit(1000000007L) % 1000
+      val bucket = zmod(col("o_orderkey"), 1000L)
       o.select(when(bucket < 800, "train").otherwise("test").as("split"),
           col("o_totalprice"))
         .groupBy("split")
         .agg(count(lit(1)).as("n"), sumd(col("o_totalprice")).as("sum_price"))
         .orderBy("split")
     },
-    Some("""SELECT CASE WHEN (((o_orderkey % 1000000007) * 654435747) % 1000000007) % 1000 < 800 THEN 'train' ELSE 'test' END AS split,
+    Some(s"""SELECT CASE WHEN ${sqlZmod("o_orderkey", 1000L)} < 800 THEN 'train' ELSE 'test' END AS split,
       |  COUNT(*) AS n,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS sum_price
       |FROM orders GROUP BY 1 ORDER BY split""".stripMargin)
@@ -894,11 +891,11 @@ object RelationalA extends Module {
     "q37_sample",
     (s, d) => {
       Tables.orders(s, d)
-        .filter((col("o_orderkey") % lit(1000000007L)) * lit(654435747L) % lit(1000000007L) % 100 < 10)
+        .filter(zmod(col("o_orderkey"), 100L) < 10)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     },
-    Some("""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-      |WHERE (((o_orderkey % 1000000007) * 654435747) % 1000000007) % 100 < 10
+    Some(s"""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+      |WHERE ${sqlZmod("o_orderkey", 100L)} < 10
       |""".stripMargin)
   )
 
@@ -982,16 +979,15 @@ object RelationalA extends Module {
   // per-group n-th smallest hash (an exact order statistic from the
   // (group, bucket) histogram machinery, Quantiles.groupedNth) becomes a
   // per-group threshold, broadcast back into a narrow filter. The hash
-  // (k mod p)·654435747 mod p (p = 1e9+7) is overflow-free int64 in
-  // both engines at any key magnitude and injective for keys < p
-  // (coprime multiplier; beyond p the c_custkey tiebreak keeps the
+  // is the full [[Exact.zmod]] (injective for keys < p; beyond p the
+  // c_custkey tiebreak keeps the
   // order deterministic), so `hash <= threshold` keeps exactly n rows
   // per group — bit-identical to the oracle's rank formulation.
   private val q41 = Q(
     "q41_stratified_sample",
     (s, d) => {
       import s.implicits._
-      val h = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) % lit(1000000007L)
+      val h = zmod(col("c_custkey"), ZmodP)
       val c = Tables.customer(s, d)
         .select(col("c_mktsegment"), col("c_custkey"), h.cast("double").as("h"))
       val thr = Quantiles.groupedNth(c, "c_mktsegment", "h", 100L)
@@ -1012,10 +1008,10 @@ object RelationalA extends Module {
         .select(col("c_mktsegment"), col("c_custkey"))
         .orderBy("c_mktsegment", "c_custkey")
     },
-    Some("""SELECT c_mktsegment, c_custkey
+    Some(s"""SELECT c_mktsegment, c_custkey
       |FROM (SELECT c_mktsegment, c_custkey,
       |        ROW_NUMBER() OVER (PARTITION BY c_mktsegment
-      |          ORDER BY ((c_custkey % 1000000007) * 654435747) % 1000000007, c_custkey) AS rn
+      |          ORDER BY ${sqlZmod("c_custkey", ZmodP)}, c_custkey) AS rn
       |      FROM customer)
       |WHERE rn <= 100 ORDER BY c_mktsegment, c_custkey""".stripMargin)
   )

@@ -697,8 +697,7 @@ object RelationalC extends Module {
   private val q71 = Q(
     "q71_subsample_ci",
     (s, d) => {
-      val rep = ((col("o_orderkey") % lit(1000000007L)) * lit(654435747L)
-        % lit(1000000007L) % 32).cast("long")
+      val rep = Exact.zmod(col("o_orderkey"), 32L)
       val z = Exact.qzl(col("o_totalprice"), 100.0).cast(DecimalType(38, 0))
       val perRep = Tables.orders(s, d)
         .groupBy(rep.as("rep"))
@@ -729,7 +728,7 @@ object RelationalC extends Module {
         (mbar + lit(2.0) * se).as("ci_hi"))
     },
     Some(s"""WITH r AS (
-      |  SELECT (((o_orderkey % 1000000007) * 654435747) % 1000000007) % 32 AS rep,
+      |  SELECT ${Exact.sqlZmod("o_orderkey", 32L)} AS rep,
       |    CAST(COUNT(*) AS BIGINT) AS n,
       |    CAST(SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS DOUBLE) AS szd
       |  FROM orders GROUP BY 1),
@@ -1326,8 +1325,7 @@ object RelationalC extends Module {
       val c = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment").as("segment"),
           when(col("c_acctbal") < 0, 1L).otherwise(0L).as("y"),
-          ((col("c_custkey") % lit(1000000007L)) * lit(654435747L)
-            % lit(1000000007L) % 5).as("fold"))
+          Exact.zmod(col("c_custkey"), 5L).as("fold"))
       val sf = c.groupBy(col("segment").as("s_seg"), col("fold").as("s_fold"))
         .agg(count(lit(1)).as("n_sf"), sum(col("y")).as("y_sf"))
       val st = sf.groupBy(col("s_seg").as("t_seg"))
@@ -1339,10 +1337,10 @@ object RelationalC extends Module {
             (col("y_s") - col("y_sf")).cast("double") /
               (col("n_s") - col("n_sf")).cast("double")).as("te"))
     },
-    Some("""WITH c AS (
+    Some(s"""WITH c AS (
       |  SELECT c_custkey, c_mktsegment AS segment,
       |    CASE WHEN c_acctbal < 0 THEN 1 ELSE 0 END AS y,
-      |    (((c_custkey % 1000000007) * 654435747) % 1000000007) % 5 AS fold
+      |    ${Exact.sqlZmod("c_custkey", 5L)} AS fold
       |  FROM customer),
       |sf AS (
       |  SELECT segment AS s_seg, fold AS s_fold,

@@ -22,9 +22,11 @@ object RelationalD extends Module {
   /** Zero-filled hourly event-count series (the q68/q72 surface): one
     * scan of events partial-aggregates to |hours| rows, gap hours are
     * restored from a 1-row span aggregate. Checkpointed so the span fit
-    * and the join reuse one scan.
+    * and the join reuse one scan. Shared with RelationalE (q118, q119);
+    * a caller whose windows or self-joins re-read the series
+    * checkpoints it again.
     */
-  private def hourlySeries(s: SparkSession, d: String): DataFrame = {
+  private[operators] def hourlySeries(s: SparkSession, d: String): DataFrame = {
     val counts = Tables.events(s, d)
       .groupBy(date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("y"))
@@ -37,7 +39,7 @@ object RelationalD extends Module {
         coalesce(col("y"), lit(0L)).as("y"))
   }
 
-  private val hourlySql =
+  private[operators] val hourlySql =
     """counts AS (
       |  SELECT date_trunc('hour', ts) AS h, CAST(COUNT(*) AS BIGINT) AS y
       |  FROM events GROUP BY 1),
@@ -761,8 +763,7 @@ object RelationalD extends Module {
   // transform/slice expression (baskets are order-line bounded, ~4-7
   // items, so this stays linear in orders, never |parts|²), and the
   // pair aggregate shuffles on (pk_a, pk_b) at a widened partition
-  // count (conf `spark.graft.pair.partitions`, default
-  // 8 × shuffle.partitions) so the near-unique pair keyspace never
+  // count (8 × shuffle.partitions) so the near-unique pair keyspace never
   // concentrates into 32 oversized hash tables (shape shared with
   // q114 via [[Exact.orderBaskets]]/[[Exact.basketPairCounts]]). The
   // min-support floor
@@ -1571,8 +1572,7 @@ object RelationalD extends Module {
       val l = Tables.lineitem(s, d)
       // reduce the key mod p BEFORE the ×8 fanout so the raw multiply
       // can't wrap int64 at any orderkey magnitude (the q18 discipline)
-      val gate = pmod((col("l_orderkey") % lit(1000000007L) * lit(8L) + col("l_linenumber"))
-        % lit(1000000007L) * lit(2654435761L % 1000000007L), lit(1000000007L)) % lit(10L)
+      val gate = Exact.zmod(col("l_orderkey") % lit(Exact.ZmodP) * lit(8L) + col("l_linenumber"), 10L)
       val withSplit = l.select(col("l_quantity").as("x"), col("l_extendedprice").as("y"),
         gate.as("g"))
       def z(c: Column, f: Double) = Exact.qzl(c, f).cast(DecimalType(38, 0))
@@ -1612,8 +1612,7 @@ object RelationalD extends Module {
     },
     Some(s"""WITH ws AS (
       |  SELECT l_quantity AS x, l_extendedprice AS y,
-      |    (((l_orderkey % 1000000007) * 8 + l_linenumber) % 1000000007
-      |      * 654435747) % 1000000007 % 10 AS g
+      |    ${Exact.sqlZmod("(l_orderkey % 1000000007) * 8 + l_linenumber", 10L)} AS g
       |  FROM lineitem),
       |tr AS (
       |  SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(COUNT(*) AS DOUBLE) AS nd,

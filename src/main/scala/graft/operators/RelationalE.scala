@@ -5,6 +5,7 @@ import graft.{Exact, Q, Tables, Module}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import RelationalD.{hourlySeries, hourlySql}
 
 /** Round-5 (late stint) additions: distribution comparison (Q–Q),
   * weighted order statistics, item-item similarity, and distributed
@@ -523,35 +524,6 @@ object RelationalE extends Module {
     }
   )
 
-  /** Zero-filled hourly event-count series (RelationalD's q68/q72
-    * surface, re-derived here): one scan partial-aggregates to |hours|
-    * rows, gap hours restored from a 1-row span fit. Checkpointed so
-    * downstream windows/joins never rescan events.
-    */
-  private def hourlySeries(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables.events(s, d)
-      .groupBy(date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("y"))
-      .graftCheckpoint()
-    counts.agg(min(col("h")).as("lo"), max(col("h")).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"),
-        expr("INTERVAL 1 HOUR"))).as("h"))
-      .join(counts, Seq("h"), "left")
-      .select(col("h"), coalesce(col("y"), lit(0L)).as("y"))
-      .graftCheckpoint()
-  }
-
-  private val hourlySql =
-    """counts AS (
-      |  SELECT date_trunc('hour', ts) AS h, CAST(COUNT(*) AS BIGINT) AS y
-      |  FROM events GROUP BY 1),
-      |spine AS (
-      |  SELECT unnest(generate_series((SELECT MIN(h) FROM counts),
-      |    (SELECT MAX(h) FROM counts), INTERVAL 1 HOUR)) AS h),
-      |series AS (
-      |  SELECT spine.h AS h, COALESCE(counts.y, 0) AS y
-      |  FROM spine LEFT JOIN counts ON spine.h = counts.h)""".stripMargin
-
   // q117 — burstiness / overdispersion per event type (the Fano factor:
   // is arrival Poisson-like, clumpy, or metronomic? — decides whether
   // q103's seasonal-naive error bars or st_anomaly's z thresholds are
@@ -629,7 +601,7 @@ object RelationalE extends Module {
   private val q118 = Q(
     "q118_peaks",
     (s, d) => {
-      val series = hourlySeries(s, d)
+      val series = hourlySeries(s, d).graftCheckpoint()
       val w = Window.orderBy(col("h"))
       val mean = series.agg(
         (sum(col("y")).cast("double") / count(lit(1)).cast("double")).as("mu"))
@@ -675,7 +647,7 @@ object RelationalE extends Module {
   private val q119 = Q(
     "q119_mann_kendall",
     (s, d) => {
-      val series = hourlySeries(s, d).select(unix_millis(col("h")).as("hm"), col("y"))
+      val series = hourlySeries(s, d).graftCheckpoint().select(col("hm"), col("y"))
       val a = series.select(col("hm").as("h1"), col("y").as("y1"))
       val b = series.select(col("hm").as("h2"), col("y").as("y2"))
       val sAgg = a.join(b, col("h1") < col("h2"))

@@ -1348,8 +1348,7 @@ object Streaming {
     */
   def packStream(docs: Dataset[DocTok]): Dataset[PackAssign] = {
     import docs.sparkSession.implicits._
-    val p = 1000000007L
-    docs.groupByKey(d => d.doc_id % p * 654435747L % p % 8)
+    docs.groupByKey(d => zmod(d.doc_id, 8L))
       .flatMapGroupsWithState[Long, PackAssign](
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.NoTimeout()) {

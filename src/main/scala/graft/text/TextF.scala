@@ -690,25 +690,22 @@ object TextF extends Module {
   // the same documents survive on any cluster shape. The rate table is a
   // broadcast literal; the gate is a pure codegen filter pushed at the
   // scan — no shuffle, no RNG. Per-source keep rates: even src ids 80%,
-  // odd 20% (stand-ins for quality-tiered domains). The gate multiplies
-  // in Z mod 1e9+7 — (doc_id % p) · (2654435761 % p) stays < 7e17, so
-  // the arithmetic never overflows BIGINT in EITHER engine at any
-  // doc_id (a raw doc_id * 2654435761 wraps Long in Spark at
-  // doc_id ≈ 3.5e9 while DuckDB promotes toward HUGEINT — the kept
-  // sets would diverge exactly at scale).
+  // odd 20% (stand-ins for quality-tiered domains). The gate is the
+  // overflow-free Z-mod-p bucket [[graft.Exact.zmod]], so the kept sets
+  // agree in both engines at any doc_id.
   private val txMixSample = Q(
     "tx_mix_sample",
     (s, d) => {
       val rate = when(regexp_extract(col("source"), "([0-9]+)$", 1).cast("int") % 2 === 0,
         lit(80L)).otherwise(lit(20L))
-      val gate = (col("doc_id") % lit(1000000007L)) * lit(654435747L) % lit(1000000007L) % 100
+      val gate = graft.Exact.zmod(col("doc_id"), 100L)
       Tables.documents(s, d)
         .filter(gate < rate)
         .select(col("doc_id"), col("source"), col("n_chars"))
     },
-    Some("""SELECT doc_id, source, n_chars FROM documents
-      |WHERE (((doc_id % 1000000007) * 654435747) % 1000000007) % 100 <
-      |  CASE WHEN CAST(regexp_extract(source, '([0-9]+)$', 1) AS INTEGER) % 2 = 0
+    Some(s"""SELECT doc_id, source, n_chars FROM documents
+      |WHERE ${graft.Exact.sqlZmod("doc_id", 100L)} <
+      |  CASE WHEN CAST(regexp_extract(source, '([0-9]+)$$', 1) AS INTEGER) % 2 = 0
       |       THEN 80 ELSE 20 END""".stripMargin)
   )
 
@@ -953,12 +950,11 @@ object TextF extends Module {
     * shard, n_w, pack_id, straddle) — reused by Curate's final stage.
     */
   private[graft] def packAssignments(docs: DataFrame): DataFrame = {
-    val p = 1000000007L
     val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs
       .select(col("doc_id"),
-        (col("doc_id") % p * lit(654435747L) % p % 8).as("shard"),
+        graft.Exact.zmod(col("doc_id"), 8L).as("shard"),
         size(tokens).cast("long").as("n_w"))
       .withColumn("cum", sum(col("n_w")).over(w))
       .withColumn("pack_id", expr("(cum - n_w) div 512"))
@@ -974,9 +970,9 @@ object TextF extends Module {
           sum(col("n_w")).as("sum_tokens"),
           sum(when(col("straddle"), 1L).otherwise(0L)).as("n_straddle"))
     },
-    Some("""WITH t AS (
+    Some(s"""WITH t AS (
       |  SELECT doc_id,
-      |    CAST(doc_id % 1000000007 * 654435747 % 1000000007 % 8 AS BIGINT) AS shard,
+      |    CAST(${graft.Exact.sqlZmod("doc_id", 8L)} AS BIGINT) AS shard,
       |    CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_w
       |  FROM documents),
       |c AS (

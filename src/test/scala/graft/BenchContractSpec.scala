@@ -86,6 +86,24 @@ class BenchContractSpec extends AnyFunSuite {
     }
   }
 
+  test("counts: bench reps, max reps, Solo/OverheadProbe reps and StreamBench chunks fall back to their default") {
+    assert(Session.positive(Some("3"), 5) === 3)
+    assert(Session.positive(Some(" 40 "), 25) === 40)
+    malformed.foreach { raw =>
+      assert(Session.positive(raw, 5) === 5, s"SPARK_GRAFT_BENCH_REPS=$raw")
+      assert(Session.positive(raw, 16) === 16, s"StreamBench chunks=$raw")
+    }
+  }
+
+  test("verify headroom: a finite non-negative number wins, anything else means the default") {
+    assert(Session.nonNegative(Some("0"), 10.0) === 0.0)
+    assert(Session.nonNegative(Some(" 2.5 "), 10.0) === 2.5)
+    Seq(None, Some(""), Some("-1"), Some("abc"), Some("NaN"), Some("Infinity"), Some("-0.5"))
+      .foreach { raw =>
+        assert(Session.nonNegative(raw, 10.0) === 10.0, s"SPARK_GRAFT_VERIFY_HEADROOM_GB=$raw")
+      }
+  }
+
   test("zero-sample queries fail certification") {
     val l = line(1.05, Map("q01_agg" -> 5, "st_window_agg" -> 0))
     assert(l.contains("\"certified\":false"), l)

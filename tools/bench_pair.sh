@@ -3,17 +3,16 @@
 # DuckDB baseline on the SAME oracle SQL, back-to-back on a quiet box
 # so both artifacts carry the same data_fp (BASELINE.md comparability
 # rule). Serializes on the graft lock via tools/run.sh; the DuckDB leg
-# additionally takes the duck lock.
+# additionally takes the duck lock. Cores and heap default to the
+# machine's (graft.Session, tools/run.sh); DuckDB picks its own memory
+# limit from the machine.
 # Usage: tools/bench_pair.sh <sf_dir> <graft_out.json> <duck_out.json> [duck_reps]
 set -e
 cd "$(dirname "$0")/.."
 SF=$1; GOUT=$2; DOUT=$3; REPS=${4:-3}
 SQL=${ORACLE_SQL_JSON:-target/verify_r13/oracle_sql.json}
-SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-  SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-24g} \
-  tools/run.sh graft.Bench 2>/dev/null | tail -1 > "$GOUT"
+SPARK_GRAFT_SF_DIR="$SF" tools/run.sh graft.Bench 2>/dev/null | tail -1 > "$GOUT"
 cat "$GOUT"
-ORACLE_DUCKDB_MEM=${ORACLE_DUCKDB_MEM:-80GB} \
-  flock -w 86400 target/.duck.lock \
+flock -w 86400 target/.duck.lock \
   python3 tools/baseline_duckdb.py "$SF" "$SQL" "$REPS" > "$DOUT"
 cat "$DOUT"

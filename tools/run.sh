@@ -19,10 +19,13 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens=java.base/$p=ALL-UNNAMED"
 done
 mkdir -p target
+# heap: SPARK_DRIVER_MEM, else half of MemTotal clamped to 2-8 GiB (the
+# rule perfbench and the test suite use)
+MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}
 LOCKARGS=()
 if [ "${GRAFT_NO_LOCK:-0}" != 1 ]; then
   LOCKARGS=(flock -w 86400 target/.graft.lock)
 fi
-exec "${LOCKARGS[@]}" java $OPENS -Xmx${SPARK_DRIVER_MEM:-24g} \
+exec "${LOCKARGS[@]}" java $OPENS -Xmx$MEM \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
