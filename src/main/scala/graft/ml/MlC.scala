@@ -2,6 +2,7 @@ package graft.ml
 
 import graft.{Q, Tables, Module}
 import graft.Exact._
+import graft.operators.Quantiles
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.{GBTClassifier, LogisticRegression}
 
@@ -138,7 +139,6 @@ object MlC extends Module {
     */
   private[graft] def exactAucParts(preds: DataFrame, score: Column,
       label: Column): (Long, Long, Double) = {
-    import preds.sparkSession.implicits._
     val c = preds.select(score.cast("double").as("x"), label.cast("double").as("y"))
       .groupBy(col("x"))
       .agg(count(lit(1)).as("ct"),
@@ -151,18 +151,10 @@ object MlC extends Module {
     val (lo, hi, nTot, nPos) = (r.getDouble(0), r.getDouble(1), r.getLong(2), r.getLong(3))
     val nNeg = nTot - nPos
     if (nPos == 0L || nNeg == 0L) return (nPos, nNeg, 0.5)
-    val bCol =
-      if (lo == hi) lit(1L)
-      else least(width_bucket(col("x"), lit(lo), lit(hi), lit(65536)), lit(65536L))
-    val perBucket = c.groupBy(bCol.as("bk")).agg(sum(col("ct")).as("t"))
-      .collect().map(row => (row.getLong(0), row.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsets = perBucket.map { case (bk, t) => val o = (bk, acc); acc += t; o }
-    val offDf = broadcast(offsets.toSeq.toDF("ob", "off"))
-    val w = Window.partitionBy(col("bk")).orderBy(col("x"))
+    val bucketed = c.withColumn("b", Quantiles.bucketOf(col("x"), lit(lo), lit(hi)))
+    val w = Window.partitionBy(col("b")).orderBy(col("x"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val doubledRankSum = c.withColumn("bk", bCol)
-      .join(offDf, col("bk") === col("ob"))
+    val doubledRankSum = Quantiles.withBucketOffsets(bucketed, col("x"), Seq("off" -> col("ct")))
       .withColumn("below", col("off") + sum(col("ct")).over(w) - col("ct"))
       .agg(sum((col("cp") * (col("below") * 2L + col("ct") + 1L))
         .cast(org.apache.spark.sql.types.DecimalType(38, 0))).cast("double"))
@@ -905,7 +897,7 @@ object MlC extends Module {
     "ml_lift",
     (s, d) => {
       val preds = logregPredictions(s, d)
-      val fences = graft.operators.Quantiles.exactQuantiles(
+      val fences = Quantiles.exactQuantiles(
         preds, Seq("prob_1"), (1 to 9).map(_ / 10.0)).map(_._3)
       val decile = fences.foldLeft(lit(10L)) { (acc, f) =>
         acc - when(col("prob_1") > lit(f), 1L).otherwise(0L)
@@ -977,7 +969,7 @@ object MlC extends Module {
       val (train, test) = split(fitFrame(s, d))
       val eps = 1e-6
       val rows = continuous.map { f =>
-        val fences = graft.operators.Quantiles.exactQuantiles(
+        val fences = Quantiles.exactQuantiles(
           train, Seq(f), (1 to 9).map(_ / 10.0)).map(_._3)
         def bin(df: DataFrame): Map[Long, Long] = {
           val b = fences.foldLeft(lit(1L)) { (acc, v) =>
@@ -1377,7 +1369,7 @@ object MlC extends Module {
         .join(customerFeatures(s, d).select(col("c_custkey"), col("total_spend")),
           "c_custkey")
         .graftCheckpoint()
-      val fences = graft.operators.Quantiles.exactQuantiles(
+      val fences = Quantiles.exactQuantiles(
           preds, Seq("total_spend"), (1 to 9).map(_ * 0.1).toSeq)
         .sortBy(_._2).map(_._3)
       val decile = fences.zipWithIndex.foldRight(lit(10L)) {

@@ -51,44 +51,28 @@ import org.apache.spark.sql.functions._
   * machinery — no single-partition stage there either.
   */
 object BudgetSelect {
-  val Buckets = 65536
-
-  /** In-bucket work above this row count triggers the sub-bucket level. */
-  val RefineLimit: Long = 1L << 22
+  import Quantiles.bucketOf
 
   /** Test instrumentation: sub-bucket refinements in the last call. */
   private[graft] var lastRefineCount: Int = 0
 
-  private def bucketCol(x: Column, lo: Double, hi: Double): Column =
-    least(width_bucket(x, lit(lo), lit(hi), lit(Buckets)), lit(Buckets.toLong))
-
-  /** Per-id-bucket weight offsets for a tied-score population (rows with
-    * score in [smin, smax], one distinct value by construction):
-    * (sub-bucket, cumulative weight before it), accumulated in id-ASC
-    * order from `off0` — exact because within a tied score the
-    * (score DESC, id ASC) order is id ASC and the id-bucket map is
-    * monotone in id. ≤ 65536 metadata rows.
+  /** (sub-bucket, cumulative weight before it) over `sub` bucketed by
+    * `order` across [lo, hi], accumulated from `off0` in `order`'s
+    * direction — exact because the bucket map is monotone in `order`.
+    * Within a tied score the (score DESC, id ASC) order is id ASC, so a
+    * tied-score population passes its id ascending. ≤ 65536 metadata rows.
     */
-  private def idOffsets(df: DataFrame, id: String, w: String,
-      ilo: Double, ihi: Double, off0: Long,
-      scoreRange: Option[(Column, Double, Double)]): Seq[(Long, Long)] = {
-    val base = scoreRange match {
-      case Some((s, smin, smax)) => df.filter(s >= smin && s <= smax)
-      case None => df
-    }
-    val sub = base
-      .select(bucketCol(col(id).cast("double"), ilo, ihi).as("sb"), col(w).as("w"))
-      .groupBy("sb").agg(sum(col("w")).as("sbw")).collect()
-      .map(r2 => (r2.getLong(0), r2.getLong(1))).sortBy(_._1)
-    var cum = off0
-    sub.toSeq.map { case (sbId, sbw) => val o = (sbId, cum); cum += sbw; o }
-  }
+  private def subOffsets(sub: DataFrame, order: Column, w: String, lo: Double, hi: Double,
+      off0: Long, descending: Boolean): Seq[(Long, Long)] =
+    Quantiles.bucketOffsets(sub.withColumn("b", bucketOf(order.cast("double"), lit(lo), lit(hi))),
+        order, Seq(col(w)), descending = descending)
+      .map(o => (o.b, off0 + o.off.head.toLong))
 
   /** Rows of `df` whose (score DESC, id ASC) cumulative `w` stays within
     * frac·total(w), with their exact cumulative weight as `cum_w`.
     */
   def selectToBudget(df: DataFrame, id: String, score: String, w: String,
-      frac: Double, refineLimit: Long = RefineLimit): DataFrame = {
+      frac: Double, refineLimit: Long = Quantiles.RefineLimit): DataFrame = {
     lastRefineCount = 0
     val spark = df.sparkSession
     import spark.implicits._
@@ -114,20 +98,17 @@ object BudgetSelect {
         return df.withColumn("cum_w", col(w).cast("long"))
           .filter(col("cum_w").cast("double") <= budget)
           .select(keep: _*)
-      val offDf = broadcast(
-        idOffsets(df, id, w, ilo, ihi, 0L, None).toDF("sb", "off"))
-      return df
-        .withColumn("sb", bucketCol(col(id).cast("double"), ilo, ihi))
-        .join(offDf, Seq("sb"))
+      val bucketed = df.withColumn("b", bucketOf(col(id).cast("double"), lit(ilo), lit(ihi)))
+      return Quantiles.withBucketOffsets(bucketed, col(id), Seq("off" -> col(w)))
         .withColumn("cum_w", col("off") + sum(col(w)).over(
-          Window.partitionBy(col("sb")).orderBy(col(id))
+          Window.partitionBy(col("b")).orderBy(col(id))
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .filter(col("cum_w").cast("double") <= budget)
         .select(keep: _*)
     }
 
     // job 2 — per-bucket weight totals + population bounds + row counts
-    val hist = df.select(bucketCol(col(score).cast("double"), lo, hi).as("b"),
+    val hist = df.select(bucketOf(col(score).cast("double"), lit(lo), lit(hi)).as("b"),
         col(score).cast("double").as("s"), col(w).as("w"),
         col(id).cast("double").as("i"))
       .groupBy("b").agg(sum(col("w")).as("bw"), min(col("s")).as("bmin"),
@@ -161,22 +142,13 @@ object BudgetSelect {
     val offsets = Seq.newBuilder[(Long, Long, Long)] // (b, sb, off)
     survivorsL.foreach { case s @ (b, off, bmin, bmax, _, imin, imax) =>
       if (!isCrowded(s)) offsets += ((b, 0L, off))
-      else if (bmin != bmax) {
+      else {
         lastRefineCount += 1
-        val sub = df
-          .filter(col(score) >= bmin && col(score) <= bmax)
-          .select(bucketCol(col(score).cast("double"), bmin, bmax).as("sb"), col(w).as("w"))
-          .groupBy("sb").agg(sum(col("w")).as("sbw")).collect()
-          .map(r2 => (r2.getLong(0), r2.getLong(1))).sortBy(-_._1)
-        var subCum = off
-        sub.foreach { case (sb, sbw) =>
-          offsets += ((b, sb, subCum))
-          subCum += sbw
-        }
-      } else {
-        lastRefineCount += 1
-        idOffsets(df, id, w, imin, imax, off, Some((col(score), bmin, bmax)))
-          .foreach { case (sb, o) => offsets += ((b, sb, o)) }
+        val sub = df.filter(col(score) >= bmin && col(score) <= bmax)
+        val subs =
+          if (bmin != bmax) subOffsets(sub, col(score), w, bmin, bmax, off, descending = true)
+          else subOffsets(sub, col(id), w, imin, imax, off, descending = false)
+        subs.foreach { case (sb, o) => offsets += ((b, sb, o)) }
       }
     }
 
@@ -184,13 +156,13 @@ object BudgetSelect {
     // (bucket, sub-bucket) offset + intra running sum
     val sb = crowded.foldLeft(lit(0L)) { case (acc, (b, _, bmin, bmax, _, imin, imax)) =>
       val subCol =
-        if (bmin != bmax) bucketCol(col(score).cast("double"), bmin, bmax)
-        else bucketCol(col(id).cast("double"), imin, imax)
+        if (bmin != bmax) bucketOf(col(score).cast("double"), lit(bmin), lit(bmax))
+        else bucketOf(col(id).cast("double"), lit(imin), lit(imax))
       when(col("b") === b, subCol).otherwise(acc)
     }
     val offDf = broadcast(offsets.result().toDF("b", "sb", "off"))
     df.filter(col(score) >= bracketMin)
-      .withColumn("b", bucketCol(col(score).cast("double"), lo, hi))
+      .withColumn("b", bucketOf(col(score).cast("double"), lit(lo), lit(hi)))
       .withColumn("sb", sb)
       .join(offDf, Seq("b", "sb"))
       .withColumn("cum_w",

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Distributed exact quantiles (pandas `quantile` linear-interpolation
   * semantics — RemoveOutliers.fit, reference processing.py:47-55).
@@ -56,8 +59,78 @@ object Quantiles {
     */
   private[graft] var lastRefineCount: Int = 0
 
-  private def bucketCol(x: Column, lo: Double, hi: Double): Column =
-    least(width_bucket(x, lit(lo), lit(hi), lit(Buckets)), lit(Buckets.toLong))
+  /** Bucket id of `x` over [lo, hi]: 1..[[Buckets]], monotone in `x`, so
+    * equal values share a bucket; 1 for a degenerate range (lo == hi),
+    * where width_bucket itself is NULL. Column bounds, so literal bounds
+    * (the guard folds away) and broadcast-joined per-group bounds share
+    * one formula; a single fixed-size `if`, never a per-group arm.
+    */
+  def bucketOf(x: Column, lo: Column, hi: Column): Column =
+    call_function("if", lo === hi, lit(1L),
+      least(width_bucket(x, lo, hi, lit(Buckets)), lit(Buckets.toLong)))
+
+  /** One bucket of an offset table: group key (null when ungrouped),
+    * bucket id, each weight's bucket total and exclusive prefix within the
+    * group, and whether every value in the bucket is equal.
+    */
+  final case class BucketOffset(g: String, b: Long, tot: Seq[BigInt], off: Seq[BigInt],
+      pointmass: Boolean)
+
+  /** The bucket-offset recipe's driver half — an exact running sum over a
+    * value order without a single-partition sort. `bucketed` carries the
+    * bucket id `b` (from [[bucketOf]]) and, when `grouped`, the string
+    * group key `g`. ONE job collects each (g, b)'s weight totals and
+    * `value` range (≤ groups·[[Buckets]] rows, bounded by construction);
+    * the driver walks each group's buckets in value order (descending
+    * when `descending`) and forms the exclusive prefix of every weight in
+    * BigInt, so Decimal(38,0) cent sums cannot wrap.
+    */
+  def bucketOffsets(bucketed: DataFrame, value: Column, weights: Seq[Column],
+      grouped: Boolean = false, descending: Boolean = false): Seq[BucketOffset] = {
+    val keys = (if (grouped) Seq(col("g")) else Nil) :+ col("b")
+    val k = keys.length
+    bucketed.groupBy(keys: _*)
+      .agg((min(value) === max(value)).as("pointmass"), weights.map(w => sum(w)): _*)
+      .collect().toSeq.map { r =>
+        val tot = weights.indices.map(i => r.get(k + 1 + i) match {
+          case l: Long => BigInt(l)
+          case d: java.math.BigDecimal => BigInt(d.toBigIntegerExact)
+        })
+        BucketOffset(if (grouped) r.getString(0) else null, r.getLong(k - 1), tot, Nil,
+          r.getBoolean(k))
+      }
+      .groupBy(_.g).values.toSeq.flatMap { rows =>
+        val ordered = rows.sortBy(o => if (descending) -o.b else o.b)
+        val prefixes = ordered.scanLeft(weights.map(_ => BigInt(0))) { (acc, o) =>
+          acc.zip(o.tot).map { case (a, t) => a + t }
+        }
+        ordered.zip(prefixes).map { case (o, off) => o.copy(off = off) }
+      }
+  }
+
+  /** [[bucketOffsets]] broadcast back onto `bucketed`: every row gains its
+    * bucket's exclusive prefix of weight i as column `weights(i)._1`
+    * (typed as that weight's sum: long or decimal) plus `pointmass`.
+    * Callers finish with their own in-bucket window over
+    * `partitionBy([g,] b)`, e.g. `off + rank()` or `off + sum(w)`.
+    */
+  def withBucketOffsets(bucketed: DataFrame, value: Column, weights: Seq[(String, Column)],
+      grouped: Boolean = false, descending: Boolean = false): DataFrame = {
+    val keys = (if (grouped) Seq("g") else Nil) :+ "b"
+    // analysis only, no job: each weight sum's type types its offset column
+    val offFields = bucketed.select(weights.map { case (n, w) => sum(w).as(n) }: _*)
+      .schema.fields.toSeq
+    val schema = StructType(keys.map(k => StructField(k, if (k == "g") StringType else LongType)) ++
+      offFields :+ StructField("pointmass", BooleanType))
+    val rows = bucketOffsets(bucketed, value, weights.map(_._2), grouped, descending).map { o =>
+      val offs = o.off.zip(offFields).map {
+        case (v, f) if f.dataType == LongType => v.toLong
+        case (v, _) => new java.math.BigDecimal(v.bigInteger)
+      }
+      Row.fromSeq((if (grouped) Seq(o.g) else Nil) ++ (o.b +: offs) :+ o.pointmass)
+    }
+    bucketed.join(broadcast(bucketed.sparkSession.createDataFrame(rows.asJava, schema)), keys)
+  }
 
   /** Job-2 shape, exposed for PlanAuditSpec: stacked per-bucket histogram —
     * must stay a pure partial+final hash aggregate (no Window, no
@@ -70,7 +143,7 @@ object Quantiles {
     val stacked = df.select(explode(array(entries: _*)).as("s"))
       .select(col("s.c").as("c"), col("s.x").as("x"))
     val b = coalesce(specs.map { case (c, lo, hi) =>
-      when(col("c") === c, bucketCol(col("x"), lo, hi))
+      when(col("c") === c, bucketOf(col("x"), lit(lo), lit(hi)))
     }: _*)
     stacked.groupBy(col("c"), b.as("b"))
       .agg(count(lit(1)).as("bc"), min(col("x")).as("bmin"), max(col("x")).as("bmax"))
@@ -86,7 +159,7 @@ object Quantiles {
       .reduce(_ || _)
     df.filter(cond)
       .select(col(c).cast("double").as("x"))
-      .withColumn("b", bucketCol(col("x"), lo, hi))
+      .withColumn("b", bucketOf(col("x"), lit(lo), lit(hi)))
       .withColumn("lrn", row_number().over(
         Window.partitionBy(col("b")).orderBy(col("x"))).cast("long"))
   }
@@ -104,7 +177,7 @@ object Quantiles {
     val base = df.filter(col(g).isin(bounds.map(_._1): _*))
       .select(col(g).as("g"), col(x).cast("double").as("x"))
     val b = coalesce(bounds.map { case (gv, lo, hi) =>
-      when(col("g") === gv, bucketCol(col("x"), lo, hi))
+      when(col("g") === gv, bucketOf(col("x"), lit(lo), lit(hi)))
     }: _*)
     base.groupBy(col("g"), b.as("b"))
       .agg(count(lit(1)).as("bc"), min(col("x")).as("bmin"), max(col("x")).as("bmax"))
@@ -122,7 +195,7 @@ object Quantiles {
     }.reduce(_ || _)
     val base = df.filter(cond).select(col(g).as("g"), col(x).cast("double").as("x"))
     val b = coalesce(bounds.toSeq.map { case (gv, (lo, hi)) =>
-      when(col("g") === gv, bucketCol(col("x"), lo, hi))
+      when(col("g") === gv, bucketOf(col("x"), lit(lo), lit(hi)))
     }: _*)
     base.withColumn("b", b)
       .withColumn("lrn", row_number().over(

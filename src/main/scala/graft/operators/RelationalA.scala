@@ -1226,7 +1226,6 @@ object RelationalA extends Module {
   private val q48 = Q(
     "q48_percent_rank",
     (s, d) => {
-      import s.implicits._
       val o = Tables.orders(s, d)
       val r = o.agg(min(col("o_totalprice")), max(col("o_totalprice")),
         count(lit(1))).head()
@@ -1234,23 +1233,16 @@ object RelationalA extends Module {
       if (lo == hi) {
         o.select(col("o_orderkey"), col("o_totalprice"), lit(0.0).as("pr"))
       } else {
-        val bCol = least(width_bucket(col("o_totalprice"), lit(lo), lit(hi),
-          lit(65536)), lit(65536L))
         // per-bucket count + value range: a bucket whose min == max is a
         // POINT MASS (one price dominating — the skew case) and every
         // row in it has rank = offset + 1 with NO sort at all; only
         // value-diverse buckets go through the in-bucket rank window.
         // The skewed case is the CHEAP case (the Quantiles discipline).
-        val counts = o.select(bCol.as("b"), col("o_totalprice").as("v"))
-          .groupBy("b").agg(count(lit(1)).as("c"), min("v").as("bmin"), max("v").as("bmax"))
-          .collect().map(row => (row.getLong(0), row.getLong(1),
-            row.getDouble(2), row.getDouble(3))).sortBy(_._1).toSeq
-        val cum = counts.scanLeft(0L) { case (acc, (_, c, _, _)) => acc + c }
-        val offsets = counts.map(t => (t._1, t._3 == t._4)).zip(cum)
-          .map { case ((b, pm), off) => (b, off, pm) }
-        val offDf = offsets.toDF("b", "off", "pointmass")
+        val bucketed = o.withColumn("b",
+          Quantiles.bucketOf(col("o_totalprice"), lit(lo), lit(hi)))
+        val keyed = Quantiles.withBucketOffsets(bucketed, col("o_totalprice"),
+          Seq("off" -> lit(1L)))
         val w = Window.partitionBy(col("b")).orderBy(col("o_totalprice"))
-        val keyed = o.withColumn("b", bCol).join(broadcast(offDf), "b")
         val diverse = keyed.filter(!col("pointmass"))
           .withColumn("grank", col("off") + rank().over(w))
         val point = keyed.filter(col("pointmass"))

@@ -307,22 +307,10 @@ object RelationalC extends Module {
           count(lit(1)).as("ng"))
         .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getLong(3)))
       val statsDf = broadcast(stats.toSeq.toDF("g", "lo", "hi", "ng"))
-      val keyed0 = l.join(statsDf, col(g) === col("g"))
-      val bCol = when(col("lo") === col("hi"), lit(1L))
-        .otherwise(least(width_bucket(col(v), col("lo"), col("hi"), lit(65536)), lit(65536L)))
-      val counts = keyed0.select(col("g").as("cg"), bCol.as("b"), col(v).as("cv"))
-        .groupBy("cg", "b")
-        .agg(count(lit(1)).as("c"), min("cv").as("bmin"), max("cv").as("bmax"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3), r.getDouble(4)))
-      val offsets = counts.groupBy(_._1).toSeq.flatMap { case (gv, rows) =>
-        val sorted = rows.sortBy(_._2)
-        val cum = sorted.scanLeft(0L)(_ + _._3)
-        sorted.zip(cum).map { case ((_, b, _, bmin, bmax), off) => (gv, b, off, bmin == bmax) }
-      }
-      val offDf = broadcast(offsets.toDF("og", "ob", "off", "pointmass"))
-      val keyed = keyed0.withColumn("b", bCol)
-        .join(offDf, col("g") === col("og") && col("b") === col("ob"))
+      val bucketed = l.join(statsDf, col(g) === col("g"))
+        .withColumn("b", Quantiles.bucketOf(col(v), col("lo"), col("hi")))
+      val keyed = Quantiles.withBucketOffsets(bucketed, col(v), Seq("off" -> lit(1L)),
+        grouped = true)
       val w = Window.partitionBy(col("g"), col("b")).orderBy(col(v))
       val diverse = keyed.filter(!col("pointmass"))
         .withColumn("grank", col("off") + rank().over(w))
@@ -450,7 +438,6 @@ object RelationalC extends Module {
   private val q66 = Q(
     "q66_ks_test",
     (s, d) => {
-      import s.implicits._
       val u = Tables.lineitem(s, d)
         .filter(col("l_linestatus").isin("O", "F"))
         .select(col("l_extendedprice").as("x"),
@@ -460,22 +447,10 @@ object RelationalC extends Module {
       val r = c.agg(min(col("x")), max(col("x")),
         sum(col("ca")), sum(col("cb"))).head()
       val (lo, hi, na, nb) = (r.getDouble(0), r.getDouble(1), r.getLong(2), r.getLong(3))
-      val bCol =
-        if (lo == hi) lit(1L)
-        else least(width_bucket(col("x"), lit(lo), lit(hi), lit(65536)), lit(65536L))
-      val perBucket = c.groupBy(bCol.as("bk"))
-        .agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"))
-        .collect().map(row => (row.getLong(0), row.getLong(1), row.getLong(2)))
-        .sortBy(_._1)
-      var (accA, accB) = (0L, 0L)
-      val offsets = perBucket.map { case (bk, ta, tb) =>
-        val row = (bk, accA, accB); accA += ta; accB += tb; row
-      }
-      val offDf = broadcast(offsets.toSeq.toDF("ob", "offa", "offb"))
-      val w = Window.partitionBy(col("bk")).orderBy(col("x"))
+      val bucketed = c.withColumn("b", Quantiles.bucketOf(col("x"), lit(lo), lit(hi)))
+      val w = Window.partitionBy(col("b")).orderBy(col("x"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      c.withColumn("bk", bCol)
-        .join(offDf, col("bk") === col("ob"))
+      Quantiles.withBucketOffsets(bucketed, col("x"), Seq("offa" -> col("ca"), "offb" -> col("cb")))
         .withColumn("cuma", col("offa") + sum(col("ca")).over(w))
         .withColumn("cumb", col("offb") + sum(col("cb")).over(w))
         .agg(max(abs(col("cuma").cast("double") / lit(na.toDouble) -
@@ -1035,23 +1010,14 @@ object RelationalC extends Module {
   private val q76 = Q(
     "q76_gini",
     (s, d) => {
-      import s.implicits._
       val spend = Tables.orders(s, d).groupBy(col("o_custkey"))
         .agg(sum(Exact.qzl(col("o_totalprice"), 100.0)).as("z"))
         .select(col("z").cast("double").as("x"))
       val r = spend.agg(min(col("x")), max(col("x")), count(lit(1))).head()
       val (lo, hi, n) = (r.getDouble(0), r.getDouble(1), r.getLong(2))
-      val bCol =
-        if (lo == hi) lit(1L)
-        else least(width_bucket(col("x"), lit(lo), lit(hi), lit(65536)), lit(65536L))
-      val perBucket = spend.groupBy(bCol.as("bk")).agg(count(lit(1)).as("c"))
-        .collect().map(row => (row.getLong(0), row.getLong(1))).sortBy(_._1)
-      var acc = 0L
-      val offsets = perBucket.map { case (bk, c) => val o = (bk, acc); acc += c; o }
-      val offDf = broadcast(offsets.toSeq.toDF("ob", "off"))
-      val w = Window.partitionBy(col("bk")).orderBy(col("x"))
-      val g = spend.withColumn("bk", bCol)
-        .join(offDf, col("bk") === col("ob"))
+      val bucketed = spend.withColumn("b", Quantiles.bucketOf(col("x"), lit(lo), lit(hi)))
+      val w = Window.partitionBy(col("b")).orderBy(col("x"))
+      val g = Quantiles.withBucketOffsets(bucketed, col("x"), Seq("off" -> lit(1L)))
         .withColumn("rank", col("off") + row_number().over(w))
         .agg(
           // multiply in DECIMAL: rank·x ≈ n·Σx per row brushes int64
@@ -1092,7 +1058,6 @@ object RelationalC extends Module {
   private val q77 = Q(
     "q77_spearman",
     (s, d) => {
-      import s.implicits._
       val l = Tables.lineitem(s, d).select(
         col("l_quantity").as("x"), col("l_extendedprice").as("y"))
       // avg-tie rank table for one column: (value, doubled avg rank)
@@ -1100,18 +1065,10 @@ object RelationalC extends Module {
         val cnt = l.groupBy(col(c).as("v")).agg(count(lit(1)).as("ct"))
         val r = cnt.agg(min(col("v")), max(col("v"))).head()
         val (lo, hi) = (r.getDouble(0), r.getDouble(1))
-        val bCol =
-          if (lo == hi) lit(1L)
-          else least(width_bucket(col("v"), lit(lo), lit(hi), lit(65536)), lit(65536L))
-        val perBucket = cnt.groupBy(bCol.as("bk")).agg(sum(col("ct")).as("t"))
-          .collect().map(row => (row.getLong(0), row.getLong(1))).sortBy(_._1)
-        var acc = 0L
-        val offsets = perBucket.map { case (bk, t) => val o = (bk, acc); acc += t; o }
-        val offDf = broadcast(offsets.toSeq.toDF("ob", "off"))
-        val w = Window.partitionBy(col("bk")).orderBy(col("v"))
+        val bucketed = cnt.withColumn("b", Quantiles.bucketOf(col("v"), lit(lo), lit(hi)))
+        val w = Window.partitionBy(col("b")).orderBy(col("v"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        cnt.withColumn("bk", bCol)
-          .join(offDf, col("bk") === col("ob"))
+        Quantiles.withBucketOffsets(bucketed, col("v"), Seq("off" -> col("ct")))
           .withColumn("below", col("off") + sum(col("ct")).over(w) - col("ct"))
           .select(col("v").as(s"${c}_v"),
             (col("below") * 2L + col("ct") + 1L).as(s"${c}_u2"))
@@ -1242,7 +1199,6 @@ object RelationalC extends Module {
   private val q79 = Q(
     "q79_mann_whitney",
     (s, d) => {
-      import s.implicits._
       val u0 = Tables.lineitem(s, d)
         .filter(col("l_linestatus").isin("O", "F"))
         .select(col("l_extendedprice").as("x"),
@@ -1251,19 +1207,11 @@ object RelationalC extends Module {
         .agg(count(lit(1)).as("ct"), sum(col("isa")).as("ca"))
       val r = cnt.agg(min(col("x")), max(col("x"))).head()
       val (lo, hi) = (r.getDouble(0), r.getDouble(1))
-      val bCol =
-        if (lo == hi) lit(1L)
-        else least(width_bucket(col("x"), lit(lo), lit(hi), lit(65536)), lit(65536L))
-      val perBucket = cnt.groupBy(bCol.as("bk")).agg(sum(col("ct")).as("t"))
-        .collect().map(row => (row.getLong(0), row.getLong(1))).sortBy(_._1)
-      var acc = 0L
-      val offsets = perBucket.map { case (bk, t) => val o = (bk, acc); acc += t; o }
-      val offDf = broadcast(offsets.toSeq.toDF("ob", "off"))
-      val w = Window.partitionBy(col("bk")).orderBy(col("x"))
+      val bucketed = cnt.withColumn("b", Quantiles.bucketOf(col("x"), lit(lo), lit(hi)))
+      val w = Window.partitionBy(col("b")).orderBy(col("x"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       def dz(c: Column): Column = c.cast(DecimalType(38, 0))
-      val g = cnt.withColumn("bk", bCol)
-        .join(offDf, col("bk") === col("ob"))
+      val g = Quantiles.withBucketOffsets(bucketed, col("x"), Seq("off" -> col("ct")))
         .withColumn("below", col("off") + sum(col("ct")).over(w) - col("ct"))
         // doubled avg rank of the value: 2·below + ct + 1 (integral)
         .agg(

@@ -114,6 +114,11 @@ object RelationalD extends Module {
   // (value, orderkey, linenumber tiebreak — same total order as the
   // oracle's naive window). Driver metadata stays ≤ groups × 65536 rows
   // by construction.
+  /** Most groups [[trimmedMean]] accepts: its driver-side (group, bucket)
+    * metadata grows with group cardinality.
+    */
+  val TrimmedMaxGroups = 64
+
   /** 1/`trimDen`-each-side trimmed mean of `v` per `g`, cent-grid exact,
     * without a group-keyed global sort: the (group, bucket) histogram
     * assigns every bucket a rank interval; fully-inside buckets answer
@@ -134,49 +139,39 @@ object RelationalD extends Module {
     // ≤ 65536 driver rows respectively) — fine for the registered
     // low-cardinality callers (q83 trims 3 return-flags), an OOM for a
     // high-cardinality one. Fail loudly instead: the limit(max+1) keeps
-    // even the guard's own collect bounded. Raise via
-    // spark.graft.trimmed.max.groups if a caller really has more.
-    val maxGroups = s.conf.getOption("spark.graft.trimmed.max.groups")
-      .map(_.toInt).getOrElse(64)
+    // even the guard's own collect bounded.
     val stats = l.groupBy(col(g)).agg(min(col(v)).as("lo"), max(col(v)).as("hi"),
         count(lit(1)).as("ng"))
-      .limit(maxGroups + 1)
+      .limit(TrimmedMaxGroups + 1)
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getLong(3)))
-    require(stats.length <= maxGroups,
-      s"trimmedMean: group cardinality of '$g' exceeds $maxGroups — the " +
-        "driver-side (group, bucket) histogram would be unbounded; " +
-        "pre-aggregate or raise spark.graft.trimmed.max.groups")
+    require(stats.length <= TrimmedMaxGroups,
+      s"trimmedMean: group cardinality of '$g' exceeds $TrimmedMaxGroups — the " +
+        "driver-side (group, bucket) histogram would be unbounded; pre-aggregate first")
+    val ngOf = stats.map(st => st._1 -> st._4).toMap
     val statsDf = broadcast(stats.toSeq.toDF("sg", "lo", "hi", "ng"))
     val keyed0 = l.withColumn("zc", zc).join(statsDf, col(g) === col("sg"))
-    val bCol = when(col("lo") === col("hi"), lit(1L))
-      .otherwise(least(width_bucket(col(v), col("lo"), col("hi"), lit(65536)), lit(65536L)))
-    val hist = keyed0.select(col("sg").as("cg"), bCol.as("b"), col("zc").as("cz"))
-      .groupBy("cg", "b")
-      .agg(count(lit(1)).as("c"), sum(col("cz").cast(DecimalType(38, 0))).as("sz"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        BigDecimal(r.getDecimal(3))))
+      .withColumn("b", Quantiles.bucketOf(col(v), col("lo"), col("hi")))
+    val hist = keyed0.select(col("sg").as("g"), col("b"), col(v).as("x"),
+      col("zc").cast(DecimalType(38, 0)).as("sz"))
     // per group: keep ranks in (cut, ng-cut]; classify every bucket as
     // fully-inside / fully-outside / fence-straddling
     case class B(g: String, b: Long, off: Long, cut: Long, ng: Long,
         inside: Boolean, outside: Boolean, c: Long, sum: BigDecimal)
-    val plan = hist.groupBy(_._1).toSeq.flatMap { case (gv, rows) =>
-      val ng = stats.find(_._1 == gv).get._4
-      val cut = ng / trimDen
-      val sorted = rows.sortBy(_._2)
-      val offs = sorted.scanLeft(0L)(_ + _._3)
-      sorted.zip(offs).map { case ((_, b, c, sz), off) =>
+    val plan = Quantiles.bucketOffsets(hist, col("x"), Seq(lit(1L), col("sz")), grouped = true)
+      .map { o =>
+        val ng = ngOf(o.g)
+        val cut = ng / trimDen
+        val (off, c) = (o.off.head.toLong, o.tot.head.toLong)
         val first = off + 1; val last = off + c
-        B(gv, b, off, cut, ng,
+        B(o.g, o.b, off, cut, ng,
           inside = first > cut && last <= ng - cut,
-          outside = last <= cut || first > ng - cut, c, sz)
+          outside = last <= cut || first > ng - cut, c, BigDecimal(o.tot(1)))
       }
-    }
     val planDf = broadcast(plan
       .map(p => (p.g, p.b, p.off, p.cut, p.ng, p.inside, p.outside))
       .toDF("og", "ob", "off", "cut", "ong", "inside", "outside"))
     // straddling buckets: rank row-by-row with the oracle's tiebreak
-    val keyed = keyed0.withColumn("b", bCol)
-      .join(planDf, col(g) === col("og") && col("b") === col("ob"))
+    val keyed = keyed0.join(planDf, col(g) === col("og") && col("b") === col("ob"))
     val straddle = keyed.filter(!col("inside") && !col("outside"))
     val w = Window.partitionBy(col(g), col("b"))
       .orderBy(col(v) +: idCols.map(col): _*)
@@ -1154,42 +1149,27 @@ object RelationalD extends Module {
   private val q99 = Q(
     "q99_abc",
     (s, d) => {
-      import s.implicits._
       val l = Tables.lineitem(s, d)
       // checkpointed |parts| surface: the bucket fit, the bounded
       // bucket-sum metadata and the final pass reuse one reduction
       val perPart = l.groupBy(col("l_partkey"))
         .agg(sum(Exact.qzl(col("l_extendedprice"), 100.0)).as("cents"))
         .graftCheckpoint()
-      val fit = perPart.agg(min(col("cents")), max(col("cents"))).head()
+      val dec = col("cents").cast(DecimalType(38, 0))
+      val fit = perPart.agg(min(col("cents")), max(col("cents")), sum(dec)).head()
       val (blo, bhi) = (fit.getLong(0), fit.getLong(1))
-      val bCol = if (blo == bhi) lit(1L)
-        else least(width_bucket(col("cents").cast("double"),
-          lit(blo.toDouble), lit(bhi.toDouble), lit(65536)), lit(65536L))
-      val bucketed = perPart.withColumn("b", bCol)
-      // ≤ 65536 bucket rows — bounded metadata BY CONSTRUCTION, never
-      // data-proportional; BigInt offsets so a 100 TB cent total can't
-      // wrap the driver-side prefix
-      val bsums = bucketed.groupBy(col("b"))
-        .agg(sum(col("cents").cast(DecimalType(38, 0))).as("bc"))
-        .collect()
-        .map(r => (r.getLong(0), BigInt(r.getDecimal(1).toBigInteger)))
-        .sortBy(-_._1).toSeq
-      val offs = bsums.scanLeft(BigInt(0)) { case (acc, (_, c)) => acc + c }
-      val tot = offs.last
+      val tot = BigInt(fit.getDecimal(2).toBigInteger)
       // dec2d in Scala: exact hi/lo halves, the same two IEEE ops as
       // Exact.dec2d / sqlDec2d produce in-engine
       val totD = (tot >> 32).toDouble * 4294967296.0 +
         (tot & BigInt(0xFFFFFFFFL)).toDouble
-      val offDf = bsums.map(_._1).zip(offs)
-        .map { case (b, off) => (b, off.toString) }
-        .toDF("b", "off_s")
-        .select(col("b"), col("off_s").cast(DecimalType(38, 0)).as("off"))
+      val bucketed = perPart.withColumn("b", Quantiles.bucketOf(col("cents").cast("double"),
+        lit(blo.toDouble), lit(bhi.toDouble)))
       val w = Window.partitionBy(col("b"))
         .orderBy(desc("cents"), col("l_partkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = col("off") + sum(col("cents").cast(DecimalType(38, 0))).over(w)
-      bucketed.join(broadcast(offDf), "b")
+      val cum = col("off") + sum(dec).over(w)
+      Quantiles.withBucketOffsets(bucketed, col("cents"), Seq("off" -> dec), descending = true)
         .withColumn("cum_share", Exact.dec2d(cum) / lit(totD))
         .withColumn("abc_class",
           when(col("cum_share") <= 0.80, "A")

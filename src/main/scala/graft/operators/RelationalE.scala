@@ -100,7 +100,7 @@ object RelationalE extends Module {
     */
   /** The facts frame with its per-group bucket id attached: the fence
     * table (g, lo, hi) — bounded by group cardinality — broadcast-joins
-    * onto the facts and width_bucket computes from the JOINED columns.
+    * onto the facts and [[Quantiles.bucketOf]] reads the JOINED bounds.
     * No per-group literals in the expression tree: a when-chain keyed on
     * group value grows the generated code linearly with distinct groups
     * and falls out of codegen past ~10k groups (the 64KB method limit),
@@ -109,12 +109,9 @@ object RelationalE extends Module {
     */
   def weightedBucketed(facts: DataFrame,
       stats: Seq[(String, Double, Double)]): DataFrame = {
-    val sp = facts.sparkSession
-    val nB = Quantiles.Buckets
-    val fences = sp.createDataFrame(stats).toDF("fg", "f_lo", "f_hi")
+    val fences = facts.sparkSession.createDataFrame(stats).toDF("fg", "f_lo", "f_hi")
     facts.join(broadcast(fences), col("g") === col("fg"))
-      .withColumn("b",
-        least(width_bucket(col("x"), col("f_lo"), col("f_hi"), lit(nB)), lit(nB.toLong)))
+      .withColumn("b", Quantiles.bucketOf(col("x"), col("f_lo"), col("f_hi")))
       .drop("fg", "f_lo", "f_hi")
   }
 

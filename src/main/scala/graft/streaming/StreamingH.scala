@@ -605,6 +605,12 @@ object Streaming {
     }
   }
 
+  /** Microseconds since the epoch: java.sql.Timestamp carries ms in
+    * getTime and the full fractional second in getNanos.
+    */
+  private def us(t: java.sql.Timestamp): Long =
+    (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
+
   private def clicksAndPurchases(events: DataFrame): (DataFrame, DataFrame) = (
     events.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts")),
@@ -686,8 +692,6 @@ object Streaming {
     */
   def asofStream(events: Dataset[AsofEvent]): Dataset[AsofOut] = {
     import events.sparkSession.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
     events
       .withWatermark("ts", "2 hours")
       .groupByKey(_.user_id)
@@ -724,8 +728,6 @@ object Streaming {
     */
   def cdcStream(events: Dataset[CdcEvent]): Dataset[CdcRow] = {
     import events.sparkSession.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
     events
       .groupByKey(_.user_id)
       .mapGroupsWithState[CdcRow, CdcRow](GroupStateTimeout.NoTimeout()) {
@@ -758,8 +760,6 @@ object Streaming {
     */
   def scd2Stream(events: Dataset[CdcEvent]): Dataset[Scd2Row] = {
     import events.sparkSession.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[Scd2Row, Scd2Row](
@@ -798,8 +798,6 @@ object Streaming {
     */
   def growthStream(events: Dataset[CdcEvent]): Dataset[GrowthRow] = {
     import events.sparkSession.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
     def dayOf(t: java.sql.Timestamp): Long = t.getTime / 86400000L
     events
       .groupByKey(_.user_id)
@@ -847,8 +845,6 @@ object Streaming {
     */
   def gapFillStream(events: Dataset[CdcEvent]): Dataset[GapRow] = {
     import events.sparkSession.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
     def hourOf(t: java.sql.Timestamp): Long = t.getTime / 3600000L
     def tsOf(h: Long): java.sql.Timestamp = new java.sql.Timestamp(h * 3600000L)
     events
@@ -897,8 +893,6 @@ object Streaming {
     */
   def funnelStream(events: Dataset[CdcEvent]): Dataset[FunnelRow] = {
     import events.sparkSession.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
     events
       .groupByKey(_.user_id)
       .mapGroupsWithState[FunnelState, FunnelRow](GroupStateTimeout.NoTimeout()) {
@@ -945,8 +939,6 @@ object Streaming {
   def topkStateStream(events: Dataset[TkEvent], k: Int = 3,
       cap: Int = 150): Dataset[TkTop] = {
     import events.sparkSession.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
     val hourUs = 3600L * 1000000L
     events
       .withWatermark("ts", "2 hours")
@@ -1005,10 +997,6 @@ object Streaming {
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout()) {
         (userId: Long, evs: Iterator[SessEvent], state: GroupState[List[SessAcc]]) =>
-          // java.sql.Timestamp carries ms in getTime and the full
-          // fractional second in getNanos — keep microsecond precision
-          def us(t: java.sql.Timestamp): Long =
-            (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
           def ts(u: Long): java.sql.Timestamp = {
             val t = new java.sql.Timestamp((u / 1000000L) * 1000L)
             t.setNanos(((u % 1000000L) * 1000L).toInt)
@@ -1148,8 +1136,6 @@ object Streaming {
   def transitionsStream(events: Dataset[TransEvent],
       idleTtlMs: Option[Long] = None): Dataset[TransPair] = {
     import events.sparkSession.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[String, TransPair](
         org.apache.spark.sql.streaming.OutputMode.Append(),
@@ -1193,8 +1179,6 @@ object Streaming {
   def ewmaStream(events: Dataset[EwmaEvent],
       idleTtlMs: Option[Long] = None): Dataset[EwmaOut] = {
     import events.sparkSession.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[List[Long], EwmaOut](
         org.apache.spark.sql.streaming.OutputMode.Append(),
@@ -1304,8 +1288,6 @@ object Streaming {
   def expandingStream(events: Dataset[ExpEvent],
       idleTtlMs: Option[Long] = None): Dataset[ExpOut] = {
     import events.sparkSession.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[(Long, Long, BigDecimal), ExpOut](
         org.apache.spark.sql.streaming.OutputMode.Append(),

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.BudgetSelect
+import graft.operators.{BudgetSelect, Quantiles}
 
 /** Unit coverage for the distributed budget selection — the edge cases
   * the tx_budget_sample oracle (one well-behaved score column) doesn't
@@ -20,7 +20,7 @@ class BudgetSpec extends SparkSpec {
   }
 
   private def run(rows: Seq[(Long, Double, Long)], frac: Double,
-      refineLimit: Long = BudgetSelect.RefineLimit): Map[Long, Long] = {
+      refineLimit: Long = Quantiles.RefineLimit): Map[Long, Long] = {
     import spark.implicits._
     BudgetSelect.selectToBudget(rows.toDF("id", "score", "w"), "id", "score", "w",
         frac, refineLimit)

@@ -182,4 +182,144 @@ class QuantilesSpec extends SparkSpec {
     }
     assert(Quantiles.lastRefineCount > 0, "grouped refinement path did not trigger")
   }
+
+  // ---- the bucket-offset recipe: off + in-bucket window == naive window ----
+
+  /** Seeded values over the hard regimes of [[Quantiles.bucketOf]] with
+    * bucket width 1.0 (the anchors ±32768 fix [lo, hi]): tie runs ON
+    * bucket edges and one ulp either side, one bucket crowded with
+    * distinct values, a point-mass tie run, negative values.
+    */
+  private def offsetFrame(seed: Long): Seq[(Long, Double, Long)] = {
+    import org.scalacheck.{Gen, rng}
+    val value: Gen[Double] = Gen.oneOf(
+      Gen.choose(-40, 40).map(_.toDouble),
+      Gen.choose(-40, 40).map(k => math.nextDown(k.toDouble)),
+      Gen.choose(-40, 40).map(k => math.nextUp(k.toDouble)),
+      Gen.choose(0.0, 1e-9).map(_ + 3.0),
+      Gen.const(-7.0),
+      Gen.choose(-32768.0, 32768.0))
+    val rows = Gen.choose(1, 1200).flatMap(n => Gen.listOfN(n, Gen.zip(value, Gen.choose(1L, 5L))))
+    val xs = rows(Gen.Parameters.default, rng.Seed(seed)).get ++ Seq((-32768.0, 1L), (32768.0, 2L))
+    xs.zipWithIndex.map { case ((x, w), i) => (i.toLong, x, w) }
+  }
+
+  /** q48's form over (id, x, w): global rank (point-mass buckets skip the
+    * window), its percent_rank, and the running Σw in (x, id) order —
+    * once via [[Quantiles.withBucketOffsets]], once via the naive
+    * unpartitioned windows; compared exactly, doubles by raw bits.
+    */
+  private def assertUngroupedOffsets(rows: Seq[(Long, Double, Long)], clue: String): Unit = {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val df = rows.toDF("id", "x", "w")
+    val (lo, hi, n) = (rows.map(_._2).min, rows.map(_._2).max, rows.length)
+    val keyed = Quantiles.withBucketOffsets(
+      df.withColumn("b", Quantiles.bucketOf(col("x"), lit(lo), lit(hi))),
+      col("x"), Seq("off" -> lit(1L), "offw" -> col("w")))
+    val inB = Window.partitionBy(col("b")).orderBy(col("x"))
+    val got = keyed.select(col("id"),
+        when(col("pointmass"), col("off") + 1L).otherwise(col("off") + rank().over(inB))
+          .as("grank"),
+        (col("offw") + sum(col("w")).over(Window.partitionBy(col("b")).orderBy(col("x"), col("id"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))).as("cw"))
+      .select(col("id"), col("grank"), col("cw"),
+        ((col("grank") - 1L).cast("double") / lit((n - 1).toDouble)).as("pr"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
+    val world = Window.orderBy(col("x"))
+    val want = df.select(col("id"), rank().over(world).cast("long"),
+        sum(col("w")).over(Window.orderBy(col("x"), col("id"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+        percent_rank().over(world))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
+    assert(got.size === n, clue)
+    want.foreach { case (id, (rk, cw, pr)) =>
+      val (grk, gcw, gpr) = got(id)
+      assert(grk === rk && gcw === cw, s"$clue id=$id")
+      assert(java.lang.Double.doubleToRawLongBits(gpr) ===
+        java.lang.Double.doubleToRawLongBits(pr), s"$clue id=$id pr $gpr vs $pr")
+    }
+  }
+
+  test("bucket offsets: off + in-bucket rank and running sum equal the naive window") {
+    (1 to 10).foreach(i => assertUngroupedOffsets(offsetFrame(500L + i), s"seed=$i"))
+  }
+
+  test("bucket offsets: an all-equal column (lo == hi) is one point-mass bucket") {
+    assertUngroupedOffsets((0 until 300).map(i => (i.toLong, -2.5, (i % 3 + 1).toLong)), "all-equal")
+  }
+
+  test("bucket offsets: q99's descending Decimal prefix with a key tiebreak past 2^63") {
+    import org.scalacheck.{Gen, rng}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.DecimalType
+    import spark.implicits._
+    // cents near Long.MaxValue / 2: the running total passes 2^63 within
+    // a few rows, so a long prefix would wrap
+    val cents: Gen[Long] = Gen.oneOf(
+      Gen.const(4000000000000000000L),
+      Gen.choose(0L, 4600000000000000000L),
+      Gen.choose(-50L, 50L))
+    (1 to 8).foreach { i =>
+      val cs = Gen.choose(2, 600).flatMap(n => Gen.listOfN(n, cents))(
+        Gen.Parameters.default, rng.Seed(900L + i)).get
+      val df = cs.zipWithIndex.map { case (c, k) => (k.toLong, c) }.toDF("k", "cents")
+      val dec = col("cents").cast(DecimalType(38, 0))
+      val bucketed = df.withColumn("b", Quantiles.bucketOf(col("cents").cast("double"),
+        lit(cs.min.toDouble), lit(cs.max.toDouble)))
+      val got = Quantiles.withBucketOffsets(bucketed, col("cents"), Seq("off" -> dec),
+          descending = true)
+        .select(col("k"), col("off") + sum(dec).over(Window.partitionBy(col("b"))
+          .orderBy(desc("cents"), col("k"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .collect().map(r => r.getLong(0) -> BigDecimal(r.getDecimal(1))).toMap
+      val want = df.select(col("k"), sum(dec).over(Window.orderBy(desc("cents"), col("k"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .collect().map(r => r.getLong(0) -> BigDecimal(r.getDecimal(1))).toMap
+      assert(want.values.max > BigDecimal(Long.MaxValue), s"seed=$i never passed 2^63")
+      assert(got === want, s"seed=$i")
+    }
+  }
+
+  test("bucket offsets: grouped rank with point-mass buckets equals the per-group window") {
+    import org.scalacheck.{Gen, rng}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // "p" is dominated by one value (a point-mass bucket), "c" is
+    // constant (lo == hi), "s" a singleton, "a" the adversarial mixture
+    (1 to 6).foreach { i =>
+      val seed = rng.Seed(700L + i)
+      val a = offsetFrame(700L + i).map { case (_, x, w) => ("a", x, w) }
+      val p = Gen.listOfN(400, Gen.frequency(9 -> Gen.const(12.5), 1 -> Gen.choose(-1e3, 1e3)))(
+        Gen.Parameters.default, seed).get.map(x => ("p", x, 1L))
+      val rows = (a ++ p ++ Seq.fill(50)(("c", 4.0, 2L)) :+ (("s", -1.0, 3L)))
+        .zipWithIndex.map { case ((g, x, w), id) => (g, id.toLong, x, w) }
+      val df = rows.toDF("grp", "id", "x", "w")
+      val stats = rows.groupBy(_._1).toSeq.map { case (g, rs) =>
+        (g, rs.map(_._3).min, rs.map(_._3).max) }.toDF("g", "lo", "hi")
+      val bucketed = df.join(broadcast(stats), col("grp") === col("g"))
+        .withColumn("b", Quantiles.bucketOf(col("x"), col("lo"), col("hi")))
+      val keyed = Quantiles.withBucketOffsets(bucketed, col("x"),
+        Seq("off" -> lit(1L), "offw" -> col("w")), grouped = true)
+      val got = keyed.select(col("id"),
+          when(col("pointmass"), col("off") + 1L)
+            .otherwise(col("off") + rank().over(Window.partitionBy(col("g"), col("b"))
+              .orderBy(col("x")))),
+          col("offw") + sum(col("w")).over(Window.partitionBy(col("g"), col("b"))
+            .orderBy(col("x"), col("id"))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val want = df.select(col("id"),
+          rank().over(Window.partitionBy(col("grp")).orderBy(col("x"))).cast("long"),
+          sum(col("w")).over(Window.partitionBy(col("grp")).orderBy(col("x"), col("id"))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(got === want, s"seed=$i")
+      assert(keyed.filter(col("pointmass") && col("g") === "p").count() > 0,
+        s"seed=$i planted no point-mass bucket")
+    }
+  }
 }

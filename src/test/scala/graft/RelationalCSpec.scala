@@ -320,7 +320,7 @@ class RelationalCSpec extends SparkSpec {
 
   test("q66 KS: cumulative window keys on the bucket id, D within [0,1]") {
     val p = plan("q66_ks_test")
-    assert("hashpartitioning\\(bk#\\d+".r.findFirstIn(p).isDefined,
+    assert("hashpartitioning\\(b#\\d+".r.findFirstIn(p).isDefined,
       "the CDF cumulative window must partition by bucket:\n" + p)
     val r = SparkEntry.queries("q66_ks_test")(spark, sf).head()
     val d = r.getDouble(2)

@@ -103,14 +103,7 @@ class RelationalDSpec extends SparkSpec {
     val ex = intercept[IllegalArgumentException] {
       RelationalD.trimmedMean(many.toDF("g", "v", "id"), "g", "v", Seq("id")).collect()
     }
-    assert(ex.getMessage.contains("spark.graft.trimmed.max.groups"))
-    // and the conf raises the bound
-    spark.conf.set("spark.graft.trimmed.max.groups", "128")
-    try {
-      val ok = RelationalD.trimmedMean(many.toDF("g", "v", "id"), "g", "v", Seq("id"))
-        .collect()
-      assert(ok.length === 70)
-    } finally spark.conf.unset("spark.graft.trimmed.max.groups")
+    assert(ex.getMessage.contains(s"exceeds ${RelationalD.TrimmedMaxGroups}"))
   }
 
   test("trimmed mean property: 10 seeded adversarial mixtures all match naive") {

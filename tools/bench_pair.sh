@@ -10,7 +10,12 @@
 set -e
 cd "$(dirname "$0")/.."
 SF=$1; GOUT=$2; DOUT=$3; REPS=${4:-3}
-SQL=${ORACLE_SQL_JSON:-target/verify_r13/oracle_sql.json}
+SQL=${ORACLE_SQL_JSON:-target/verify/oracle_sql.json}
+if [ ! -f "$SQL" ]; then
+  echo "bench_pair: oracle SQL $SQL not found; write it first with" \
+    "tools/run.sh graft.Verify <sf_dir> target/verify, or set ORACLE_SQL_JSON" >&2
+  exit 1
+fi
 SPARK_GRAFT_SF_DIR="$SF" tools/run.sh graft.Bench 2>/dev/null | tail -1 > "$GOUT"
 cat "$GOUT"
 flock -w 86400 target/.duck.lock \
