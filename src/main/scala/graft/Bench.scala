@@ -1,5 +1,7 @@
 package graft
 
+import Report.{bool, int, minSec, noop, num, obj, sec, str}
+
 /** Driver-run benchmark: headline queries (SURVEY §6) on
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -24,9 +26,7 @@ object Bench {
     val cpus = Session.cores(sys.env.get("SPARK_GRAFT_CPUS"))
     val spark = Session.local("graft-bench")
 
-    def exec(name: String, dir: String): Unit =
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
+    def exec(name: String, dir: String): Unit = noop(SparkEntry.queries(name)(spark, dir))
 
     // warmup pass on the target SF: steady-state throughput measurement —
     // JIT, codegen, parquet footers, broadcast builds and AQE plans are
@@ -64,8 +64,7 @@ object Bench {
     val samples = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     def oneRound(): Unit = headline.foreach { name =>
-      val t0 = System.nanoTime()
-      val t = try { exec(name, sfDir); (System.nanoTime() - t0) / 1e9 }
+      val t = try sec(exec(name, sfDir))._2
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
@@ -105,20 +104,14 @@ object Bench {
     // sf0.01 suite total — the marginal-cost denominator BASELINE.md's
     // scaling decomposition uses (total(sf0.1) − total(sf0.01) ≈ the
     // data-proportional cost; the sf0.01 total is ~all fixed per-job
-    // overhead). Two interleaved rounds, per-query min, summed.
+    // overhead). Min of two reps per query (0 for a failing query), summed.
     val sf001Dir = sfDir.replace("sf0.1", "sf0.01")
     val total001 =
-      if (sf001Dir != sfDir && new java.io.File(sf001Dir).isDirectory) {
-        val mins = headline.map { n =>
-          val ts = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            try { exec(n, sf001Dir); (System.nanoTime() - t0) / 1e9 }
-            catch { case _: Throwable => -1.0 }
-          }.filter(_ >= 0)
-          if (ts.isEmpty) 0.0 else ts.min
-        }
-        mins.sum
-      } else -1.0
+      if (sf001Dir != sfDir && new java.io.File(sf001Dir).isDirectory)
+        headline.map { n =>
+          try minSec(2)(exec(n, sf001Dir)) catch { case _: Throwable => 0.0 }
+        }.sum
+      else -1.0
     // build/probe split for the ANN composition: the headline
     // sim_ivfpq_topk number is an end-to-end BUILD+PROBE cycle per rep
     // (the build amortizes across queries in any real deployment), so a
@@ -132,20 +125,11 @@ object Bench {
       val c = e.filter(col("vec_id") >= 10)
       // one index dir per build rep (each rep rewrites the cell layout),
       // deleted at shutdown
-      var idx: graft.similarity.IvfPq.IvfPqIndex = null
-      val bts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        idx = graft.similarity.IvfPq.buildIndex(c, "vec_id", "embedding", nClusters = 8,
-          m = 8, ksub = 16, path = graft.similarity.IndexDirs.create("ivfpq_bench_"))
-        (System.nanoTime() - t0) / 1e9
-      }
-      val pts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        graft.similarity.IvfPq.probeIndex(idx, q, "vec_id", "embedding", k = 5, nProbe = 4)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      (bts.min, pts.min)
+      val builds = Seq.fill(3)(sec(graft.similarity.IvfPq.buildIndex(c, "vec_id", "embedding",
+        nClusters = 8, m = 8, ksub = 16, path = graft.similarity.IndexDirs.create("ivfpq_bench_"))))
+      val idx = builds.last._1
+      (builds.map(_._2).min, minSec(3)(noop(
+        graft.similarity.IvfPq.probeIndex(idx, q, "vec_id", "embedding", k = 5, nProbe = 4))))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] ivfpq build/probe split failed: ${e.getMessage}")
       (-1.0, -1.0)
@@ -163,16 +147,11 @@ object Bench {
     * that: compare `calib_sec` across runs before comparing totals.
     * min-of-3 so a scheduler blip doesn't pollute the marker itself.
     */
-  private def calibrate(): Double = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      var h = 1469598103934665603L
-      var i = 0
-      while (i < 50000000) { h = (h ^ i) * 1099511628211L; i += 1 }
-      if (h == 42L) System.err.println("") // keep the loop live
-      (System.nanoTime() - t0) / 1e9
-    }
-    Seq.fill(3)(once()).min
+  private def calibrate(): Double = minSec(3) {
+    var h = 1469598103934665603L
+    var i = 0
+    while (i < 50000000) { h = (h ^ i) * 1099511628211L; i += 1 }
+    if (h == 42L) System.err.println("") // keep the loop live
   }
 
   /** The driver-contract metrics line: ONE line of bare JSON (no log
@@ -186,23 +165,23 @@ object Bench {
       ratio: Double, calib: Double, total001: Double,
       ivfpqBuild: Double, ivfpqProbe: Double, dataFp: String,
       cpus: Int): String = {
-    def json(f: ((Double, Double)) => Double): String =
-      results.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
-    val sampleJson = counts.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def perQuery(f: ((Double, Double)) => Double) =
+      obj(results.toSeq.map { case (k, v) => k -> num(f(v)) }: _*)
     val total = results.values.map(_._1).filter(_ >= 0).sum
     // a query with zero valid samples still fails certification — its
     // wall time is missing from `total`, so the run isn't comparable
     val certified = ratio <= 1.2 && ratio >= 0.0 && counts.values.forall(_ > 0)
-    val ratioStr = if (ratio.isInfinite) "-1.0" else f"$ratio%.4f"
-    val calibStr = f"$calib%.4f"
-    val t001Str = f"$total001%.4f"
-    val buildStr = f"$ivfpqBuild%.4f"
-    val probeStr = f"$ivfpqProbe%.4f"
     // cpus/master echo the resolved $SPARK_GRAFT_CPUS contract back to the
     // driver: its 8-vs-32-core scaling heuristic fired a false
     // `suspect_cpus_ignored` in r14 because the JSON didn't say which core
     // count produced the run (observability only — no timed-path change)
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(_._1)},"queries_median":${json(_._2)},"samples":$sampleJson,"reps":$reps,"window":$window,"certified":$certified,"median_over_min":$ratioStr,"calib_sec":$calibStr,"total_sf001":$t001Str,"ivfpq_build_sec":$buildStr,"ivfpq_probe_sec":$probeStr,"data_fp":"$dataFp","cpus":$cpus,"master":"local[$cpus]","sf":"$sfDir"}"""
+    obj("metric" -> str("total"), "value" -> num(total), "unit" -> str("sec"),
+      "queries" -> perQuery(_._1), "queries_median" -> perQuery(_._2),
+      "samples" -> obj(counts.toSeq.map { case (k, v) => k -> int(v) }: _*),
+      "reps" -> int(reps), "window" -> int(window), "certified" -> bool(certified),
+      "median_over_min" -> num(ratio, 4), "calib_sec" -> num(calib, 4),
+      "total_sf001" -> num(total001, 4), "ivfpq_build_sec" -> num(ivfpqBuild, 4),
+      "ivfpq_probe_sec" -> num(ivfpqProbe, 4), "data_fp" -> str(dataFp),
+      "cpus" -> int(cpus), "master" -> str(s"local[$cpus]"), "sf" -> str(sfDir)).text
   }
 }

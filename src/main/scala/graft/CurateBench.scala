@@ -1,5 +1,7 @@
 package graft
 
+import Report.{arr, int, num, obj, sec, str}
+
 /** Certification main for the COMPOSED LLM-data pipeline
   * (Curate.pipeline + pack): end-to-end wall time with a per-stage
   * split at a given SF dir — the BENCH sibling artifact for the
@@ -13,20 +15,16 @@ object CurateBench {
   def main(args: Array[String]): Unit = {
     val d = args(0)
     val spark = Session.local("graft-curate-bench")
-    def f(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val stages = Seq.newBuilder[(String, Long, Double)]
-    val t0 = System.nanoTime()
-    val (kept, _) = graft.operators.Curate.pipeline(spark, d,
-      onStage = (name, rows, sec) => stages += ((name, rows, sec)))
-    val tPack = System.nanoTime()
-    val packRows = graft.operators.Curate.pack(kept).count()
-    val tEnd = System.nanoTime()
-    stages += (("pack", packRows, (tEnd - tPack) / 1e9))
-    val body = stages.result()
-      .map { case (n, r, s) => s"""{"stage":"$n","rows":$r,"sec":${f(s)}}""" }
-      .mkString("[", ",", "]")
-    println(s"""{"pipeline":"curate","sf":"$d","total_sec":${f((tEnd - t0) / 1e9)},"stages":$body}""")
+    val stages = Seq.newBuilder[Report.Json]
+    def stage(name: String, rows: Long, s: Double): Unit =
+      stages += obj("stage" -> str(name), "rows" -> int(rows), "sec" -> num(s, 3))
+    val ((packRows, packSec), totalSec) = sec {
+      val (kept, _) = graft.operators.Curate.pipeline(spark, d, onStage = stage)
+      sec(graft.operators.Curate.pack(kept).count())
+    }
+    stage("pack", packRows, packSec)
+    println(obj("pipeline" -> str("curate"), "sf" -> str(d), "total_sec" -> num(totalSec, 3),
+      "stages" -> arr(stages.result(): _*)))
     spark.stop()
   }
 }

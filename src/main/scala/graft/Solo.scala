@@ -1,5 +1,7 @@
 package graft
 
+import Report.{int, minSec, noop, num, obj, str}
+
 /** Solo-timing main — NOT part of the driver contract. Times named
   * SparkEntry queries ONE AT A TIME (no concurrency, unlike Verify's
   * 4-way pool, whose timings.json gauge conflates contention with
@@ -25,20 +27,10 @@ object Solo {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val times = names.map { name =>
-      val ts = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, d)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      name -> ts.min
+      name -> num(minSec(reps)(noop(SparkEntry.queries(name)(spark, d))), 3)
     }
-    val body = times
-      .map { case (k, v) =>
-        s""""$k":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))}"""
-      }
-      .mkString("{", ",", "}")
-    println(s"""{"mode":"solo","sf":"$d","reps":$reps,"data_fp":"${DataFp.of(d)}","queries":$body}""")
+    println(obj("mode" -> str("solo"), "sf" -> str(d), "reps" -> int(reps),
+      "data_fp" -> str(DataFp.of(d)), "queries" -> obj(times: _*)))
     spark.stop()
   }
 }

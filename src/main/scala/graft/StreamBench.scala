@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryProgress
 import graft.streaming.Streaming
+import Report.{int, num, obj, str}
 
 /** Streaming-at-scale evidence (round-11 verdict item #8, extended in
   * r12 to ALL heavy stateful twins) — NOT part of the driver contract.
@@ -96,9 +97,11 @@ object StreamBench {
 
   private case class Meas(rows: Long, batches: Int, wallSec: Double,
       stateRowsMax: Long, stateBytesMax: Long, stateRowsLast: Long) {
-    def json: String = {
+    def json: Report.Json = {
       val rps = if (wallSec > 0) rows / wallSec else -1.0
-      f"""{"rows":$rows,"batches":$batches,"wall_sec":$wallSec%.3f,"rows_per_sec":${rps.toLong},"state_rows_max":$stateRowsMax,"state_bytes_max":$stateBytesMax,"state_rows_last":$stateRowsLast}"""
+      obj("rows" -> int(rows), "batches" -> int(batches), "wall_sec" -> num(wallSec, 3),
+        "rows_per_sec" -> int(rps.toLong), "state_rows_max" -> int(stateRowsMax),
+        "state_bytes_max" -> int(stateBytesMax), "state_rows_last" -> int(stateRowsLast))
     }
   }
 
@@ -232,8 +235,8 @@ object StreamBench {
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
         .as[Streaming.TransEvent], Some(ttlMs)).toDF(), "append")
 
-    val body = results.map { case (k, m) => s""""$k":${m.json}""" }
-      .mkString("{", ",", "}")
-    println(s"""{"mode":"stream_bench","sf":"$d","chunks":$chunks,"data_fp":"${DataFp.of(d)}","twins":$body}""")
+    println(obj("mode" -> str("stream_bench"), "sf" -> str(d), "chunks" -> int(chunks),
+      "data_fp" -> str(DataFp.of(d)),
+      "twins" -> obj(results.toSeq.map { case (k, m) => k -> m.json }: _*)))
   }
 }

@@ -143,34 +143,37 @@ object Verify {
           val dumpDir = new java.io.File(s"$outDir/$name")
           var myReservation = 0L
           try {
-            val t0 = System.nanoTime()
-            // coalesce(1) keeps the dump a single file for the driver's
-            // reader, but it also serializes the WRITE into one task —
-            // at sf100 a 600M-row per-row surface takes ~10 min alone.
-            // SPARK_GRAFT_VERIFY_COALESCE=0 keeps the query's own
-            // parallelism (the local compare tools glob *.parquet).
-            val res = fn(spark, sfDir)
-            // no early `return` here: a nonlocal return from inside the
-            // Runnable would be swallowed by the Throwable catch below
-            val est = estimateDumpBytes(res, Some(inputBytes))
-            val freeNow = math.max(0L,
-              new java.io.File(outDir).getUsableSpace - reserved.get())
-            val refusal =
-              if (force) None
-              else gateRefusal(est, freeNow, headroomBytes)
-            refusal match {
-              case Some(reason) =>
-                System.err.println(s"[verify] $name refused: $reason")
-              case None =>
-                myReservation =
-                  est.map(_.min(BigInt(Long.MaxValue)).toLong).getOrElse(0L)
-                reserved.addAndGet(myReservation): Unit
-                val out =
-                  if (sys.env.get("SPARK_GRAFT_VERIFY_COALESCE").contains("0")) res
-                  else res.coalesce(1)
-                out.write.mode("overwrite").parquet(s"$outDir/$name")
-                timings.put(name, (System.nanoTime() - t0) / 1e9)
+            val (written, sec) = Report.sec {
+              // coalesce(1) keeps the dump a single file for the oracle
+              // reader, but it also serializes the WRITE into one task —
+              // at sf100 a 600M-row per-row surface takes ~10 min alone.
+              // SPARK_GRAFT_VERIFY_COALESCE=0 keeps the query's own
+              // parallelism (the local compare tools glob *.parquet).
+              val res = fn(spark, sfDir)
+              // no early `return` here: a nonlocal return from inside the
+              // Runnable would be swallowed by the Throwable catch below
+              val est = estimateDumpBytes(res, Some(inputBytes))
+              val freeNow = math.max(0L,
+                new java.io.File(outDir).getUsableSpace - reserved.get())
+              val refusal =
+                if (force) None
+                else gateRefusal(est, freeNow, headroomBytes)
+              refusal match {
+                case Some(reason) =>
+                  System.err.println(s"[verify] $name refused: $reason")
+                  false
+                case None =>
+                  myReservation =
+                    est.map(_.min(BigInt(Long.MaxValue)).toLong).getOrElse(0L)
+                  reserved.addAndGet(myReservation): Unit
+                  val out =
+                    if (sys.env.get("SPARK_GRAFT_VERIFY_COALESCE").contains("0")) res
+                    else res.coalesce(1)
+                  out.write.mode("overwrite").parquet(s"$outDir/$name")
+                  true
+              }
             }
+            if (written) timings.put(name, sec)
           }
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -191,34 +194,21 @@ object Verify {
     pool.shutdown()
     locally {
       import scala.jdk.CollectionConverters._
-      val body = timings.asScala.toSeq.sortBy(_._1)
-        // Locale.ROOT: the f-interpolator honors the JVM default
-        // locale, and a comma decimal separator would emit invalid JSON
-        .map { case (k, v) =>
-          s""""$k":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))}"""
-        }
-        // input-data fingerprint: timings are only comparable across
-        // runs with identical data (see DataFp); the underscore prefix
-        // sorts it first and can't collide with a query name
-        .prepended(s""""_data_fp":"${DataFp.of(sfDir)}"""")
-        .mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/timings.json"), body)
+      // input-data fingerprint: timings are only comparable across runs
+      // with identical data (see DataFp); the underscore prefix sorts it
+      // first and can't collide with a query name
+      val body = Report.obj(("_data_fp" -> Report.str(DataFp.of(sfDir))) +:
+        timings.asScala.toSeq.sortBy(_._1).map { case (k, v) => k -> Report.num(v, 3) }: _*)
+      Files.writeString(Paths.get(s"$outDir/timings.json"), body.text)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleSqlJson(SparkEntry.oracleSql))
     spark.stop()
   }
+
+  /** The oracle file: query name -> DuckDB SQL. One bad escape (a tab or
+    * CR in an oracle's SQL) would make every reader's json.load fail and
+    * silently lose every oracle compare.
+    */
+  private[graft] def oracleSqlJson(sql: Map[String, String]): String =
+    Report.obj(sql.toSeq.map { case (k, v) => k -> Report.str(v) }: _*).text
 }

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.{Q, Tables, Module}
+import graft.{Module, Q, Report, Tables}
 import graft.Exact._
 import graft.operators.Quantiles
 import org.apache.spark.ml.Pipeline
@@ -1583,9 +1583,8 @@ object MlC extends Module {
     // per fit; reporting is off the timed path.
     val profile = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Double)]()
     def timed[T](family: String, fold: Int)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      profile.add((family, fold, (System.nanoTime() - t0) / 1e9))
+      val (r, sec) = Report.sec(body)
+      profile.add((family, fold, sec))
       r
     }
     val df = withFolds(fitFrame(s, d))

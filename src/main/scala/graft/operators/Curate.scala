@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkEntry, Tables}
+import graft.{Report, SparkEntry, Tables}
 import graft.Exact.GraftCheckpoint
 import graft.dedup.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -46,18 +46,15 @@ object Curate {
     val docs = Tables.documents(s, d)
     val funnel = Seq.newBuilder[(String, Long)]
     def stage(name: String)(df: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
-      val out = df.graftCheckpoint()
-      val n = out.count()
+      val ((out, n), sec) = Report.sec { val out = df.graftCheckpoint(); (out, out.count()) }
       funnel += (name -> n)
-      onStage(name, n, (System.nanoTime() - t0) / 1e9)
+      onStage(name, n, sec)
       out
     }
     locally {
-      val t0 = System.nanoTime()
-      val n = docs.count()
+      val (n, sec) = Report.sec(docs.count())
       funnel += ("input" -> n)
-      onStage("input", n, (System.nanoTime() - t0) / 1e9)
+      onStage("input", n, sec)
     }
 
     // 1. quality gate (reuses the oracle-checked flags query)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Exact.GraftCheckpoint
+import graft.Report
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -102,21 +103,21 @@ object Graph {
     var rounds = 0
     while (!done && rounds < maxRounds) {
       rounds += 1
-      val t0 = System.nanoTime()
       val both = e.select(col("src").as("id"))
         .unionByName(e.select(col("dst").as("id")))
-      val degrees = both.groupBy(col("id")).agg(count(lit(1)).as("deg"))
-        .graftCheckpoint()
-      val t1 = System.nanoTime()
+      val (degrees, degSec) = Report.sec(both.groupBy(col("id")).agg(count(lit(1)).as("deg"))
+        .graftCheckpoint())
       val keep = degrees.filter(col("deg") >= k).select(col("id"))
-      val e2 = e.join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .graftCheckpoint()
-      val e2Count = e2.count()
+      val ((e2, e2Count), peelSec) = Report.sec {
+        val e2 = e.join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+          .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
+          .select(col("src"), col("dst"))
+          .graftCheckpoint()
+        (e2, e2.count())
+      }
       if (prof) System.err.println(
-        f"[kcore profile] round $rounds: deg ${(t1 - t0) / 1e9}%.2fs, " +
-        f"peel ${(System.nanoTime() - t1) / 1e9}%.2fs, edges $eCount -> $e2Count")
+        f"[kcore profile] round $rounds: deg $degSec%.2fs, " +
+        f"peel $peelSec%.2fs, edges $eCount -> $e2Count")
       if (e2Count == eCount) done = true
       e = e2
       eCount = e2Count

@@ -63,11 +63,11 @@ object Quantiles {
     * equal values share a bucket; 1 for a degenerate range (lo == hi),
     * where width_bucket itself is NULL. Column bounds, so literal bounds
     * (the guard folds away) and broadcast-joined per-group bounds share
-    * one formula; a single fixed-size `if`, never a per-group arm.
+    * one formula; a single fixed-size `when`, never a per-group arm.
     */
   def bucketOf(x: Column, lo: Column, hi: Column): Column =
-    call_function("if", lo === hi, lit(1L),
-      least(width_bucket(x, lo, hi, lit(Buckets)), lit(Buckets.toLong)))
+    when(lo === hi, 1L)
+      .otherwise(least(width_bucket(x, lo, hi, lit(Buckets)), lit(Buckets.toLong)))
 
   /** One bucket of an offset table: group key (null when ungrouped),
     * bucket id, each weight's bucket total and exclusive prefix within the

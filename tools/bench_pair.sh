@@ -7,7 +7,9 @@
 # machine's (graft.Session, tools/run.sh); DuckDB picks its own memory
 # limit from the machine.
 # Usage: tools/bench_pair.sh <sf_dir> <graft_out.json> <duck_out.json> [duck_reps]
-set -e
+# pipefail: a Bench that cannot start must stop the script, not hand
+# `tail`'s exit status on to an empty $GOUT and a DuckDB leg
+set -eo pipefail
 cd "$(dirname "$0")/.."
 SF=$1; GOUT=$2; DOUT=$3; REPS=${4:-3}
 SQL=${ORACLE_SQL_JSON:-target/verify/oracle_sql.json}

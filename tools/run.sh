@@ -26,6 +26,6 @@ LOCKARGS=()
 if [ "${GRAFT_NO_LOCK:-0}" != 1 ]; then
   LOCKARGS=(flock -w 86400 target/.graft.lock)
 fi
+# the UI and the session time zone are set by graft.Session.local
 exec "${LOCKARGS[@]}" java $OPENS -Xmx$MEM \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
