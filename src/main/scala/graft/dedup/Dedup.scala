@@ -244,6 +244,11 @@ object Dedup {
     */
   private[graft] var lastCcIterations: Int = 0
 
+  /** Test instrumentation: the cell count k the last [[semanticDedup]]
+    * call chose (driver-single-threaded).
+    */
+  private[graft] var lastSemK: Int = 0
+
   /** Connected components over near-dup pairs: the dedup last mile
     * (pairs → clusters → keep min-id representative per cluster).
     * Each round does (a) min-label propagation — every node takes the
@@ -353,6 +358,7 @@ object Dedup {
     // already one task's worth — skip the k-means stage entirely.
     val k = math.min(
       math.max(2L, math.min(nReps / targetCellRows + 1L, 65536L)), nReps).toInt
+    lastSemK = k
     val cells =
       if (k < 2) {
         reps.select(col(idCol).as("id"), lit(0).as("cell_id"),

@@ -581,9 +581,10 @@ object GraftFunctions {
     * session another thread is still mid-way through populating
     * (putIfAbsent-then-register was a TOCTOU window that could surface
     * as 'undefined function graft_*' analysis failures). The grouped-
-    * top-k planner strategy is installed under the same lock, so
-    * `experimental.extraStrategies` is never read-then-appended by two
-    * threads at once.
+    * top-k planner strategy and its optimizer rule are installed under
+    * the same lock, so `experimental.extraStrategies` and
+    * `extraOptimizations` are never read-then-appended by two threads at
+    * once — the same pair GraftExtensions injects.
     */
   private val registered =
     java.util.Collections.synchronizedMap(
@@ -597,6 +598,8 @@ object GraftFunctions {
       val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
       if (!exp.extraStrategies.contains(graft.plans.GroupedTopKStrategy))
         exp.extraStrategies = exp.extraStrategies :+ graft.plans.GroupedTopKStrategy
+      if (!exp.extraOptimizations.contains(graft.plans.TopKPushdown))
+        exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.TopKPushdown
       java.lang.Boolean.TRUE
     })
     ()

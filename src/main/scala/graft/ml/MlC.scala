@@ -958,7 +958,7 @@ object MlC extends Module {
   // sum runs over the 10-row rate tables (bounded driver metadata).
   // ORACLE-CHECKED on the 1e-9 grid (the ml_mutual_info discipline:
   // bins and rates are exact on both sides because the decile fences
-  // replay q07's bit-exact quantile SQL; only the 10-term p·ln p sum
+  // come from the bit-exact Quantiles.sql; only the 10-term p·ln p sum
   // sees libm, ~1e-15 of slack under a 1e-9 rounding). MlSpec pins
   // non-negativity and that a random hash split of one population
   // stays far below the drift threshold.
@@ -990,8 +990,8 @@ object MlC extends Module {
       rows.toDF("feature", "psi").orderBy("feature")
     },
     Some {
-      // per-feature: train-decile fences via the q07 exact-quantile SQL
-      // shape, strict > binning, then the smoothed 10-term PSI sum
+      // per-feature: train-decile fences via Quantiles.sql, strict >
+      // binning, then the smoothed 10-term PSI sum
       val arms = continuous.map { f =>
         s"""SELECT '$f' AS feature, ROUND(SUM((pt - pe) * ln(pt / pe)), 9) AS psi FROM (
            |  SELECT GREATEST(CAST(COALESCE(tn.c, 0) AS DOUBLE)
@@ -1007,16 +1007,7 @@ object MlC extends Module {
            |      COUNT(*) AS c FROM ts GROUP BY 1) te ON bins.bin = te.bin)""".stripMargin
       }
       val fenceCtes = continuous.map { f =>
-        s"""fences_$f AS MATERIALIZED (
-           |  SELECT x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS value
-           |  FROM (
-           |    SELECT q, q * (cnt - 1.0) AS h, CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-           |      LEAST(CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-           |    FROM (SELECT CAST(unnest(generate_series(1, 9)) AS DOUBLE) / 10.0 AS q) qs,
-           |      (SELECT CAST(COUNT(*) AS DOUBLE) AS cnt FROM tr) n
-           |  ) h
-           |  JOIN (SELECT $f AS x_lo, ROW_NUMBER() OVER (ORDER BY $f) AS rn_lo FROM tr) lo ON rlo = rn_lo
-           |  JOIN (SELECT $f AS x_hi, ROW_NUMBER() OVER (ORDER BY $f) AS rn_hi FROM tr) hi ON rhi = rn_hi)""".stripMargin
+        s"fences_$f AS MATERIALIZED (${Quantiles.sql("tr", f, (1 to 9).map(_ / 10.0))})"
       }
       val bucket = sqlZmod("c_custkey", 1000L)
       s"""WITH $customerFeaturesSql,

@@ -37,7 +37,7 @@ import org.apache.spark.sql.types._
   * falling back to the in-bucket rank. So no task ever sorts more than
   * max(n/65536, RefineLimit) rows regardless of the value distribution.
   * The final interpolation is the same fixed IEEE expression as the
-  * DuckDB oracle, so bit-for-bit hash matches are preserved.
+  * DuckDB oracles' [[sql]], so bit-for-bit hash matches are preserved.
   *
   * Precondition: no NULLs in the quantile columns (the reference drops NA
   * first; the TPC-H measure columns are NOT NULL).
@@ -280,6 +280,41 @@ object Quantiles {
       val rhi = math.min(rlo + 1L, n)
       (q, h, rlo, rhi)
     }
+
+  /** A double as SQL: a string cast of its exact binary value, which
+    * parses back to the same double in DuckDB and Spark. (DuckDB 1.0 can
+    * cast a long decimal literal to a different double:
+    * `CAST(0.9500000000000001 AS DOUBLE)` is 0.95.)
+    */
+  def sqlDouble(v: Double): String =
+    s"CAST('${new java.math.BigDecimal(v).toPlainString}' AS DOUBLE)"
+
+  /** The SQL twin of [[exactQuantiles]] (and, with `group`, of
+    * [[groupedExactQuantiles]]) for the DuckDB oracles: one SELECT of
+    * ([g,] q, value) over `x` of relation `src`, with the brackets of
+    * [[ranksFor]] and the same IEEE interpolation. `x` and `group` are
+    * SQL expressions over `src`; the group key comes out as `g`. Plain
+    * enough to run in Spark SQL too (QuantilesSpec checks it there).
+    */
+  def sql(src: String, x: String, qs: Seq[Double], group: Option[String] = None): String = {
+    val (as, gk, pg, by, on) = group.fold(("", "", "", "", "")) { e =>
+      (s"$e AS g, ", "g, ", "p.g, ", s" GROUP BY $e", "r.g = p.g AND ")
+    }
+    val over = group.fold("")(e => s"PARTITION BY $e ")
+    val qList = qs.map(q => s"SELECT ${sqlDouble(q)} AS q").mkString(" UNION ALL ")
+    s"""SELECT ${gk}q, x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS value FROM (
+       |  SELECT ${pg}p.q, p.h,
+       |    MAX(CASE WHEN r.rn = p.rlo THEN r.x END) AS x_lo,
+       |    MAX(CASE WHEN r.rn = p.rhi THEN r.x END) AS x_hi
+       |  FROM (SELECT $as$x AS x, ROW_NUMBER() OVER (${over}ORDER BY $x) AS rn FROM $src) r
+       |  JOIN (SELECT ${gk}q, q * (cnt - 1.0) AS h,
+       |      CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
+       |      LEAST(CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
+       |    FROM (SELECT ${as}CAST(COUNT(*) AS DOUBLE) AS cnt FROM $src$by) n,
+       |      ($qList) qs) p
+       |    ON $on(r.rn = p.rlo OR r.rn = p.rhi)
+       |  GROUP BY ${pg}p.q, p.h) b""".stripMargin
+  }
 
   /** (col, q, value) for every requested quantile of every column, driver-
     * assembled from distributed order statistics. Everything collected is

@@ -249,18 +249,6 @@ object RelationalA extends Module {
     Quantiles.exactQuantiles(df, cols, qs).sortBy(r => (r._1, r._2)).toDF("col_name", "q", "value")
   }
 
-  private def quantileSql(table: String, c: String, qs: Seq[Double]): String = {
-    val qList = qs.map(q => s"SELECT CAST($q AS DOUBLE) AS q").mkString(" UNION ALL ")
-    s"""SELECT '$c' AS col_name, q, x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS value
-       |FROM (
-       |  SELECT q, q * (cnt - 1.0) AS h, CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-       |    LEAST(CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-       |  FROM ($qList) qs, (SELECT CAST(COUNT(*) AS DOUBLE) AS cnt FROM $table) n
-       |) h
-       |JOIN (SELECT $c AS x_lo, ROW_NUMBER() OVER (ORDER BY $c) AS rn_lo FROM $table) lo ON rlo = rn_lo
-       |JOIN (SELECT $c AS x_hi, ROW_NUMBER() OVER (ORDER BY $c) AS rn_hi FROM $table) hi ON rhi = rn_hi""".stripMargin
-  }
-
   private val q07 = Q(
     "q07_quantiles",
     (s, d) => {
@@ -269,11 +257,9 @@ object RelationalA extends Module {
       val qs = Seq(0.25, 0.5, 0.75)
       quantileDf(l, Seq("l_quantity", "l_extendedprice"), qs)
     },
-    Some(
-      quantileSql("lineitem", "l_quantity", Seq(0.25, 0.5, 0.75)) +
-        "\nUNION ALL\n" +
-        quantileSql("lineitem", "l_extendedprice", Seq(0.25, 0.5, 0.75)) +
-        "\nORDER BY col_name, q")
+    Some(Seq("l_quantity", "l_extendedprice").map { c =>
+      s"SELECT '$c' AS col_name, q, value FROM (${Quantiles.sql("lineitem", c, Seq(0.25, 0.5, 0.75))}) t"
+    }.mkString("", "\nUNION ALL\n", "\nORDER BY col_name, q"))
   )
 
   // q08 — IQR winsorize (RemoveOutliers.transform, processing.py:57-63):
@@ -298,12 +284,11 @@ object RelationalA extends Module {
             .otherwise(col("l_extendedprice")).as("clipped_price"))
     },
     Some {
-      val qsql = quantileSql("lineitem", "l_extendedprice", Seq(0.25, 0.75))
-      s"""WITH quant AS ($qsql),
+      s"""WITH quant AS (${Quantiles.sql("lineitem", "l_extendedprice", Seq(0.25, 0.75))}),
          |b AS (
          |  SELECT q3 + 1.5 * (q3 - q1) AS r, q1 - 1.5 * (q3 - q1) AS l_b FROM (
-         |    SELECT MAX(CASE WHEN q = 0.25 THEN value END) AS q1,
-         |           MAX(CASE WHEN q = 0.75 THEN value END) AS q3 FROM quant)
+         |    SELECT MAX(CASE WHEN q = ${Quantiles.sqlDouble(0.25)} THEN value END) AS q1,
+         |           MAX(CASE WHEN q = ${Quantiles.sqlDouble(0.75)} THEN value END) AS q3 FROM quant)
          |)
          |SELECT l_orderkey, l_linenumber,
          |  CASE WHEN l_extendedprice > r THEN r
@@ -645,24 +630,9 @@ object RelationalA extends Module {
         .sortBy(r => (r._1, r._2))
         .toDF("l_returnflag", "q", "value")
     },
-    Some("""WITH r AS (
-      |  SELECT l_returnflag AS g, l_quantity AS x,
-      |    ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY l_quantity) AS rn
-      |  FROM lineitem),
-      |n AS (SELECT l_returnflag AS g, CAST(COUNT(*) AS DOUBLE) AS cnt FROM lineitem GROUP BY 1),
-      |p AS (
-      |  SELECT g, cnt, q, q * (cnt - 1.0) AS h,
-      |    CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-      |    LEAST(CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-      |  FROM n, (SELECT CAST(0.25 AS DOUBLE) AS q UNION ALL SELECT CAST(0.5 AS DOUBLE) UNION ALL SELECT CAST(0.75 AS DOUBLE)) qs),
-      |b AS (
-      |  SELECT p.g, p.q, p.h,
-      |    MAX(CASE WHEN r.rn = p.rlo THEN r.x END) AS x_lo,
-      |    MAX(CASE WHEN r.rn = p.rhi THEN r.x END) AS x_hi
-      |  FROM r JOIN p ON r.g = p.g AND (r.rn = p.rlo OR r.rn = p.rhi)
-      |  GROUP BY p.g, p.q, p.h)
-      |SELECT g AS l_returnflag, q, x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS value
-      |FROM b ORDER BY l_returnflag, q""".stripMargin)
+    Some(s"""SELECT g AS l_returnflag, q, value FROM (
+      |${Quantiles.sql("lineitem", "l_quantity", Seq(0.25, 0.5, 0.75), Some("l_returnflag"))}) b
+      |ORDER BY l_returnflag, q""".stripMargin)
   )
 
   // q34 — argmax per group (pandas idxmax): deterministic via a rank
@@ -1044,27 +1014,12 @@ object RelationalA extends Module {
             .when(col("l_extendedprice") < col("lo_b"), col("lo_b"))
             .otherwise(col("l_extendedprice")).as("clipped_price"))
     },
-    Some("""WITH r AS (
-      |  SELECT l_returnflag AS g, l_extendedprice AS x,
-      |    ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice) AS rn
-      |  FROM lineitem),
-      |n AS (SELECT l_returnflag AS g, CAST(COUNT(*) AS DOUBLE) AS cnt FROM lineitem GROUP BY 1),
-      |p AS (
-      |  SELECT g, q, q * (cnt - 1.0) AS h,
-      |    CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-      |    LEAST(CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-      |  FROM n, (SELECT CAST(0.25 AS DOUBLE) AS q UNION ALL SELECT CAST(0.75 AS DOUBLE)) qs),
-      |b AS (
-      |  SELECT p.g, p.q, p.h,
-      |    MAX(CASE WHEN r.rn = p.rlo THEN r.x END) AS x_lo,
-      |    MAX(CASE WHEN r.rn = p.rhi THEN r.x END) AS x_hi
-      |  FROM r JOIN p ON r.g = p.g AND (r.rn = p.rlo OR r.rn = p.rhi)
-      |  GROUP BY p.g, p.q, p.h),
-      |qv AS (SELECT g, q, x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS value FROM b),
+    Some(s"""WITH qv AS (
+      |${Quantiles.sql("lineitem", "l_extendedprice", Seq(0.25, 0.75), Some("l_returnflag"))}),
       |f AS (
       |  SELECT g, q3 + 1.5 * (q3 - q1) AS r_b, q1 - 1.5 * (q3 - q1) AS lo_b FROM (
-      |    SELECT g, MAX(CASE WHEN q = 0.25 THEN value END) AS q1,
-      |           MAX(CASE WHEN q = 0.75 THEN value END) AS q3
+      |    SELECT g, MAX(CASE WHEN q = ${Quantiles.sqlDouble(0.25)} THEN value END) AS q1,
+      |           MAX(CASE WHEN q = ${Quantiles.sqlDouble(0.75)} THEN value END) AS q3
       |    FROM qv GROUP BY g))
       |SELECT l.l_returnflag, l.l_orderkey, l.l_linenumber,
       |  CASE WHEN l.l_extendedprice > f.r_b THEN f.r_b
@@ -1140,7 +1095,7 @@ object RelationalA extends Module {
       o.select(col("o_orderkey"), col("o_totalprice"), decile.as("decile"))
     },
     Some(
-      s"""WITH f AS (${quantileSql("orders", "o_totalprice", (1 to 9).map(_ / 10.0))})
+      s"""WITH f AS (${Quantiles.sql("orders", "o_totalprice", (1 to 9).map(_ / 10.0))})
          |SELECT o.o_orderkey, o.o_totalprice,
          |  CAST(1 + (SELECT COUNT(*) FROM f WHERE o.o_totalprice > f.value) AS BIGINT) AS decile
          |FROM orders o""".stripMargin)

@@ -183,30 +183,13 @@ object RelationalC extends Module {
       meds.map { case (g, m) => (g, m, mads(g)) }.sortBy(_._1)
         .toDF("l_returnflag", "median", "mad")
     },
-    Some {
-      // interpolated grouped median over an arbitrary source relation
-      def medSql(src: String, g: String, x: String, out: String): String =
-        s"""$out AS (
-           |  SELECT b.g, x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS value FROM (
-           |    SELECT r.g, p.h,
-           |      MAX(CASE WHEN r.rn = p.rlo THEN r.x END) AS x_lo,
-           |      MAX(CASE WHEN r.rn = p.rhi THEN r.x END) AS x_hi
-           |    FROM (SELECT $g AS g, $x AS x,
-           |            ROW_NUMBER() OVER (PARTITION BY $g ORDER BY $x) AS rn FROM $src) r
-           |    JOIN (SELECT g, 0.5 * (cnt - 1.0) AS h,
-           |            CAST(FLOOR(0.5 * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-           |            LEAST(CAST(FLOOR(0.5 * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-           |          FROM (SELECT $g AS g, CAST(COUNT(*) AS DOUBLE) AS cnt FROM $src GROUP BY 1)) p
-           |      ON r.g = p.g AND (r.rn = p.rlo OR r.rn = p.rhi)
-           |    GROUP BY r.g, p.h) b)""".stripMargin
-      s"""WITH ${medSql("lineitem", "l_returnflag", "l_extendedprice", "med")},
-         |d AS (
-         |  SELECT l.l_returnflag AS dg, ABS(l.l_extendedprice - med.value) AS dev
-         |  FROM lineitem l JOIN med ON l.l_returnflag = med.g),
-         |${medSql("d", "dg", "dev", "madv")}
-         |SELECT med.g AS l_returnflag, med.value AS median, madv.value AS mad
-         |FROM med JOIN madv ON med.g = madv.g ORDER BY l_returnflag""".stripMargin
-    }
+    Some(s"""WITH med AS (${Quantiles.sql("lineitem", "l_extendedprice", Seq(0.5), Some("l_returnflag"))}),
+      |d AS (
+      |  SELECT l.l_returnflag AS dg, ABS(l.l_extendedprice - med.value) AS dev
+      |  FROM lineitem l JOIN med ON l.l_returnflag = med.g),
+      |madv AS (${Quantiles.sql("d", "dev", Seq(0.5), Some("dg"))})
+      |SELECT med.g AS l_returnflag, med.value AS median, madv.value AS mad
+      |FROM med JOIN madv ON med.g = madv.g ORDER BY l_returnflag""".stripMargin)
   )
 
   // q61 — weighted mean / variance per group (quantity-weighted price —
@@ -849,7 +832,7 @@ object RelationalC extends Module {
         .select(col("n_hours"), lit(slope).as("slope_per_hour"),
           lit(intercept).as("intercept"))
     },
-    Some("""WITH counts AS (
+    Some(s"""WITH counts AS (
       |  SELECT date_trunc('hour', ts) AS h, CAST(COUNT(*) AS BIGINT) AS y
       |  FROM events GROUP BY 1),
       |series AS (
@@ -858,25 +841,11 @@ object RelationalC extends Module {
       |slopes AS (
       |  SELECT CAST(b.y - a.y AS DOUBLE) / CAST(b.t - a.t AS DOUBLE) AS v
       |  FROM series a JOIN series b ON b.t > a.t),
-      |sm AS (
-      |  SELECT x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS slope FROM (
-      |    SELECT 0.5 * (cnt - 1.0) AS h,
-      |      CAST(FLOOR(0.5 * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-      |      LEAST(CAST(FLOOR(0.5 * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-      |    FROM (SELECT CAST(COUNT(*) AS DOUBLE) AS cnt FROM slopes)) p
-      |  JOIN (SELECT v AS x_lo, ROW_NUMBER() OVER (ORDER BY v) AS rn_lo FROM slopes) lo ON rlo = rn_lo
-      |  JOIN (SELECT v AS x_hi, ROW_NUMBER() OVER (ORDER BY v) AS rn_hi FROM slopes) hi ON rhi = rn_hi),
+      |sm AS (SELECT value AS slope FROM (${Quantiles.sql("slopes", "v", Seq(0.5))}) t),
       |resid AS (
       |  SELECT CAST(y AS DOUBLE) - (SELECT slope FROM sm) * CAST(t AS DOUBLE) AS r
       |  FROM series),
-      |im AS (
-      |  SELECT x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS intercept FROM (
-      |    SELECT 0.5 * (cnt - 1.0) AS h,
-      |      CAST(FLOOR(0.5 * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-      |      LEAST(CAST(FLOOR(0.5 * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-      |    FROM (SELECT CAST(COUNT(*) AS DOUBLE) AS cnt FROM resid)) p
-      |  JOIN (SELECT r AS x_lo, ROW_NUMBER() OVER (ORDER BY r) AS rn_lo FROM resid) lo ON rlo = rn_lo
-      |  JOIN (SELECT r AS x_hi, ROW_NUMBER() OVER (ORDER BY r) AS rn_hi FROM resid) hi ON rhi = rn_hi)
+      |im AS (SELECT value AS intercept FROM (${Quantiles.sql("resid", "r", Seq(0.5))}) t)
       |SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM series) AS n_hours,
       |  (SELECT slope FROM sm) AS slope_per_hour,
       |  (SELECT intercept FROM im) AS intercept""".stripMargin)
@@ -960,7 +929,7 @@ object RelationalC extends Module {
         .sortBy(r => (r._1, r._2))
         .toDF("stage", "q", "dur_us")
     },
-    Some("""WITH v AS (
+    Some(s"""WITH v AS (
       |  SELECT *, MIN(CASE WHEN event_type = 'view' THEN ts END)
       |    OVER (PARTITION BY user_id) AS t_view FROM events),
       |c AS (
@@ -977,23 +946,10 @@ object RelationalC extends Module {
       |  FROM f WHERE tv IS NOT NULL AND tc IS NOT NULL
       |  UNION ALL
       |  SELECT 'click_to_purchase', CAST(epoch_us(tp) - epoch_us(tc) AS DOUBLE)
-      |  FROM f WHERE tc IS NOT NULL AND tp IS NOT NULL),
-      |r AS (SELECT g, x, ROW_NUMBER() OVER (PARTITION BY g ORDER BY x) AS rn FROM dd),
-      |n AS (SELECT g, CAST(COUNT(*) AS DOUBLE) AS cnt FROM dd GROUP BY 1),
-      |p2 AS (
-      |  SELECT n.g, qs.q, qs.q * (cnt - 1.0) AS h,
-      |    CAST(FLOOR(qs.q * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-      |    LEAST(CAST(FLOOR(qs.q * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-      |  FROM n, (SELECT CAST(0.25 AS DOUBLE) AS q UNION ALL SELECT CAST(0.5 AS DOUBLE)
-      |           UNION ALL SELECT CAST(0.75 AS DOUBLE)) qs),
-      |b AS (
-      |  SELECT p2.g, p2.q, p2.h,
-      |    MAX(CASE WHEN r.rn = p2.rlo THEN r.x END) AS x_lo,
-      |    MAX(CASE WHEN r.rn = p2.rhi THEN r.x END) AS x_hi
-      |  FROM r JOIN p2 ON r.g = p2.g AND (r.rn = p2.rlo OR r.rn = p2.rhi)
-      |  GROUP BY p2.g, p2.q, p2.h)
-      |SELECT g AS stage, q, x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS dur_us
-      |FROM b ORDER BY stage, q""".stripMargin)
+      |  FROM f WHERE tc IS NOT NULL AND tp IS NOT NULL)
+      |SELECT g AS stage, q, value AS dur_us
+      |FROM (${Quantiles.sql("dd", "x", Seq(0.25, 0.5, 0.75), Some("g"))}) b
+      |ORDER BY stage, q""".stripMargin)
   )
 
   // q76 — Gini coefficient of customer spend (the inequality /
@@ -1161,15 +1117,7 @@ object RelationalC extends Module {
     Some(s"""WITH spend AS (
       |  SELECT CAST(CAST(SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS BIGINT) AS DOUBLE) AS x
       |  FROM orders GROUP BY o_custkey),
-      |f AS (
-      |  SELECT q, x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS value FROM (
-      |    SELECT q, q * (cnt - 1.0) AS h,
-      |      CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-      |      LEAST(CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-      |    FROM (SELECT CAST(COUNT(*) AS DOUBLE) AS cnt FROM spend) n,
-      |         (SELECT unnest(generate_series(1, 9)) / 10.0 AS q) qs) h
-      |  JOIN (SELECT x AS x_lo, ROW_NUMBER() OVER (ORDER BY x) AS rn_lo FROM spend) lo ON rlo = rn_lo
-      |  JOIN (SELECT x AS x_hi, ROW_NUMBER() OVER (ORDER BY x) AS rn_hi FROM spend) hi ON rhi = rn_hi),
+      |f AS (${Quantiles.sql("spend", "x", (1 to 9).map(_ / 10.0))}),
       |dec AS (
       |  SELECT CAST(1 + (SELECT COUNT(*) FROM f WHERE s.x > f.value) AS BIGINT) AS decile, s.x
       |  FROM spend s),

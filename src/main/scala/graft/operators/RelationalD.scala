@@ -607,28 +607,12 @@ object RelationalD extends Module {
           sum(col("z")).as("sd"),
           sum(col("z") * col("z")).as("ssd")))
     },
-    Some {
-      val medSql =
-        """med AS (
-          |  SELECT b.g, x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS value FROM (
-          |    SELECT r.g, p.h,
-          |      MAX(CASE WHEN r.rn = p.rlo THEN r.x END) AS x_lo,
-          |      MAX(CASE WHEN r.rn = p.rhi THEN r.x END) AS x_hi
-          |    FROM (SELECT l_returnflag AS g, l_extendedprice AS x,
-          |            ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice) AS rn FROM lineitem) r
-          |    JOIN (SELECT g, 0.5 * (cnt - 1.0) AS h,
-          |            CAST(FLOOR(0.5 * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-          |            LEAST(CAST(FLOOR(0.5 * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-          |          FROM (SELECT l_returnflag AS g, CAST(COUNT(*) AS DOUBLE) AS cnt FROM lineitem GROUP BY 1)) p
-          |      ON r.g = p.g AND (r.rn = p.rlo OR r.rn = p.rhi)
-          |    GROUP BY r.g, p.h) b)""".stripMargin
-      s"""WITH $medSql,
-         |src AS (
-         |  SELECT l.l_returnflag AS g,
-         |    CAST(CAST(ROUND(ABS(l.l_extendedprice - med.value) * 200.0) AS BIGINT) AS HUGEINT) AS z
-         |  FROM lineitem l JOIN med ON l.l_returnflag = med.g),
-         |${anovaSql("src")}""".stripMargin
-    }
+    Some(s"""WITH med AS (${Quantiles.sql("lineitem", "l_extendedprice", Seq(0.5), Some("l_returnflag"))}),
+      |src AS (
+      |  SELECT l.l_returnflag AS g,
+      |    CAST(CAST(ROUND(ABS(l.l_extendedprice - med.value) * 200.0) AS BIGINT) AS HUGEINT) AS z
+      |  FROM lineitem l JOIN med ON l.l_returnflag = med.g),
+      |${anovaSql("src")}""".stripMargin)
   )
 
   // q92 — expanding mean/std per customer (pandas expanding(), the
@@ -716,25 +700,16 @@ object RelationalD extends Module {
           col("r_code") * 100L + col("f_code") * 10L + col("m_code"))
     },
     Some {
-      def fenceSql(c: String): String =
-        s"""SELECT x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS value
-           |FROM (
-           |  SELECT q * (cnt - 1.0) AS h, CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-           |    LEAST(CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-           |  FROM (SELECT CAST(unnest(['0.2','0.4','0.6','0.8']) AS DOUBLE) AS q) qs,
-           |    (SELECT CAST(COUNT(*) AS DOUBLE) AS cnt FROM pc) n
-           |) h
-           |JOIN (SELECT CAST($c AS DOUBLE) AS x_lo, ROW_NUMBER() OVER (ORDER BY $c) AS rn_lo FROM pc) lo ON rlo = rn_lo
-           |JOIN (SELECT CAST($c AS DOUBLE) AS x_hi, ROW_NUMBER() OVER (ORDER BY $c) AS rn_hi FROM pc) hi ON rhi = rn_hi""".stripMargin
+      val qs = Seq(0.2, 0.4, 0.6, 0.8)
       s"""WITH pc AS (
          |  SELECT o_custkey,
          |    CAST(CAST(MAX(o_orderdate) AS DATE) - DATE '1970-01-01' AS BIGINT) AS recency_days,
          |    CAST(COUNT(*) AS BIGINT) AS frequency,
          |    CAST(SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS BIGINT) AS monetary_cents
          |  FROM orders GROUP BY o_custkey),
-         |fr AS (${fenceSql("recency_days")}),
-         |ff AS (${fenceSql("frequency")}),
-         |fm AS (${fenceSql("monetary_cents")}),
+         |fr AS (${Quantiles.sql("pc", "CAST(recency_days AS DOUBLE)", qs)}),
+         |ff AS (${Quantiles.sql("pc", "CAST(frequency AS DOUBLE)", qs)}),
+         |fm AS (${Quantiles.sql("pc", "CAST(monetary_cents AS DOUBLE)", qs)}),
          |coded AS (
          |  SELECT o_custkey, recency_days, frequency, monetary_cents,
          |    CAST(1 + (SELECT COUNT(*) FROM fr WHERE CAST(pc.recency_days AS DOUBLE) > fr.value) AS BIGINT) AS r_code,
@@ -1278,28 +1253,13 @@ object RelationalD extends Module {
           mz.as("modified_z"),
           (abs(mz) > lit(3.5)).as("is_outlier"))
     },
-    Some {
-      def medSql(src: String, x: String, out: String): String =
-        s"""$out AS (
-           |  SELECT x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS value FROM (
-           |    SELECT p.h,
-           |      MAX(CASE WHEN r.rn = p.rlo THEN r.x END) AS x_lo,
-           |      MAX(CASE WHEN r.rn = p.rhi THEN r.x END) AS x_hi
-           |    FROM (SELECT $x AS x, ROW_NUMBER() OVER (ORDER BY $x) AS rn FROM $src) r
-           |    JOIN (SELECT 0.5 * (cnt - 1.0) AS h,
-           |            CAST(FLOOR(0.5 * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-           |            LEAST(CAST(FLOOR(0.5 * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-           |          FROM (SELECT CAST(COUNT(*) AS DOUBLE) AS cnt FROM $src)) p
-           |      ON (r.rn = p.rlo OR r.rn = p.rhi)
-           |    GROUP BY p.h))""".stripMargin
-      s"""WITH ${medSql("orders", "o_totalprice", "med")},
-         |d AS (SELECT ABS(o_totalprice - (SELECT value FROM med)) AS dev FROM orders),
-         |${medSql("d", "dev", "madv")}
-         |SELECT o_orderkey, o_totalprice,
-         |  0.6745 * (o_totalprice - (SELECT value FROM med)) / (SELECT value FROM madv) AS modified_z,
-         |  ABS(0.6745 * (o_totalprice - (SELECT value FROM med)) / (SELECT value FROM madv)) > 3.5 AS is_outlier
-         |FROM orders""".stripMargin
-    }
+    Some(s"""WITH med AS (${Quantiles.sql("orders", "o_totalprice", Seq(0.5))}),
+      |d AS (SELECT ABS(o_totalprice - (SELECT value FROM med)) AS dev FROM orders),
+      |madv AS (${Quantiles.sql("d", "dev", Seq(0.5))})
+      |SELECT o_orderkey, o_totalprice,
+      |  0.6745 * (o_totalprice - (SELECT value FROM med)) / (SELECT value FROM madv) AS modified_z,
+      |  ABS(0.6745 * (o_totalprice - (SELECT value FROM med)) / (SELECT value FROM madv)) > 3.5 AS is_outlier
+      |FROM orders""".stripMargin)
   )
 
   // q102 — Kaplan–Meier survival of customer activity (time from first
@@ -1611,15 +1571,7 @@ object RelationalD extends Module {
       |calib AS (
       |  SELECT ABS(y - ((SELECT icept FROM fit2) + (SELECT slope FROM fit2) * x)) AS r
       |  FROM ws WHERE g >= 6 AND g < 8),
-      |qh AS (
-      |  SELECT x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS qhat
-      |  FROM (
-      |    SELECT 0.9 * (cnt - 1.0) AS h,
-      |      CAST(FLOOR(0.9 * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-      |      LEAST(CAST(FLOOR(0.9 * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-      |    FROM (SELECT CAST(COUNT(*) AS DOUBLE) AS cnt FROM calib)) hh
-      |  JOIN (SELECT r AS x_lo, ROW_NUMBER() OVER (ORDER BY r) AS rn_lo FROM calib) lo ON rlo = rn_lo
-      |  JOIN (SELECT r AS x_hi, ROW_NUMBER() OVER (ORDER BY r) AS rn_hi FROM calib) hi ON rhi = rn_hi),
+      |qh AS (SELECT value AS qhat FROM (${Quantiles.sql("calib", "r", Seq(0.9))}) t),
       |tst AS (
       |  SELECT CAST(COUNT(*) AS BIGINT) AS n_test,
       |    CAST(SUM(CASE WHEN ABS(y - ((SELECT icept FROM fit2) + (SELECT slope FROM fit2) * x))
@@ -1722,29 +1674,14 @@ object RelationalD extends Module {
           mz.as("robust_z"),
           (abs(mz) > lit(3.5)).as("is_anomaly"))
     },
-    Some {
-      def medSql(src: String, x: String, out: String): String =
-        s"""$out AS (
-           |  SELECT x_lo + (x_hi - x_lo) * (hh - FLOOR(hh)) AS value FROM (
-           |    SELECT p.hh,
-           |      MAX(CASE WHEN r.rn = p.rlo THEN r.x END) AS x_lo,
-           |      MAX(CASE WHEN r.rn = p.rhi THEN r.x END) AS x_hi
-           |    FROM (SELECT $x AS x, ROW_NUMBER() OVER (ORDER BY $x) AS rn FROM $src) r
-           |    JOIN (SELECT 0.5 * (cnt - 1.0) AS hh,
-           |            CAST(FLOOR(0.5 * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-           |            LEAST(CAST(FLOOR(0.5 * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-           |          FROM (SELECT CAST(COUNT(*) AS DOUBLE) AS cnt FROM $src)) p
-           |      ON (r.rn = p.rlo OR r.rn = p.rhi)
-           |    GROUP BY p.hh))""".stripMargin
-      s"""WITH ${RelationalC.decomposedSql},
-         |${medSql("decomp", "residual", "med")},
-         |dv AS (SELECT ABS(residual - (SELECT value FROM med)) AS dev FROM decomp),
-         |${medSql("dv", "dev", "madv")}
-         |SELECT h, y, residual,
-         |  0.6745 * (residual - (SELECT value FROM med)) / (SELECT value FROM madv) AS robust_z,
-         |  ABS(0.6745 * (residual - (SELECT value FROM med)) / (SELECT value FROM madv)) > 3.5 AS is_anomaly
-         |FROM decomp""".stripMargin
-    }
+    Some(s"""WITH ${RelationalC.decomposedSql},
+      |med AS (${Quantiles.sql("decomp", "residual", Seq(0.5))}),
+      |dv AS (SELECT ABS(residual - (SELECT value FROM med)) AS dev FROM decomp),
+      |madv AS (${Quantiles.sql("dv", "dev", Seq(0.5))})
+      |SELECT h, y, residual,
+      |  0.6745 * (residual - (SELECT value FROM med)) / (SELECT value FROM madv) AS robust_z,
+      |  ABS(0.6745 * (residual - (SELECT value FROM med)) / (SELECT value FROM madv)) > 3.5 AS is_anomaly
+      |FROM decomp""".stripMargin)
   )
 
   // q109 — the cohort retention triangle (signup day × day offset →

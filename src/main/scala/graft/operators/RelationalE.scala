@@ -25,8 +25,9 @@ object RelationalE extends Module {
   // (group, bucket) histogram selection (q33's machinery — parallelism
   // groups·65536, never a per-group sort); the EDA reference is the
   // side-by-side distribution plots of eda_processing.ipynb. The p grid
-  // is CAST(k AS DOUBLE) * 0.05 in both engines — identical IEEE
-  // products, so interpolation weights match bit-for-bit.
+  // is the IEEE products k·0.05, which the oracle receives as exact
+  // string casts (Quantiles.sql), so interpolation weights match
+  // bit-for-bit.
   private val q111 = Q(
     "q111_qq",
     (s, d) => {
@@ -48,29 +49,13 @@ object RelationalE extends Module {
       qv.sortBy(_._1).toDF("p", "q_building", "q_machinery")
         .withColumn("qq_diff", col("q_machinery") - col("q_building"))
     },
-    Some("""WITH src AS (
+    Some(s"""WITH src AS (
       |  SELECT c_mktsegment AS g, CAST(o_totalprice AS DOUBLE) AS x
       |  FROM orders JOIN customer ON o_custkey = c_custkey
       |  WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
-      |r AS (
-      |  SELECT g, x, ROW_NUMBER() OVER (PARTITION BY g ORDER BY x) AS rn
-      |  FROM src),
-      |n AS (SELECT g, CAST(COUNT(*) AS DOUBLE) AS cnt FROM src GROUP BY 1),
-      |ps AS (SELECT CAST(k + 1 AS DOUBLE) * CAST(0.05 AS DOUBLE) AS p
-      |       FROM range(19) t(k)),
-      |pp AS (
-      |  SELECT g, p, p * (cnt - 1.0) AS h,
-      |    CAST(FLOOR(p * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-      |    LEAST(CAST(FLOOR(p * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-      |  FROM n, ps),
-      |b AS (
-      |  SELECT pp.g, pp.p, pp.h,
-      |    MAX(CASE WHEN r.rn = pp.rlo THEN r.x END) AS x_lo,
-      |    MAX(CASE WHEN r.rn = pp.rhi THEN r.x END) AS x_hi
-      |  FROM r JOIN pp ON r.g = pp.g AND (r.rn = pp.rlo OR r.rn = pp.rhi)
-      |  GROUP BY 1, 2, 3),
       |q AS (
-      |  SELECT g, p, x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS v FROM b)
+      |  SELECT g, q AS p, value AS v
+      |  FROM (${Quantiles.sql("src", "x", (1 to 19).map(k => k.toDouble * 0.05), Some("g"))}) b)
       |SELECT p,
       |  MAX(CASE WHEN g = 'BUILDING' THEN v END) AS q_building,
       |  MAX(CASE WHEN g = 'MACHINERY' THEN v END) AS q_machinery,
@@ -835,29 +820,16 @@ object RelationalE extends Module {
       qv.sortBy(_._1)
         .toDF("o_orderpriority", "q1", "median", "q3", "bowley_skew", "quartile_disp")
     },
-    Some("""WITH src AS (
+    Some(s"""WITH src AS (
       |  SELECT o_orderpriority AS g, CAST(o_totalprice AS DOUBLE) AS x FROM orders),
-      |r AS (
-      |  SELECT g, x, ROW_NUMBER() OVER (PARTITION BY g ORDER BY x) AS rn FROM src),
-      |n AS (SELECT g, CAST(COUNT(*) AS DOUBLE) AS cnt FROM src GROUP BY 1),
-      |p AS (
-      |  SELECT g, cnt, q, q * (cnt - 1.0) AS h,
-      |    CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-      |    LEAST(CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-      |  FROM n, (SELECT CAST(0.25 AS DOUBLE) AS q UNION ALL SELECT CAST(0.5 AS DOUBLE)
-      |           UNION ALL SELECT CAST(0.75 AS DOUBLE)) qs),
-      |b AS (
-      |  SELECT p.g, p.q, p.h,
-      |    MAX(CASE WHEN r.rn = p.rlo THEN r.x END) AS x_lo,
-      |    MAX(CASE WHEN r.rn = p.rhi THEN r.x END) AS x_hi
-      |  FROM r JOIN p ON r.g = p.g AND (r.rn = p.rlo OR r.rn = p.rhi)
-      |  GROUP BY 1, 2, 3),
-      |q AS (SELECT g, q AS p, x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS v FROM b),
+      |q AS (
+      |  SELECT g, q AS p, value AS v
+      |  FROM (${Quantiles.sql("src", "x", Seq(0.25, 0.5, 0.75), Some("g"))}) b),
       |w AS (
       |  SELECT g,
-      |    MAX(CASE WHEN p = 0.25 THEN v END) AS q1,
-      |    MAX(CASE WHEN p = 0.5 THEN v END) AS median,
-      |    MAX(CASE WHEN p = 0.75 THEN v END) AS q3
+      |    MAX(CASE WHEN p = ${Quantiles.sqlDouble(0.25)} THEN v END) AS q1,
+      |    MAX(CASE WHEN p = ${Quantiles.sqlDouble(0.5)} THEN v END) AS median,
+      |    MAX(CASE WHEN p = ${Quantiles.sqlDouble(0.75)} THEN v END) AS q3
       |  FROM q GROUP BY g)
       |SELECT g AS o_orderpriority, q1, median, q3,
       |  (q1 + q3 - 2.0 * median) / (q3 - q1) AS bowley_skew,
@@ -1358,7 +1330,7 @@ object RelationalE extends Module {
     // li NOT MATERIALIZED: fact-width multi-use CTE — DuckDB's default
     // would buffer every projected fact row to temp (the q132 sf100
     // spill class); inlined it is streaming scan+agg per use.
-    Some("""WITH li AS NOT MATERIALIZED (
+    Some(s"""WITH li AS NOT MATERIALIZED (
       |  SELECT o_custkey,
       |    CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
       |    CAST(ROUND(o_totalprice * 100.0) AS BIGINT) AS cents
@@ -1368,28 +1340,12 @@ object RelationalE extends Module {
       |  SELECT CASE WHEN day <= mid.m THEN 'prev' ELSE 'cur' END AS half,
       |    o_custkey, CAST(SUM(cents) AS DOUBLE) AS spend
       |  FROM li, mid GROUP BY 1, 2),
-      |r AS (
-      |  SELECT half, o_custkey, spend,
-      |    ROW_NUMBER() OVER (PARTITION BY half ORDER BY spend) AS rn FROM pc),
-      |n AS (SELECT half, CAST(COUNT(*) AS DOUBLE) AS cnt FROM pc GROUP BY 1),
-      |p AS (
-      |  SELECT half, cnt, q, q * (cnt - 1.0) AS h,
-      |    CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-      |    LEAST(CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-      |  FROM n, (SELECT CAST(0.25 AS DOUBLE) AS q UNION ALL SELECT CAST(0.5 AS DOUBLE)
-      |           UNION ALL SELECT CAST(0.75 AS DOUBLE)) qs),
-      |b AS (
-      |  SELECT p.half, p.q, p.h,
-      |    MAX(CASE WHEN r.rn = p.rlo THEN r.spend END) AS x_lo,
-      |    MAX(CASE WHEN r.rn = p.rhi THEN r.spend END) AS x_hi
-      |  FROM r JOIN p ON r.half = p.half AND (r.rn = p.rlo OR r.rn = p.rhi)
-      |  GROUP BY 1, 2, 3),
       |f AS (
-      |  SELECT half,
-      |    MAX(CASE WHEN q = 0.25 THEN x_lo + (x_hi - x_lo) * (h - FLOOR(h)) END) AS f1,
-      |    MAX(CASE WHEN q = 0.5 THEN x_lo + (x_hi - x_lo) * (h - FLOOR(h)) END) AS f2,
-      |    MAX(CASE WHEN q = 0.75 THEN x_lo + (x_hi - x_lo) * (h - FLOOR(h)) END) AS f3
-      |  FROM b GROUP BY half),
+      |  SELECT g AS half,
+      |    MAX(CASE WHEN q = ${Quantiles.sqlDouble(0.25)} THEN value END) AS f1,
+      |    MAX(CASE WHEN q = ${Quantiles.sqlDouble(0.5)} THEN value END) AS f2,
+      |    MAX(CASE WHEN q = ${Quantiles.sqlDouble(0.75)} THEN value END) AS f3
+      |  FROM (${Quantiles.sql("pc", "spend", Seq(0.25, 0.5, 0.75), Some("half"))}) b GROUP BY g),
       |coded AS (
       |  SELECT pc.half, pc.o_custkey,
       |    CASE WHEN spend <= f1 THEN 1 WHEN spend <= f2 THEN 2

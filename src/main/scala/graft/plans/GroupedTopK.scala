@@ -177,8 +177,8 @@ case class FinalTopKExec(group: Seq[Expression], order: Seq[SortOrder],
     copy(child = newChild)
 }
 
-/** Public API. The planner strategy is installed by
-  * `GraftFunctions.register` (which `Session.local` and the
+/** Public API. The planner strategy and [[TopKPushdown]] are installed
+  * by `GraftFunctions.register` (which `Session.local` and the
   * `SparkEntry.queries` boundary call) or injected by GraftExtensions.
   */
 object GraftOps {

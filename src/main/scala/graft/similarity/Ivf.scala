@@ -15,9 +15,10 @@ import org.apache.spark.sql.types.StructType
   *            directory level and unprobed cells are never read. (bucketBy
   *            hashes ids into buckets and a cluster_id filter would not
   *            skip bucket files on read.)
-  *   probe  — each query ranks the broadcast centroid table (tiny), the
-  *            nProbe chosen cell ids are collected as bounded metadata and
-  *            applied as a LITERAL partition filter, and the exact
+  *   probe  — the bounded query set is collected once and each query
+  *            ranks the (tiny) centroid table in driver arithmetic
+  *            ([[probeCells]], shared with [[IvfPq]]); the chosen cell ids
+  *            become a LITERAL partition filter, and the exact
   *            integer-grid cosine + grouped top-k runs over only
   *            ~nProbe/nClusters of the data. PartitionFilters pruning is
   *            asserted in SimilaritySpec.
@@ -28,7 +29,7 @@ object Ivf {
     * written with (a probe reads it back without a schema-inference
     * job), and the (tiny) centroid table kept as driver metadata.
     */
-  case class IvfIndex(path: String, centroids: Seq[(Int, Seq[Double])], nClusters: Int,
+  case class IvfIndex(path: String, centroids: Array[Array[Double]], nClusters: Int,
       schema: StructType)
 
   /** Fit the quantizer on ≤ maxTrainRows sampled rows (seeded driver
@@ -46,54 +47,48 @@ object Ivf {
       .select(col(idCol).as("corpus_id"), col("qvec").as("c_qvec"),
         col("qnorm").as("c_qnorm"), col("cluster_id"))
     graft.sources.Sources.writePartitioned(assigned, path, Seq("cluster_id"))
-    IvfIndex(path,
-      centers.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq,
-      nClusters, assigned.schema)
+    IvfIndex(path, centers, nClusters, assigned.schema)
   }
 
-  /** (query_id, cluster_id, q_qvec, q_qnorm) for each query's nProbe
-    * nearest centroids — queries × centroids is tiny by contract.
-    */
-  private def probeClusters(index: IvfIndex, queries: DataFrame, idCol: String,
-      embCol: String, nProbe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centroids = index.centroids.toDF("cluster_id", "centroid")
-    val near = Similarity.withQuantized(queries, embCol)
-      .select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
-        col("qvec").as("q_qvec"), col("qnorm").as("q_qnorm"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("dist2", aggregate(
-        zip_with(col("q_emb"), col("centroid"), (x, y) => {
-          val dxy = x.cast("double") - y
-          dxy * dxy
-        }),
-        lit(0.0), (acc, v) => acc + v))
-      .select("query_id", "q_qvec", "q_qnorm", "cluster_id", "dist2")
-    graft.plans.GraftOps.groupedTopK(near, Seq("query_id"), "dist2", "cluster_id",
-        nProbe, ascending = true)
-      .select("query_id", "q_qvec", "q_qnorm", "cluster_id")
+  private def sqDist(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
+    s
   }
+
+  /** The query rows (id, embedding), collected once — the query set is
+    * bounded by contract — each with its nProbe nearest cells: squared
+    * L2 to every centroid summed left to right in doubles, ties to the
+    * lower cell index. The cell choice of both IVF layouts.
+    */
+  private[similarity] def probeCells(centroids: Array[Array[Double]], queries: DataFrame,
+      idCol: String, embCol: String, nProbe: Int): Seq[(Long, Seq[Float], Seq[Int])] =
+    queries.select(col(idCol), col(embCol)).collect().toSeq.map { r =>
+      val emb = r.getSeq[Float](1)
+      val v = emb.toArray.map(_.toDouble)
+      val cells = centroids.zipWithIndex
+        .map { case (c, i) => (sqDist(v, c), i) }.sorted.take(nProbe).map(_._2).toSeq
+      (r.getLong(0), emb, cells)
+    }
 
   /** Top-k over only the probed cells: literal partition filter → directory
-    * pruning → broadcast the probed query set over the pruned scan.
+    * pruning → each (query, probed cell) pair broadcast over the pruned
+    * scan → [[Similarity.exactRerank]].
     */
   def probeIndex(index: IvfIndex, queries: DataFrame, idCol: String,
       embCol: String, k: Int, nProbe: Int): DataFrame = {
     val spark = queries.sparkSession
-    val probed = probeClusters(index, queries, idCol, embCol, nProbe)
-    // bounded metadata: |queries| · nProbe cell ids become the literal
-    // pruning predicate (a join key would defeat partition pruning)
-    val cells = probed.select("cluster_id").distinct().collect().map(_.get(0))
+    import spark.implicits._
+    val probes = probeCells(index.centroids, queries, idCol, embCol, nProbe)
+    // a join key would defeat partition pruning; the index's own schema
+    // → no schema-inference job
     val inv = spark.read.schema(index.schema).parquet(index.path)
-      .filter(col("cluster_id").isin(cells: _*))
-    val scored = inv.join(broadcast(probed), "cluster_id")
-      .select(col("query_id"), col("corpus_id"),
-        Similarity.cosineQ(col("q_qvec"), col("c_qvec"),
-          col("q_qnorm"), col("c_qnorm")).as("cosine"))
-    // grouped top-k: probed-cell volume per query never funnels one task
-    Similarity.topKPerQuery(scored, "cosine", k)
-      .select("query_id", "corpus_id", "cosine", "rank")
+      .filter(col("cluster_id").isin(probes.flatMap(_._3).distinct: _*))
+    val pairs = probes.flatMap { case (qid, _, cells) => cells.map(c => (qid, c)) }
+      .toDF("query_id", "cluster_id")
+    Similarity.exactRerank(inv.join(broadcast(pairs), "cluster_id"),
+      probes.map { case (qid, emb, _) => (qid, emb) }, k)
   }
 
   /** One-shot build + probe (sim_ivf_topk); the index lands in an

@@ -33,13 +33,6 @@ object IvfPq {
       books: Array[Array[Array[Double]]], m: Int, ksub: Int, dsub: Int,
       schema: StructType)
 
-  private def sqDist(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-    s
-  }
-
   /** Coarse quantizer + PQ codebooks, both seeded driver Lloyd's on the
     * SAME bounded collected sample (coarse on raw vectors, books on the
     * normalized ones), then ONE pass assigning + encoding the corpus,
@@ -72,22 +65,16 @@ object IvfPq {
       embCol: String, k: Int, nProbe: Int, candMult: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val qRows = queries.select(col(idCol), col(embCol)).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
     // per query: nProbe nearest cells + the ADC table over the codebooks
-    val probes: Seq[(Long, Seq[Int], Seq[Double])] = qRows.map { case (qid, emb) =>
-      val v = emb.toArray.map(_.toDouble)
-      val cells = index.centroids.zipWithIndex
-        .map { case (c, i) => (sqDist(v, c), i) }.sorted.take(nProbe).map(_._2).toSeq
-      (qid, cells, Pq.adcTable(emb, index.books))
-    }
-    val allCells = probes.flatMap(_._2).distinct
+    val probes = Ivf.probeCells(index.centroids, queries, idCol, embCol, nProbe)
+      .map { case (qid, emb, cells) => (qid, emb, cells, Pq.adcTable(emb, index.books)) }
+    val allCells = probes.flatMap(_._3).distinct
     // literal IN-list → directory pruning (a join key would defeat it);
     // the index's own schema → no schema-inference job
     val inv = spark.read.schema(index.schema).parquet(index.path)
       .filter(col("cluster_id").isin(allCells: _*))
     val qProbe = probes
-      .flatMap { case (qid, cells, tbl) => cells.map(c => (qid, c, tbl)) }
+      .flatMap { case (qid, _, cells, tbl) => cells.map(c => (qid, c, tbl)) }
       .toDF("query_id", "cluster_id", "tbl")
     // ADC over the pruned cells ranks only narrow (query, id, adc) rows
     // through the grouped top-k (map-side heaps, one exchange), so
@@ -105,7 +92,7 @@ object IvfPq {
     Similarity.exactRerank(
       inv.select(col("corpus_id"), col("c_qvec"), col("c_qnorm"))
         .join(broadcast(candIds), "corpus_id"),
-      qRows, k)
+      probes.map { case (qid, emb, _, _) => (qid, emb) }, k)
   }
 
   /** One-shot build + probe (sim_ivfpq_topk); the index lands in an

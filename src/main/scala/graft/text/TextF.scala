@@ -731,7 +731,7 @@ object TextF extends Module {
             .when(col("avg_rank") > lit(f1), lit("middle"))
             .otherwise(lit("head")).as("bucket"))
     },
-    Some("""WITH toks AS (
+    Some(s"""WITH toks AS (
       |  SELECT doc_id, t FROM (
       |    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t FROM documents)
       |  WHERE length(t) > 0),
@@ -743,19 +743,10 @@ object TextF extends Module {
       |  SELECT d.doc_id,
       |    CAST(SUM(COALESCE(v.r, 21)) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_rank
       |  FROM toks d LEFT JOIN vocab v ON d.t = v.t GROUP BY d.doc_id),
-      |f AS (
-      |  SELECT q, x_lo + (x_hi - x_lo) * (h - FLOOR(h)) AS value
-      |  FROM (
-      |    SELECT q, q * (cnt - 1.0) AS h,
-      |      CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 1 AS rlo,
-      |      LEAST(CAST(FLOOR(q * (cnt - 1.0)) AS BIGINT) + 2, CAST(cnt AS BIGINT)) AS rhi
-      |    FROM (SELECT CAST(1.0/3.0 AS DOUBLE) AS q UNION ALL SELECT CAST(2.0/3.0 AS DOUBLE)) qs,
-      |         (SELECT CAST(COUNT(*) AS DOUBLE) AS cnt FROM sc) n) h
-      |  JOIN (SELECT avg_rank AS x_lo, ROW_NUMBER() OVER (ORDER BY avg_rank) AS rn_lo FROM sc) lo ON rlo = rn_lo
-      |  JOIN (SELECT avg_rank AS x_hi, ROW_NUMBER() OVER (ORDER BY avg_rank) AS rn_hi FROM sc) hi ON rhi = rn_hi),
+      |f AS (${graft.operators.Quantiles.sql("sc", "avg_rank", Seq(1.0 / 3, 2.0 / 3))}),
       |fx AS (
-      |  SELECT MAX(CASE WHEN q < 0.5 THEN value END) AS f1,
-      |         MAX(CASE WHEN q > 0.5 THEN value END) AS f2 FROM f)
+      |  SELECT MAX(CASE WHEN q = ${graft.operators.Quantiles.sqlDouble(1.0 / 3)} THEN value END) AS f1,
+      |         MAX(CASE WHEN q = ${graft.operators.Quantiles.sqlDouble(2.0 / 3)} THEN value END) AS f2 FROM f)
       |SELECT sc.doc_id, sc.avg_rank,
       |  CASE WHEN sc.avg_rank > fx.f2 THEN 'tail'
       |       WHEN sc.avg_rank > fx.f1 THEN 'middle'

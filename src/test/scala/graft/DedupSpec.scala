@@ -165,6 +165,46 @@ class DedupSpec extends SparkSpec {
     assert(out.count(_._2._2) === out.size - 3)
   }
 
+  test("semanticDedup recovers planted groups on both sides of the count-estimate boundary") {
+    import spark.implicits._
+    val base = Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .collect().toSeq
+    val planted = Seq(
+      (3000L, base(3)._2), (3001L, base(3)._2),        // grid-identical copies
+      (3002L, base(7)._2.map(v => v * 1.0005f)),       // near copies of 7
+      (3003L, base(7)._2.map(v => v * 0.9995f)),
+      (3004L, base(11)._2.map(v => v * 1.0004f)))      // near copy of 11
+    val groups = Map(3000L -> base(3)._1, 3001L -> base(3)._1, 3002L -> base(7)._1,
+      3003L -> base(7)._1, 3004L -> base(11)._1)
+    val dir = java.nio.file.Files.createTempDirectory("graft_semdedup").toString
+    try {
+      // parquet-backed, so the estimate reads the leaf's on-disk bytes
+      (base ++ planted).toDF("vec_id", "embedding").write.mode("overwrite").parquet(dir)
+      val df = spark.read.parquet(dir)
+      val nReps = base.size + planted.size - 1 // the two identical copies collapse
+      def run(maxTrainRows: Long): (Map[Long, (Long, Boolean)], Int) = {
+        val out = Dedup.semanticDedup(df, "vec_id", "embedding", tau = 0.99,
+            targetCellRows = 64L, maxTrainRows = maxTrainRows)
+          .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getBoolean(3))).toMap
+        (out, Dedup.lastSemK)
+      }
+      val (exact, kExact) = run(nReps.toLong)          // the count is exact
+      val (estimated, kEst) = run(nReps.toLong - 5L)   // just over the cap
+      for ((name, out) <- Seq("exact" -> exact, "estimate" -> estimated)) {
+        assert(out.size === base.size + planted.size, name)
+        groups.foreach { case (id, rep) =>
+          assert(out(id) === ((rep, false)), s"$name: $id")
+          assert(out(rep)._2, s"$name: group min id $rep must survive")
+        }
+        assert(out.count(_._2._2) === out.size - planted.size, name)
+      }
+      info(s"k: exact path $kExact, estimate path $kEst")
+      assert(kExact === nReps / 64 + 1)
+      assert(kEst >= kExact, s"estimated k $kEst below the exact path's $kExact")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("semanticDedup survives a fully-duplicate tiny corpus (k-means skipped)") {
     import spark.implicits._
     // all rows grid-identical ⇒ one representative ⇒ fewer points than

@@ -142,9 +142,12 @@ class PlansSpec extends SparkSpec {
       assert(p.contains("PartialTopK"),
         "optimizer rule did not fire on the row_number idiom:\n" + p)
       assert(p.contains("Window"), "the window must stay to recompute rn:\n" + p)
-      // bit-identical to the un-rewritten plan, INCLUDING the rn column
-      val expected = idiom(orig).collect().map(_.toSeq).toSet
-      assert(idiom(orig).queryExecution.executedPlan.toString.indexOf("PartialTopK") < 0)
+      // bit-identical to the un-rewritten plan, INCLUDING the rn column;
+      // `plain` has neither graft's strategy nor its rule (the shared
+      // session is registered, so it rewrites too)
+      val plain = orig.newSession()
+      val expected = idiom(plain).collect().map(_.toSeq).toSet
+      assert(idiom(plain).queryExecution.executedPlan.toString.indexOf("PartialTopK") < 0)
       assert(rewritten.collect().map(_.toSeq).toSet === expected)
       // rank() admits >k ties — the rule must NOT touch it
       val ranked = Tables.orders(s2, sf)
@@ -162,7 +165,7 @@ class PlansSpec extends SparkSpec {
       assert(nestedPlan.contains("PartialTopK"),
         "rule must find rn <= k inside nested Ands:\n" + nestedPlan)
       assert(nested(s2).collect().map(_.toSeq).toSet ===
-        nested(orig).collect().map(_.toSeq).toSet)
+        nested(plain).collect().map(_.toSeq).toSet)
     } finally {
       SparkSession.setDefaultSession(orig)
       SparkSession.setActiveSession(orig)

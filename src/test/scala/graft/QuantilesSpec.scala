@@ -322,4 +322,55 @@ class QuantilesSpec extends SparkSpec {
         s"seed=$i planted no point-mass bucket")
     }
   }
+
+  /** The SQL twin's spine: q ∈ {0, 1}, the quartiles, and products and
+    * quotients whose shortest decimal is long ((k+1)·0.05, 1/3, 2/3).
+    */
+  private val sqlQs = (Seq(0.0, 0.25, 0.5, 0.75, 1.0, 1.0 / 3.0, 2.0 / 3.0) ++
+    (0 until 19).map(k => (k + 1) * 0.05)).distinct
+
+  /** ((g, q) → raw value bits) from [[Quantiles.sql]] run through Spark
+    * SQL over `df` (columns g, x) as a temp view; g is null ungrouped.
+    */
+  private def sqlBits(df: org.apache.spark.sql.DataFrame, grouped: Boolean)
+      : Map[(String, Double), Long] = {
+    df.createOrReplaceTempView("quantiles_sql_src")
+    spark.sql(Quantiles.sql("quantiles_sql_src", "x", sqlQs, if (grouped) Some("g") else None))
+      .collect().map { r =>
+        val k = if (grouped) 1 else 0
+        (if (grouped) r.getString(0) else null, r.getDouble(k)) ->
+          java.lang.Double.doubleToRawLongBits(r.getDouble(k + 1))
+      }.toMap
+  }
+
+  private def bits(rows: Seq[(String, Double, Double)], grouped: Boolean)
+      : Map[(String, Double), Long] =
+    rows.map { case (g, q, v) =>
+      (if (grouped) g else null, q) -> java.lang.Double.doubleToRawLongBits(v)
+    }.toMap
+
+  test("Quantiles.sql run in Spark SQL equals the exact quantiles bit for bit") {
+    import spark.implicits._
+    // tie runs on a half-integer grid in groups a..c, a singleton group,
+    // and a constant group
+    (1 to 6).foreach { i =>
+      val r = new scala.util.Random(1300L + i)
+      val rows = Seq("a", "b", "c").flatMap { g =>
+        Seq.fill(50 + r.nextInt(400))((g, math.rint(r.nextGaussian() * 6.0) / 2.0))
+      } ++ Seq(("s", r.nextDouble() * 100.0)) ++ Seq.fill(40)(("k", 7.75))
+      val df = rows.toDF("g", "x")
+      val grouped = bits(Quantiles.groupedExactQuantiles(df, "g", "x", sqlQs), grouped = true)
+      assert(grouped.size === 5 * sqlQs.size, s"seed=$i")
+      assert(sqlBits(df, grouped = true) === grouped, s"seed=$i grouped")
+      val whole = bits(Quantiles.exactQuantiles(df, Seq("x"), sqlQs), grouped = false)
+      assert(whole.size === sqlQs.size, s"seed=$i")
+      assert(sqlBits(df, grouped = false) === whole, s"seed=$i ungrouped")
+    }
+    // n = 1 and a constant column, ungrouped
+    for ((name, xs) <- Seq("n=1" -> Seq(3.125), "constant" -> Seq.fill(25)(-6.5))) {
+      val df = xs.map(x => ("a", x)).toDF("g", "x")
+      assert(sqlBits(df, grouped = false) ===
+        bits(Quantiles.exactQuantiles(df, Seq("x"), sqlQs), grouped = false), name)
+    }
+  }
 }
