@@ -581,10 +581,12 @@ object GraftFunctions {
     * session another thread is still mid-way through populating
     * (putIfAbsent-then-register was a TOCTOU window that could surface
     * as 'undefined function graft_*' analysis failures). The grouped-
-    * top-k planner strategy and its optimizer rule are installed under
-    * the same lock, so `experimental.extraStrategies` and
-    * `extraOptimizations` are never read-then-appended by two threads at
-    * once — the same pair GraftExtensions injects.
+    * top-k planner strategy is installed under the same lock, so
+    * `experimental.extraStrategies` is never read-then-appended by two
+    * threads at once — the same strategy GraftExtensions injects. graft
+    * adds no optimizer rule: a per-group top-k is `GraftOps.groupedTopK`,
+    * and Spark's own `InferWindowGroupLimit` already limits the
+    * `row_number() … <= k` window idiom.
     */
   private val registered =
     java.util.Collections.synchronizedMap(
@@ -598,8 +600,6 @@ object GraftFunctions {
       val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
       if (!exp.extraStrategies.contains(graft.plans.GroupedTopKStrategy))
         exp.extraStrategies = exp.extraStrategies :+ graft.plans.GroupedTopKStrategy
-      if (!exp.extraOptimizations.contains(graft.plans.TopKPushdown))
-        exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.TopKPushdown
       java.lang.Boolean.TRUE
     })
     ()
@@ -612,8 +612,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((id, info, builder))
     }
     // the grouped-top-k operator (custom LogicalPlan → physical pair)
-    // and the optimizer rule that rewrites window-top-k idioms onto it
     ext.injectPlannerStrategy(_ => graft.plans.GroupedTopKStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.TopKPushdown)
   }
 }

@@ -1336,9 +1336,7 @@ object MlC extends Module {
         .withColumn("neg", col("fp") + col("tn"))
         .withColumn("sep", col("tp").cast("double") / col("pos").cast("double") -
           col("fp").cast("double") / col("neg").cast("double"))
-      val w = Window.orderBy(col("sep").desc, col("thr")) // 21-row surface
-      counts.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      counts.orderBy(col("sep").desc, col("thr")).limit(1) // 21-row surface
         .select(col("thr").as("ks_threshold"), col("sep").as("ks"),
           col("pos"), col("neg"))
     },
@@ -1637,7 +1635,7 @@ object MlC extends Module {
         (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x)
       val preds = graft.plans.GraftOps.groupedTopK(
           q.join(broadcast(ref), lit(true)).withColumn("dist", dist),
-          Seq("qid"), "dist", "rid", k = 10, ascending = true)
+          Seq("qid"), Seq(col("dist"), col("rid")), k = 10)
         .groupBy(col("qid"), col("label"))
         .agg((sum(col("rlabel")) / count(lit(1))).as("score"))
         .withColumn("prediction", when(col("score") > 0.5, 1.0).otherwise(0.0))

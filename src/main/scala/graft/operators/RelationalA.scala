@@ -635,16 +635,15 @@ object RelationalA extends Module {
       |ORDER BY l_returnflag, q""".stripMargin)
   )
 
-  // q34 — argmax per group (pandas idxmax): deterministic via a rank
-  // window with an explicit tiebreak key; one shuffle on the group key.
+  // q34 — argmax per group (pandas idxmax): the grouped top-k with
+  // k = 1, deterministic via an explicit tiebreak key; map-side heaps,
+  // one shuffle on the group key.
   private val q34 = Q(
     "q34_argmax",
     (s, d) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      Tables.orders(s, d)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      graft.plans.GraftOps.groupedTopK(
+          Tables.orders(s, d).select("o_custkey", "o_orderkey", "o_totalprice"),
+          Seq("o_custkey"), Seq(col("o_totalprice").desc, col("o_orderkey")), k = 1)
         .select(col("o_custkey"), col("o_orderkey").as("top_orderkey"),
           col("o_totalprice").as("top_price"))
     },
@@ -967,14 +966,14 @@ object RelationalA extends Module {
       // once keys exceed p distinct keys CAN collide (first seen at
       // sf100: keys b and b+7 one hundred copies apart), and a tie
       // straddling the threshold would over-keep. The exact-n tiebreak
-      // (h, then key — the oracle's ROW_NUMBER order) ranks only the
-      // ALREADY-FILTERED surface: ≤ n + ties rows per group, bounded
-      // metadata, never a fact-scale window.
-      c.join(thrDf, col("c_mktsegment") === col("seg"))
+      // (h, then key — the oracle's ROW_NUMBER order) is the grouped
+      // top-k over the ALREADY-FILTERED surface: ≤ n + ties rows per
+      // group, bounded metadata, never a fact-scale window.
+      val kept = c.join(thrDf, col("c_mktsegment") === col("seg"))
         .filter(col("h") <= col("thr"))
-        .withColumn("rn", row_number().over(Window.partitionBy(col("c_mktsegment"))
-          .orderBy(col("h"), col("c_custkey"))))
-        .filter(col("rn") <= 100)
+        .select(col("c_mktsegment"), col("c_custkey"), col("h"))
+      graft.plans.GraftOps.groupedTopK(kept, Seq("c_mktsegment"),
+          Seq(col("h"), col("c_custkey")), k = 100)
         .select(col("c_mktsegment"), col("c_custkey"))
         .orderBy("c_mktsegment", "c_custkey")
     },
@@ -1246,7 +1245,7 @@ object RelationalA extends Module {
     (s, d) => {
       graft.plans.GraftOps.groupedTopK(
           Tables.orders(s, d).select("o_custkey", "o_orderkey", "o_totalprice"),
-          Seq("o_custkey"), "o_totalprice", "o_orderkey", k = 3)
+          Seq("o_custkey"), Seq(col("o_totalprice").desc, col("o_orderkey")), k = 3)
     },
     Some("""SELECT o_custkey, o_orderkey, o_totalprice
       |FROM (SELECT o_custkey, o_orderkey, o_totalprice,

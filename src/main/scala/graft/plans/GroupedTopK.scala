@@ -1,19 +1,19 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, Descending, EqualTo, Expression, IntegerLiteral, LessThan, LessThanOrEqual, RowNumber, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow, WindowExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, UnaryNode, Window}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.expressions.{Window => WindowSpec}
 import org.apache.spark.sql.functions.{col, row_number}
 
 /** Grouped top-k as a first-class operator: custom logical node +
-  * optimizer rule + planner strategy + two physical operators — the
-  * complete extension path (SURVEY §2.I / brief path (c)).
+  * planner strategy + two physical operators — the complete extension
+  * path (SURVEY §2.I / brief path (c)). [[GraftOps]] is its one entry
+  * point.
   *
   * WHY an operator instead of the `row_number().over(partitionBy(g))`
   * window: the window plan shuffles EVERY row to its group's reducer and
@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions.{col, row_number}
   * SortOrder list over any orderable types) — exactly the rows
   * `row_number() over (partition by group order by order) <= k` keeps.
   * Schema unchanged; no rank column (the surviving groups are ≤ k rows,
-  * so re-deriving it is cheap — which is exactly what [[TopKPushdown]]
-  * and [[GraftOps.rankedTopK]] exploit).
+  * so re-deriving it is cheap — which is what [[GraftOps.rankedTopK]]
+  * does).
   *
   * Memory contract (stated, not hidden): the map-side pass holds
   * k·(distinct groups in the partition) rows — the same asymptotics as
@@ -40,8 +40,7 @@ import org.apache.spark.sql.functions.{col, row_number}
   * fallback. That is the right trade for the top-k regimes this exists
   * for (small k, group state that fits); for adversarial cardinality ×
   * k the window formulation (which sorts and therefore spills) remains
-  * the safe path, and [[TopKPushdown]]'s MaxK bound keeps the rewrite
-  * inside the intended regime.
+  * the safe path.
   */
 case class GroupedTopK(
     group: Seq[Expression],
@@ -51,58 +50,6 @@ case class GroupedTopK(
   override def output: Seq[Attribute] = child.output
   override protected def withNewChildInternal(newChild: LogicalPlan): GroupedTopK =
     copy(child = newChild)
-}
-
-/** Injected optimizer rule: rewrites the user-written window idiom
-  *
-  *   df.withColumn("rn", row_number().over(partitionBy(g).orderBy(o)))
-  *     .filter($"rn" <= k)
-  *
-  * by inserting [[GroupedTopK]] BELOW the window. The window and the
-  * filter stay in place: over the pruned input (each group reduced to
-  * exactly the k rows the filter would keep, in the same order), the
-  * re-computed row_number values for surviving rows are identical, so
-  * semantics are preserved even when `rn` is referenced downstream —
-  * the rewrite never needs to inspect anything above the Filter.
-  *
-  * Fires only for row_number (rank/dense_rank admit > k ties), only when
-  * it is the window's single expression, with a non-empty deterministic
-  * order, and k ≤ [[TopKPushdown.MaxK]] (heaps hold k rows per group per
-  * task). `rn <= k`, `rn < k`, and `rn = k` conjuncts all bound k.
-  */
-object TopKPushdown extends Rule[LogicalPlan] {
-  val MaxK = 1000
-
-  // recursively split nested Ands (the splitConjunctivePredicates
-  // pattern) — predicate merging can leave `rn <= k` arbitrarily deep
-  // in a conjunction tree
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-      splitConjuncts(l) ++ splitConjuncts(r)
-    case other => Seq(other)
-  }
-
-  private def boundOf(cond: Expression, rn: Attribute): Option[Int] = {
-    val conjuncts = splitConjuncts(cond)
-    conjuncts.collectFirst {
-      case LessThanOrEqual(a: Attribute, IntegerLiteral(k)) if a.semanticEquals(rn) => k
-      case LessThan(a: Attribute, IntegerLiteral(k)) if a.semanticEquals(rn) => k - 1
-      case EqualTo(a: Attribute, IntegerLiteral(k)) if a.semanticEquals(rn) => k
-      case EqualTo(IntegerLiteral(k), a: Attribute) if a.semanticEquals(rn) => k
-    }
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case f @ Filter(cond,
-        w @ Window(Seq(alias @ Alias(WindowExpression(_: RowNumber, spec), _)),
-          part, order, child, _))
-        if order.nonEmpty && !child.isInstanceOf[GroupedTopK] =>
-      boundOf(cond, alias.toAttribute) match {
-        case Some(k) if k > 0 && k <= MaxK =>
-          f.copy(child = w.copy(child = GroupedTopK(part, order, k, child)))
-        case _ => f
-      }
-  }
 }
 
 object GroupedTopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
@@ -177,41 +124,44 @@ case class FinalTopKExec(group: Seq[Expression], order: Seq[SortOrder],
     copy(child = newChild)
 }
 
-/** Public API. The planner strategy and [[TopKPushdown]] are installed
-  * by `GraftFunctions.register` (which `Session.local` and the
+/** Public API. The planner strategy is installed by
+  * `GraftFunctions.register` (which `Session.local` and the
   * `SparkEntry.queries` boundary call) or injected by GraftExtensions.
   */
 object GraftOps {
 
-  /** Each group's first k rows under `scoreCol` desc (asc when
-    * `ascending`), then `tieCol` asc — the rows
-    * `row_number() over (partition by groupCols order by …) <= k` keeps,
-    * NULLs and NaNs placed as that window places them. Both columns are
-    * compared in their own types (a cast would tie BIGINTs above 2^53,
-    * round DECIMALs and null out STRING keys); original schema preserved.
+  /** Each group's first k rows under `order` — Spark Columns such as
+    * `Seq(col("ts").desc, col("event_id").desc)`, resolved by the
+    * analyzer: the rows
+    * `row_number() over (partition by groupCols order by order) <= k`
+    * keeps, NULLs and NaNs placed as that window places them. Every key
+    * compares in its own type (a cast would tie BIGINTs above 2^53,
+    * round DECIMALs and null out STRING keys); original schema
+    * preserved. No `groupCols` is one global top-k.
     */
-  def groupedTopK(df: DataFrame, groupCols: Seq[String], scoreCol: String,
-      tieCol: String, k: Int, ascending: Boolean = false): DataFrame = {
+  def groupedTopK(df: DataFrame, groupCols: Seq[String], order: Seq[Column],
+      k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    val spark = df.sparkSession
-    val analyzed = df.queryExecution.analyzed
-    def attr(n: String): Attribute = analyzed.output
-      .find(_.name == n)
-      .getOrElse(throw new IllegalArgumentException(s"no column $n"))
-    val order = Seq(SortOrder(attr(scoreCol), if (ascending) Ascending else Descending),
-      SortOrder(attr(tieCol), Ascending))
-    org.apache.spark.sql.GraftBridge.ofRows(spark,
-      GroupedTopK(groupCols.map(attr), order, k, analyzed))
+    require(order.nonEmpty, "order must name at least one key")
+    // the analyzer resolves group and order as one Sort over df's plan
+    df.sort(groupCols.map(col) ++ order: _*).queryExecution.analyzed match {
+      case Sort(keys, _, child, _) =>
+        val (g, o) = keys.splitAt(groupCols.size)
+        org.apache.spark.sql.GraftBridge.ofRows(df.sparkSession,
+          GroupedTopK(g.map(_.child), o, k, child))
+      case other =>
+        throw new IllegalArgumentException(s"order must use the columns of df:\n$other")
+    }
   }
 
   /** [[groupedTopK]] plus a BIGINT `rank` column (1 = first in order): a
-    * row_number over the ≤ k survivors. [[FinalTopKExec]] already
-    * clusters on the group, so the rank costs a local sort of those rows
-    * and no second exchange.
+    * row_number over the ≤ k survivors under the same `order`.
+    * [[FinalTopKExec]] already clusters on the group, so the rank costs
+    * a local sort of those rows and no second exchange.
     */
-  def rankedTopK(df: DataFrame, groupCols: Seq[String], scoreCol: String,
-      tieCol: String, k: Int): DataFrame =
-    groupedTopK(df, groupCols, scoreCol, tieCol, k)
+  def rankedTopK(df: DataFrame, groupCols: Seq[String], order: Seq[Column],
+      k: Int): DataFrame =
+    groupedTopK(df, groupCols, order, k)
       .withColumn("rank", row_number().over(WindowSpec.partitionBy(groupCols.map(col): _*)
-        .orderBy(col(scoreCol).desc, col(tieCol))).cast("long"))
+        .orderBy(order: _*)).cast("long"))
 }

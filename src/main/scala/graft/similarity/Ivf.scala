@@ -50,7 +50,10 @@ object Ivf {
     IvfIndex(path, centers, nClusters, assigned.schema)
   }
 
-  private def sqDist(a: Array[Double], b: Array[Double]): Double = {
+  /** Squared L2, `d = a(i) − b(i)` summed left to right in doubles — the
+    * one distance of the IVF cell choice and of [[Pq.kmeansSub]].
+    */
+  private[similarity] def sqDist(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0
     var i = 0
     while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }

@@ -86,8 +86,8 @@ object IvfPq {
       .join(broadcast(qProbe), "cluster_id")
       .withColumn("adc", call_function("graft_pq_adc", col("codes"), col("tbl")))
       .select(col("query_id"), col("corpus_id"), col("adc"))
-    val candIds = graft.plans.GraftOps.groupedTopK(scored, Seq("query_id"), "adc",
-        "corpus_id", k * candMult)
+    val candIds = graft.plans.GraftOps.groupedTopK(scored, Seq("query_id"),
+        Seq(col("adc").desc, col("corpus_id")), k * candMult)
       .select("query_id", "corpus_id")
     Similarity.exactRerank(
       inv.select(col("corpus_id"), col("c_qvec"), col("c_qnorm"))

@@ -45,9 +45,7 @@ object Pq {
       var bd = Double.MaxValue
       var c = 0
       while (c < k) {
-        var dist = 0.0
-        var i = 0
-        while (i < d) { val x = v(i) - centers(c)(i); dist += x * x; i += 1 }
+        val dist = Ivf.sqDist(v, centers(c))
         if (dist < bd) { bd = dist; best = c }
         c += 1
       }
@@ -156,8 +154,8 @@ object Pq {
     val scored = c.crossJoin(broadcast(qTables))
       .withColumn("adc", call_function("graft_pq_adc", col("codes"), col("tbl")))
       .select(col("query_id"), col("corpus_id"), col("adc"))
-    val candIds = graft.plans.GraftOps.groupedTopK(scored, Seq("query_id"), "adc",
-        "corpus_id", k * candMult)
+    val candIds = graft.plans.GraftOps.groupedTopK(scored, Seq("query_id"),
+        Seq(col("adc").desc, col("corpus_id")), k * candMult)
       .select("query_id", "corpus_id")
     val cRerank = Similarity.withQuantized(corpus, embCol)
       .select(col(idCol).as("corpus_id"), col("qvec").as("c_qvec"),

@@ -100,7 +100,8 @@ object Similarity {
     * attach vector payloads to `scored`.
     */
   def topKPerQuery(scored: DataFrame, orderCol: String, k: Int): DataFrame =
-    graft.plans.GraftOps.rankedTopK(scored, Seq("query_id"), orderCol, "corpus_id", k)
+    graft.plans.GraftOps.rankedTopK(scored, Seq("query_id"),
+      Seq(col(orderCol).desc, col("corpus_id")), k)
 
   /** Exact integer-grid re-rank of candidate (query_id, corpus_id,
     * c_qvec, c_qnorm) rows against the bounded query rows a probe has

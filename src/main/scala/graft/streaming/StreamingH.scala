@@ -175,7 +175,7 @@ object StreamingH extends Module {
     "st_topk",
     (s, d) =>
       graft.plans.GraftOps.rankedTopK(Streaming.userWindowCounts(Tables.events(s, d)),
-          Seq("window_start"), "n_events", "user_id", k = 3)
+          Seq("window_start"), Seq(col("n_events").desc, col("user_id")), k = 3)
         .select(col("window_start"), col("rank"), col("user_id"), col("n_events")),
     Some("""WITH c AS (
       |  SELECT date_trunc('hour', ts) AS window_start, user_id, COUNT(*) AS n_events
@@ -191,8 +191,9 @@ object StreamingH extends Module {
 
   // st_cdc — CDC log compaction: the current snapshot per key, latest
   // event wins, with (event-time, event_id) ordering the changelog. The
-  // batch twin is one row_number window over the HIGH-cardinality
-  // user_id partition — a single shuffle, parallelism scales with keys.
+  // batch twin is the grouped top-k (k = 1) on the HIGH-cardinality
+  // user_id — map-side heaps, a single shuffle, parallelism scales with
+  // keys.
   // The streaming twin ([[Streaming.cdcStream]]) holds exactly ONE row
   // of state per key (the winner so far) and re-emits the refreshed
   // snapshot row in Update mode each micro-batch the key appears in —
@@ -201,11 +202,9 @@ object StreamingH extends Module {
   private val stCdc = Q(
     "st_cdc",
     (s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts").desc, col("event_id").desc)
-      Tables.events(s, d)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      graft.plans.GraftOps.groupedTopK(
+          Tables.events(s, d).select("user_id", "ts", "event_id", "event_type", "value"),
+          Seq("user_id"), Seq(col("ts").desc, col("event_id").desc), k = 1)
         .select(col("user_id"), col("ts").as("last_ts"),
           col("event_id").as("last_event_id"),
           col("event_type").as("last_type"), col("value").as("last_value"))

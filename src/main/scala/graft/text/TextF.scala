@@ -591,8 +591,9 @@ object TextF extends Module {
   // diverge in the last ulp. Monotone in ln-idf for fixed tf, and the
   // hash-match is exact. Plan: explode → (doc, term) partial-agg tf →
   // term-keyed df agg → vocab-cardinality hash join (partial-aggregable
-  // everywhere) → per-doc top-3 via a row_number window partitioned on
-  // the HIGH-cardinality doc_id (parallelism scales with docs).
+  // everywhere) → per-doc top-3 via the ranked grouped top-k on the
+  // HIGH-cardinality doc_id (map-side heaps, parallelism scales with
+  // docs).
   private val txTfidf = Q(
     "tx_tfidf",
     (s, d) => {
@@ -603,15 +604,14 @@ object TextF extends Module {
       val tf = toks.groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
       val dfc = tf.groupBy("t").agg(count(lit(1)).as("df"))
       val n = docs.agg(count(lit(1)).as("n_docs"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("score").desc, col("t"))
-      tf.join(dfc, "t").crossJoin(broadcast(n))
-        .withColumn("score",
-          col("tf").cast("double") * (col("n_docs").cast("double") / col("df").cast("double")))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 3)
+      val scored = tf.join(dfc, "t").crossJoin(broadcast(n))
+        .select(col("doc_id"), col("t"), col("tf"), col("df"),
+          (col("tf").cast("double") * (col("n_docs").cast("double") / col("df").cast("double")))
+            .as("score"))
+      graft.plans.GraftOps.rankedTopK(scored, Seq("doc_id"),
+          Seq(col("score").desc, col("t")), k = 3)
         .select(col("doc_id"), col("t").as("term"), col("tf"), col("df"),
-          col("score"), col("rnk"))
+          col("score"), col("rank").as("rnk"))
     },
     Some("""WITH toks AS (
       |  SELECT doc_id, t FROM (
@@ -837,21 +837,20 @@ object TextF extends Module {
       val dfc = tf.groupBy("t").agg(count(lit(1)).as("df"))
       val n = docs.agg(count(lit(1)).as("n_docs"))
       val avg = toks.agg(count(lit(1)).as("n_toks"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("score").desc, col("t"))
       val tfd = col("tf").cast("double")
       val idf = (col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
         (col("df").cast("double") + lit(0.5))
       val avgdl = col("n_toks").cast("double") / col("n_docs").cast("double")
       val denom = tfd + lit(1.2) * (lit(1.0) - lit(0.75) +
         lit(0.75) * (col("dl").cast("double") / avgdl))
-      tf.join(dl, "doc_id").join(dfc, "t")
+      val scored = tf.join(dl, "doc_id").join(dfc, "t")
         .crossJoin(broadcast(n)).crossJoin(broadcast(avg))
-        .withColumn("score", idf * ((tfd * lit(2.2)) / denom))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 3)
+        .select(col("doc_id"), col("t"), col("tf"), col("df"), col("dl"),
+          (idf * ((tfd * lit(2.2)) / denom)).as("score"))
+      graft.plans.GraftOps.rankedTopK(scored, Seq("doc_id"),
+          Seq(col("score").desc, col("t")), k = 3)
         .select(col("doc_id"), col("t").as("term"), col("tf"), col("df"),
-          col("dl"), col("score"), col("rnk"))
+          col("dl"), col("score"), col("rank").as("rnk"))
     },
     Some("""WITH toks AS (
       |  SELECT doc_id, t FROM (

@@ -133,27 +133,48 @@ class PlanAuditSpec extends SparkSpec {
     assert(cube.contains("Expand"), cube)
   }
 
-  /** The grouped top-k shape: a PartialTopK sits below the only
-    * exchange hash-partitioned on exactly `key` (map-side heaps prune
-    * before it), exactly one Window remains (the rank over the ≤ k
-    * survivors, in that exchange's partitions), and nothing funnels
-    * through a single partition.
+  /** The grouped top-k shape: a PartialTopK (map-side heaps) under the
+    * only exchange hash-partitioned on exactly `key` outside the
+    * PartialTopK's own input, a FinalTopK right over that exchange,
+    * exactly `windows` Windows (1: the rank over the ≤ k survivors, in
+    * that exchange's partitions), no WindowGroupLimit, and nothing
+    * funnels through a single partition but the partial rows of
+    * `globalCounts` one-row aggregates.
     */
-  private def assertGroupedTopK(p: String, key: String): Unit = {
+  private def assertGroupedTopK(p: String, key: String, windows: Int = 1,
+      globalCounts: Int = 0): Unit = {
     val lines = p.linesIterator.toVector
     def depth(l: String): Int = l.indexWhere(ch => ch.isLetter)
-    val keyed = lines.indices.filter(i =>
-      s"Exchange hashpartitioning\\($key#\\d+L?, \\d+\\)".r.findFirstIn(lines(i)).isDefined)
-    assert(keyed.size === 1, s"expected one exchange on $key alone:\n$p")
-    val ex = keyed.head
-    val subtreeEnd = lines.indexWhere(l => depth(l) <= depth(lines(ex)), ex + 1) match {
+    val partial = lines.indexWhere(_.contains("PartialTopK"))
+    assert(partial > 0, s"no PartialTopK:\n$p")
+    val inputEnd = lines.indexWhere(l => depth(l) <= depth(lines(partial)), partial + 1) match {
       case -1 => lines.size
       case i => i
     }
-    assert((ex + 1 until subtreeEnd).exists(i => lines(i).contains("PartialTopK")),
-      s"no PartialTopK below the $key exchange:\n$p")
-    assert(lines.count(l => "(^|- )Window \\[".r.findFirstIn(l).isDefined) === 1, p)
-    assert(!p.contains("Exchange SinglePartition"), p)
+    val keyed = lines.indices.filter(i => (i <= partial || i >= inputEnd) &&
+      s"Exchange hashpartitioning\\($key#\\d+L?, \\d+\\)".r.findFirstIn(lines(i)).isDefined)
+    assert(keyed === Seq(partial - 1), s"expected one exchange on $key alone, over the PartialTopK:\n$p")
+    assert(lines(partial - 2).contains("FinalTopK"), s"no FinalTopK over the $key exchange:\n$p")
+    assert(lines.count(l => "(^|- )Window \\[".r.findFirstIn(l).isDefined) === windows, p)
+    assert(!p.contains("WindowGroupLimit"), p)
+    val single = lines.indices.filter(i => lines(i).contains("Exchange SinglePartition"))
+    assert(single.size === globalCounts && single.forall(i => lines(i + 1).contains("partial_")), p)
+  }
+
+  test("per-group top-k queries plan the operator, never a window limit") {
+    // k = 1 argmax/compaction and q41's exact-n tiebreak: no rank column,
+    // so no window at all
+    Seq("q34_argmax" -> "o_custkey", "st_cdc" -> "user_id",
+      "q41_stratified_sample" -> "c_mktsegment").foreach { case (q, key) =>
+      assertGroupedTopK(plan(q), key, windows = 0)
+    }
+    // per-doc top-3 terms with their rank; the document count (and
+    // bm25's token count) is a one-row global aggregate
+    assertGroupedTopK(plan("tx_tfidf"), "doc_id", globalCounts = 1)
+    assertGroupedTopK(plan("tx_bm25"), "doc_id", globalCounts = 2)
+    // a global top-1 is orderBy + limit: one bounded take, no window
+    val ks = plan("ml_ks_separation")
+    assert(ks.contains("TakeOrderedAndProject") && !ks.contains("Window"), ks)
   }
 
   test("st_topk prunes candidates before the per-window rank") {
@@ -285,7 +306,7 @@ class PlanAuditSpec extends SparkSpec {
       "q72_seasonal", "q87_cusum", "q110_seasonal_strength", "q118_peaks",
       "q124_rolling_corr", "q127_drawdown", "q129_growth_accounting",
       // bounded decile/threshold sweeps (≤ deciles or |thresholds| rows)
-      "q78_lorenz", "ml_lift", "ml_ks_separation", "ml_cost_threshold",
+      "q78_lorenz", "ml_lift", "ml_cost_threshold",
       // contingency-table / fixed-arm readouts (≤ categories² or 2 arms
       // or 9 leading digits — cardinality fixed by the schema, not data)
       "q67_chi2", "q81_chi2_residuals", "q84_cramers_v", "q85_benford",

@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.{FinalTopKExec, GraftOps, PartialTopKExec}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -11,23 +12,25 @@ import org.apache.spark.sql.expressions.Window
   */
 class PlansSpec extends SparkSpec {
 
-  private def windowTopK(k: Int) = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    Tables.orders(spark, sf)
-      .select("o_custkey", "o_orderkey", "o_totalprice")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .drop("rn")
-  }
+  private val priceOrder = Seq(col("o_totalprice").desc, col("o_orderkey"))
+
+  private def orders(s: org.apache.spark.sql.SparkSession = spark) =
+    Tables.orders(s, sf).select("o_custkey", "o_orderkey", "o_totalprice")
+
+  /** The reference: `row_number() over (partition by groupCols order by
+    * order) <= k`, rank column dropped.
+    */
+  private def windowRef(df: DataFrame, groupCols: Seq[String], order: Seq[Column],
+      k: Int): DataFrame =
+    df.withColumn("rn", row_number().over(
+        Window.partitionBy(groupCols.map(col): _*).orderBy(order: _*)))
+      .filter(col("rn") <= k).drop("rn")
 
   test("groupedTopK reproduces the row_number window exactly") {
     for (k <- Seq(1, 3, 100)) { // 100 > any group size ⇒ identity
-      val fast = GraftOps.groupedTopK(
-        Tables.orders(spark, sf).select("o_custkey", "o_orderkey", "o_totalprice"),
-        Seq("o_custkey"), "o_totalprice", "o_orderkey", k)
+      val fast = GraftOps.groupedTopK(orders(), Seq("o_custkey"), priceOrder, k)
         .collect().map(_.toSeq).toSet
-      val slow = windowTopK(k).collect().map(_.toSeq).toSet
+      val slow = windowRef(orders(), Seq("o_custkey"), priceOrder, k).collect().map(_.toSeq).toSet
       assert(fast === slow, s"mismatch at k=$k")
     }
   }
@@ -36,28 +39,21 @@ class PlansSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, 10L, 5.0), (1L, 11L, 5.0), (1L, 12L, 5.0), (1L, 13L, 7.0))
       .toDF("g", "id", "v")
-    val kept = GraftOps.groupedTopK(df, Seq("g"), "v", "id", k = 2)
+    val kept = GraftOps.groupedTopK(df, Seq("g"), Seq(col("v").desc, col("id")), k = 2)
       .collect().map(r => r.getLong(1)).toSet
     assert(kept === Set(13L, 10L), s"expected {13 (7.0), 10 (first tie at 5.0)}, got $kept")
   }
 
-  /** The reference: `row_number() over (partition by g order by score
-    * [desc|asc], tie) <= k`, rank column dropped.
+  /** Rows as sorted strings: a multiset compare in which NULL and NaN
+    * equal themselves.
     */
-  private def windowRef(df: org.apache.spark.sql.DataFrame, score: String, tie: String,
-      k: Int, ascending: Boolean = false) = {
-    val o = if (ascending) col(score).asc else col(score).desc
-    df.withColumn("rn", row_number().over(Window.partitionBy(col("g")).orderBy(o, col(tie))))
-      .filter(col("rn") <= k).drop("rn")
-  }
+  private def rowStrings(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
 
-  private def assertMatchesWindow(df: org.apache.spark.sql.DataFrame, score: String,
-      tie: String, k: Int, ascending: Boolean = false): Unit = {
-    val fast = GraftOps.groupedTopK(df, Seq("g"), score, tie, k, ascending)
-      .collect().map(_.toSeq).toSet
-    val slow = windowRef(df, score, tie, k, ascending).collect().map(_.toSeq).toSet
-    assert(fast === slow, s"k=$k ascending=$ascending")
-  }
+  private def assertMatchesWindow(df: DataFrame, order: Seq[Column], k: Int,
+      groupCols: Seq[String] = Seq("g")): Unit =
+    assert(rowStrings(GraftOps.groupedTopK(df, groupCols, order, k)) ===
+      rowStrings(windowRef(df, groupCols, order, k)), s"k=$k order=$order")
 
   test("groupedTopK orders BIGINT scores above 2^53 exactly") {
     import spark.implicits._
@@ -66,8 +62,9 @@ class PlansSpec extends SparkSpec {
     val big = 1L << 53
     val df = Seq((1L, 1L, big), (1L, 2L, big + 1), (2L, 3L, Long.MaxValue - 1),
       (2L, 4L, Long.MaxValue)).toDF("g", "id", "v").repartition(2)
-    assertMatchesWindow(df, "v", "id", 1)
-    assert(GraftOps.groupedTopK(df, Seq("g"), "v", "id", 1)
+    val order = Seq(col("v").desc, col("id"))
+    assertMatchesWindow(df, order, 1)
+    assert(GraftOps.groupedTopK(df, Seq("g"), order, 1)
       .collect().map(_.getLong(1)).toSet === Set(2L, 4L))
   }
 
@@ -77,8 +74,9 @@ class PlansSpec extends SparkSpec {
     val df = Seq((1L, 1L, "1.000000000000000000"), (1L, 2L, "1.000000000000000001"),
       (1L, 3L, "0.999999999999999999"))
       .toDF("g", "id", "s").select(col("g"), col("id"), col("s").cast("decimal(38,18)").as("v"))
-    for (k <- Seq(1, 2)) assertMatchesWindow(df, "v", "id", k)
-    assert(GraftOps.groupedTopK(df, Seq("g"), "v", "id", 1)
+    val order = Seq(col("v").desc, col("id"))
+    for (k <- Seq(1, 2)) assertMatchesWindow(df, order, k)
+    assert(GraftOps.groupedTopK(df, Seq("g"), order, 1)
       .collect().map(_.getLong(1)).toSeq === Seq(2L))
   }
 
@@ -86,8 +84,9 @@ class PlansSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, "pear", 5.0), (1L, "apple", 5.0), (1L, "fig", 5.0), (2L, "b", 1.0),
       (2L, "a", 1.0)).toDF("g", "name", "v").repartition(3)
-    for (k <- Seq(1, 2)) assertMatchesWindow(df, "v", "name", k)
-    assert(GraftOps.groupedTopK(df, Seq("g"), "v", "name", 1)
+    val order = Seq(col("v").desc, col("name"))
+    for (k <- Seq(1, 2)) assertMatchesWindow(df, order, k)
+    assert(GraftOps.groupedTopK(df, Seq("g"), order, 1)
       .collect().map(_.getString(1)).toSet === Set("apple", "a"))
   }
 
@@ -95,15 +94,43 @@ class PlansSpec extends SparkSpec {
     import spark.implicits._
     val df = (0L until 200L).map(i => (i % 3, i, ((i * 37) % 11).toDouble))
       .toDF("g", "id", "v").repartition(4)
-    for (k <- Seq(1, 3, 500)) assertMatchesWindow(df, "v", "id", k, ascending = true)
+    for (k <- Seq(1, 3, 500)) assertMatchesWindow(df, Seq(col("v"), col("id")), k)
+  }
+
+  test("groupedTopK keeps the latest rows under a two-column descending order") {
+    import spark.implicits._
+    // st_cdc's shape: (ts desc, event_id desc), with ts tie runs so the
+    // second key decides
+    val df = (0L until 300L).map(i => (i % 4, (i * 7) % 13, i))
+      .toDF("g", "ts", "event_id").repartition(3)
+    for (k <- Seq(1, 3, 200))
+      assertMatchesWindow(df, Seq(col("ts").desc, col("event_id").desc), k)
+  }
+
+  test("groupedTopK places NULL and NaN scores as the window does, ascending") {
+    import spark.implicits._
+    val v = Seq(Some(Double.NaN), None, Some(1.0), Some(-0.5), None, Some(Double.NaN),
+      Some(1.0), Some(2.0))
+    val df = (0L until 64L).map(i => (i % 3, i, v((i % v.size).toInt)))
+      .toDF("g", "id", "v").repartition(4)
+    for (k <- Seq(1, 3, 100); o <- Seq(col("v").asc, col("v").asc_nulls_last))
+      assertMatchesWindow(df, Seq(o, col("id")), k)
+  }
+
+  test("groupedTopK with no group columns is one global top-k") {
+    import spark.implicits._
+    val df = (0L until 50L).map(i => (i, ((i * 37) % 11).toDouble))
+      .toDF("id", "v").repartition(4)
+    for (k <- Seq(1, 3, 100))
+      assertMatchesWindow(df, Seq(col("v").desc, col("id")), k, groupCols = Nil)
   }
 
   test("the plan is the partial/final pair with the exchange between them") {
-    val df = GraftOps.groupedTopK(
-      Tables.orders(spark, sf).select("o_custkey", "o_orderkey", "o_totalprice"),
-      Seq("o_custkey"), "o_totalprice", "o_orderkey", 3)
-    val p = df.queryExecution.executedPlan
-    val s = p.toString
+    assertPartialFinalPair(GraftOps.groupedTopK(orders(), Seq("o_custkey"), priceOrder, 3))
+  }
+
+  private def assertPartialFinalPair(df: DataFrame): Unit = {
+    val s = df.queryExecution.executedPlan.toString
     assert(s.contains("FinalTopK"), s)
     assert(s.contains("PartialTopK"), s)
     // partial must sit BELOW the exchange (map side): in the printed tree
@@ -116,8 +143,10 @@ class PlansSpec extends SparkSpec {
       "exchange must move the partial's bounded rows, not the input:\n" + s)
   }
 
-  test("TopKPushdown rewrites the window idiom onto the operator; rank() is untouched") {
+  test("GraftExtensions installs graft's functions and the top-k strategy, and no optimizer rule") {
     import org.apache.spark.sql.SparkSession
+    def rules(s: SparkSession) =
+      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental.extraOptimizations
     val orig = spark
     // an extensions-enabled session over the SAME SparkContext: clear the
     // default so the builder constructs a fresh session with
@@ -131,41 +160,15 @@ class PlansSpec extends SparkSpec {
       .withExtensions(new graft.functions.GraftExtensions())
       .getOrCreate()
     try {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      def idiom(s: org.apache.spark.sql.SparkSession) =
-        Tables.orders(s, sf).select("o_custkey", "o_orderkey", "o_totalprice")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-      val rewritten = idiom(s2)
-      val p = rewritten.queryExecution.executedPlan.toString
-      assert(p.contains("PartialTopK"),
-        "optimizer rule did not fire on the row_number idiom:\n" + p)
-      assert(p.contains("Window"), "the window must stay to recompute rn:\n" + p)
-      // bit-identical to the un-rewritten plan, INCLUDING the rn column;
-      // `plain` has neither graft's strategy nor its rule (the shared
-      // session is registered, so it rewrites too)
-      val plain = orig.newSession()
-      val expected = idiom(plain).collect().map(_.toSeq).toSet
-      assert(idiom(plain).queryExecution.executedPlan.toString.indexOf("PartialTopK") < 0)
-      assert(rewritten.collect().map(_.toSeq).toSet === expected)
-      // rank() admits >k ties — the rule must NOT touch it
-      val ranked = Tables.orders(s2, sf)
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-        .withColumn("rn", rank().over(w)).filter(col("rn") <= 3)
-      assert(!ranked.queryExecution.executedPlan.toString.contains("PartialTopK"))
-      // the bound hides in a NESTED And after predicate merging — the
-      // rule must split conjuncts recursively, not one level deep
-      def nested(s: org.apache.spark.sql.SparkSession) =
-        Tables.orders(s, sf).select("o_custkey", "o_orderkey", "o_totalprice")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3 && col("o_totalprice") > 0.0 &&
-            col("o_orderkey") >= 0L)
-      val nestedPlan = nested(s2).queryExecution.executedPlan.toString
-      assert(nestedPlan.contains("PartialTopK"),
-        "rule must find rn <= k inside nested Ands:\n" + nestedPlan)
-      assert(nested(s2).collect().map(_.toSeq).toSet ===
-        nested(plain).collect().map(_.toSeq).toSet)
+      assert(s2 ne orig)
+      assert(s2.sql("SELECT graft_dot_long(array(1L, 2L, 3L), array(4L, 5L, 6L))")
+        .head().getLong(0) === 32L)
+      val fast = GraftOps.groupedTopK(orders(s2), Seq("o_custkey"), priceOrder, 3)
+      assertPartialFinalPair(fast)
+      assert(rowStrings(fast) === rowStrings(windowRef(orders(s2), Seq("o_custkey"), priceOrder, 3)))
+      graft.functions.GraftFunctions.register(s2)
+      assert(rules(s2).isEmpty)
+      assert(rules(orig).isEmpty)
     } finally {
       SparkSession.setDefaultSession(orig)
       SparkSession.setActiveSession(orig)
@@ -178,7 +181,7 @@ class PlansSpec extends SparkSpec {
     // rows per partition, so the final's input stays tiny
     val df = (0L until 10000L).map(i => (1L, i, (i % 97).toDouble))
       .toDF("g", "id", "v").repartition(8)
-    val out = GraftOps.groupedTopK(df, Seq("g"), "v", "id", k = 5)
+    val out = GraftOps.groupedTopK(df, Seq("g"), Seq(col("v").desc, col("id")), k = 5)
       .collect().map(r => (r.getLong(1), r.getDouble(2)))
     assert(out.length === 5)
     // top values are the five ids with v == 96 and smallest ids

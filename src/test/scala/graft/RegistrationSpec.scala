@@ -26,24 +26,12 @@ class RegistrationSpec extends SparkSpec {
     assert(driver.catalog.functionExists("graft_dot_long"))
   }
 
-  test("a registered session rewrites the row_number top-k idiom onto the operator") {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val plain = spark.newSession() // neither graft's strategy nor its rule
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    def idiom(s: org.apache.spark.sql.SparkSession, rank: org.apache.spark.sql.Column) =
-      Tables.orders(s, sf).withColumn("rn", rank.over(w)).filter(col("rn") === 1)
-        .select(col("o_custkey"), col("o_orderkey").as("top_orderkey"),
-          col("o_totalprice").as("top_price"))
-    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
+  test("a driver-built session runs the grouped top-k queries at the query boundary") {
+    // GroupedTopK has no plan without graft's strategy: these answer only
+    // because the boundary installed it on `driver`
     val driver = spark.newSession()
-    val q34 = SparkEntry.queries("q34_argmax")(driver, sf) // registers `driver`
-    assert(plan(q34).contains("PartialTopK"), plan(q34))
-    assert(!plan(idiom(plain, row_number())).contains("PartialTopK"))
-    assert(q34.collect().map(_.toString).sorted.toSeq ===
-      idiom(plain, row_number()).collect().map(_.toString).sorted.toSeq)
-    // rank() keeps ties past k: left alone
-    assert(!plan(idiom(driver, rank())).contains("PartialTopK"))
+    Seq("q34_argmax", "st_cdc", "tx_tfidf").foreach { name =>
+      assert(rows(driver, name) === rows(spark, name), name)
+    }
   }
 }
